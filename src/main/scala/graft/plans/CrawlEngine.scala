@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.html.htmlfns._
 import graft.plans.planfns._
-import graft.sketch.BloomSketch
+import graft.sketch.{BloomSketch, CuckooSketch, SeenSketch, UrlSketch}
 import graft.snapshot.{BucketedPages, SnapshotStore}
 import graft.snapshot.SnapshotStore.Snapshot
 import graft.url.urlfns._
@@ -37,23 +37,21 @@ import graft.url.urlfns._
   *                        maintained with per-epoch deltas — so it always
   *                        covers every visited URL (no-false-negative
   *                        invariant).
-  * @param bloomExpectedTotal broadcast-bloom design capacity; a crawl that
+  * @param bloomExpectedTotal seen-sketch design capacity; a bloom crawl that
   *                        outgrows it triggers an automatic rebuild from the
   *                        full seen set at 2× the running estimate (FPP is
   *                        restored; correctness never depended on it — the
-  *                        anti-join is authoritative)
-  * @param bloomShards     url-hash buckets for the sharded file-backed sketch
-  * @param bloomFileProbe  Some(true) forces the sharded shard-file probe
-  *                        (the 10^10-scale path: no monolithic broadcast),
-  *                        Some(false) forces the broadcast probe, None = auto
-  *                        by sketch size vs bloomBroadcastMaxBytes
+  *                        exact seen check is authoritative). A sketch whose
+  *                        table would exceed 256 MiB (the broadcast cap) is
+  *                        never built, or is dropped at that resize: every
+  *                        candidate then takes the exact store probe, which
+  *                        is already bucket-local at any scale
   * @param sketchKind      "bloom" (default) or "cuckoo" — the north_star's
   *                        cuckoo-filter fallback for the URL-seen set
   *                        ([[graft.sketch.SeenSketch]]: deletable membership;
   *                        saturation degrades to always-maybe, never a false
-  *                        negative). Cuckoo is broadcast-only — the shard-file
-  *                        store is bloom-format — so it forces the broadcast
-  *                        probe regardless of bloomFileProbe.
+  *                        negative). Both are broadcast
+  *                        [[graft.sketch.UrlSketch]]es behind one probe.
   * @param seenDedup       "bucketlocal" (default): the authoritative
   *                        candidates−seen check runs against the
   *                        [[graft.sketch.SeenUrlStore]] sorted shard files —
@@ -101,15 +99,12 @@ final case class CrawlConfig(
     bloomFpp: Double = 0.01,
     bloomMinSeen: Long = 100000L,
     bloomExpectedTotal: Long = 10000000L,
-    bloomShards: Int = 32,
-    bloomFileProbe: Option[Boolean] = None,
     sketchKind: String = "bloom",
     seenDedup: String = "bucketlocal",
     seenStoreBuckets: Int = 0,
     seenCompactEvery: Int = 64,
     linksCompactFactor: Double = 3.0,
     linksCompactMinRows: Long = 1000000L,
-    bloomBroadcastMaxBytes: Long = 256L << 20,
     broadcastFetchMax: Long = 100000L,
     robotsBroadcastMax: Long = 100000L,
     depthPriority: Boolean = false,
@@ -162,6 +157,9 @@ final case class CrawlResult(
 }
 
 object CrawlEngine {
+  /** Broadcast cap for the seen sketch: a larger one is never built. */
+  private val SketchMaxBytes = 256L << 20
+
   /** Python-str `<` = Unicode code-point order (crawler.py:94's sort). Spark
     * string sorts are already code-point order (UTF8_BINARY = UTF-8 byte
     * order — verified incl. astral plane), but Java's String ordering is
@@ -296,9 +294,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     (fetchNow, defer, Seq(r1, r2))
   }
 
-  /** candidates − seen, with the O-7b bloom fast path: `probe` adds a
-    * `maybe_seen` flag (broadcast-sketch expression or sharded shard-file
-    * lookup); !maybe_seen rows skip the authoritative check entirely.
+  /** candidates − seen, with the O-7b sketch fast path: `probe` adds a
+    * `maybe_seen` flag (the broadcast-sketch expression); !maybe_seen rows
+    * skip the authoritative check entirely.
     * `exactSeen` is the AUTHORITATIVE filter (rows NOT in the seen set):
     * either the bucket-local sorted-shard lookup (seenDedup=bucketlocal — no
     * O(seen) exchange) or the plain `left_anti` join (seenDedup=anti).
@@ -457,14 +455,15 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           // with the resume epoch so every later probe (upToEpoch ≥ s.epoch)
           // sees all of it.
           def syncStore(st: graft.sketch.SeenUrlStore, table: String): Unit = {
-            if (s.tables(table).totalRows > 0 && !st.validFor(hconf, s.epoch)) {
+            if (!st.validFor(hconf, s.epoch)) {
               st.clear(hconf)
-              st.writeDelta(store.readTable(s, table).select("url"), s.epoch)
+              if (s.tables(table).totalRows > 0)
+                st.writeDelta(store.readTable(s, table).select("url"), s.epoch)
             }
-            // bases compacted by a LATER, now-truncated timeline would hide
-            // the re-run's own deltas once it reaches the base's epoch —
-            // bases are derived state, drop the stale ones
-            st.dropBasesAbove(hconf, s.epoch)
+            // shard files of LATER, now-truncated epochs belong to no
+            // committed snapshot: a stale base hides the re-run's deltas, a
+            // stale delta marks urls this timeline never fetched as seen
+            st.dropAbove(hconf, s.epoch)
           }
           syncStore(seenStore, "visited")
           syncStore(suppressedStore, "suppressed")
@@ -474,6 +473,13 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           .map(u => (u, graft.robots.Robots.hostKey(u), 0L))
           .toDF("url", "host", "priority")
         val suppressedSeed = blockedSeeds.toDF("url")
+        // no snapshot ⇒ any store left in the warehouse belongs to an older
+        // crawl (maybe under another bucket count): start both empty
+        if (useSeenStore) {
+          val hconf = spark.sparkContext.hadoopConfiguration
+          seenStore.clear(hconf)
+          suppressedStore.clear(hconf)
+        }
         // epoch "-1" bootstrap snapshot: seed frontier, empty state. The
         // four tiny writes are independent — run them concurrently so the
         // bootstrap pays one job latency, not four (guide §2.6)
@@ -515,68 +521,34 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     // Incrementally-maintained seen sketch (O-7b). Activation is LAZY: the
     // first epoch where the seen estimate crosses bloomMinSeen, the sketch is
     // built from the FULL visited-so-far ∪ this epoch's fetch (also the
-    // resume path — file shards are re-merged idempotently); every later
-    // epoch folds in only the fetch delta. Invariant: whenever the probe is
-    // active, the sketch covers every URL in the authoritative seen set — no
-    // false negatives, so the dedup split is exact.
-    //
-    // Two physical forms:
-    //  - broadcast: one in-memory sketch, per-partition build + treeAggregate
-    //    merge of the delta (north_star path), rebroadcast + destroyed per
-    //    epoch. Right up to ~bloomBroadcastMaxBytes.
-    //  - sharded files (the 10^10 path): url-hash-bucketed shard files built
-    //    and probed executor-side (BloomShardStore) — the full sketch never
-    //    exists in one JVM and probes touch only each task's buckets.
+    // resume path); every later epoch folds in only the fetch delta.
+    // Invariant: whenever the probe is active, the sketch covers every URL in
+    // the authoritative seen set — no false negatives, so the dedup split is
+    // exact. One in-memory sketch (bloom, or the cuckoo fallback): built by
+    // per-partition treeAggregate merges (north_star path), rebroadcast and
+    // destroyed per epoch. A sketch above SketchMaxBytes is never built — the
+    // bucket-local exact store then takes every candidate on its own.
     require(config.sketchKind == "bloom" || config.sketchKind == "cuckoo",
       s"unknown sketchKind '${config.sketchKind}' (bloom|cuckoo)")
     val useCuckoo = config.sketchKind == "cuckoo"
-    val (sketchBits, sketchHashes) =
-      BloomSketch.sizing(config.bloomExpectedTotal, config.bloomFpp)
-    val fileProbe = !useCuckoo && config.bloomFileProbe
-      .getOrElse(sketchBits / 8 > config.bloomBroadcastMaxBytes)
+    def sketchFits(capacity: Long): Boolean = CrawlEngine.SketchMaxBytes >=
+      (if (useCuckoo) CuckooSketch.bytesFor(capacity)
+      else BloomSketch.sizing(capacity, config.bloomFpp)._1 / 8)
     val nShuffle = spark.sessionState.conf.numShufflePartitions
-    val shardStore =
-      if (fileProbe) {
-        // keep shards ≤ ~16 MiB regardless of scale (10^10 urls ⇒ ~2^10
-        // buckets of ~12 MB — BASELINE.md's accounting): a probe task loads
-        // one shard, so shard size bounds per-task memory, not total size.
-        // When that cap allows it, use the session's shuffle-partition count
-        // instead: the sketch's bucket function is Spark's HashPartitioning
-        // id (same as the seen store's), so matching counts give the sketch
-        // probe — and the exact probe behind it — ZERO exchanges on the
-        // already-hash-partitioned candidate frame.
-        val desired = math.max(config.bloomShards,
-          ((sketchBits / 8) / (16L << 20) + 1).toInt)
-        val shards = if (desired <= nShuffle) nShuffle else desired
-        new graft.sketch.BloomShardStore(s"$warehouse/sketch", shards,
-          ((sketchBits / shards + 63) >> 6) << 6, sketchHashes)
-      } else null
-    var seenSketch: BloomSketch = null
-    var seenCuckoo: graft.sketch.SeenSketch = null
-    var sketchActive = false
-    // broadcast-bloom capacity — grows by rebuild when the crawl outgrows
-    // the configured expectation (see the resize branch below)
+    var seenSketch: UrlSketch = null // null ⇔ inactive
+    // sketch capacity — grows by rebuild when a bloom crawl outgrows the
+    // configured expectation (see the resize branch below)
     var sketchCapacity = config.bloomExpectedTotal
     def mergeIntoSketch(urls: DataFrame): Unit = {
       // few, larger leaf tasks: every treeAggregate leaf ships one
       // full-size sketch, so bound the leaf count rather than the row count
-      def deltaRdd = {
-        val rdd0 = urls.select("url").as[String].rdd
-        if (rdd0.getNumPartitions > 8) rdd0.coalesce(8) else rdd0
-      }
-      if (fileProbe) shardStore.mergeDelta(urls.select("url"))
-      else if (useCuckoo) {
-        if (seenCuckoo == null)
-          seenCuckoo = new graft.sketch.SeenSketch(config.bloomExpectedTotal)
-        // a saturating merge degrades the sketch to always-maybe (every row
-        // then takes the authoritative anti-join) — never a false negative
-        seenCuckoo.merge(
-          graft.sketch.SeenSketch.build(deltaRdd, config.bloomExpectedTotal))
-      } else {
-        if (seenSketch == null)
-          seenSketch = BloomSketch.forExpected(sketchCapacity, config.bloomFpp)
-        seenSketch.merge(BloomSketch.build(deltaRdd, sketchCapacity, config.bloomFpp))
-      }
+      val rdd0 = urls.select("url").as[String].rdd
+      if (seenSketch == null) seenSketch =
+        if (useCuckoo) new SeenSketch(sketchCapacity)
+        else BloomSketch.forExpected(sketchCapacity, config.bloomFpp)
+      // a saturating cuckoo merge degrades the sketch to always-maybe (every
+      // row then takes the authoritative check) — never a false negative
+      seenSketch.addAll(if (rdd0.getNumPartitions > 8) rdd0.coalesce(8) else rdd0)
     }
 
     // plan-evidence hook (optimization rounds): when `graft.explain.dir` is
@@ -715,20 +687,21 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // against the suppressed store (upToEpoch = e−1), not a left_anti over
       // the CUMULATIVE suppressed set — the probe cost tracks this epoch's
       // disallowed rows, not the crawl's age. `gated` preserves the
-      // cleanLinks-distinct url hash partitioning when robots was broadcast,
-      // so the probe skips its exchange too. No distinct is needed on the
-      // store path: cleanLinks is distinct and the gates only filter, so
-      // urls are unique by construction (the anti path keeps the reference
-      // left_anti + distinct shape for the differential).
-      val gatedAligned = robotsCount <= config.robotsBroadcastMax
+      // cleanLinks-distinct url hash partitioning unless the robots join was
+      // shuffled (by host), so the probe skips its exchange too. No distinct
+      // is needed on the store path: cleanLinks is distinct and the gates
+      // only filter, so urls are unique by construction (the anti path keeps
+      // the reference left_anti + distinct shape for the differential).
+      // Alignment is a perf hint only; every probe is exact under any
+      // distribution.
+      val gatedUrlPartitioned = !hasRobots || robotsCount <= config.robotsBroadcastMax
       val sStateF =
         if (hasRobots) Future {
           val disallowed = gated.filter(!col("allowed")).select("url")
           if (useSeenStore) {
             val newSuppressed = suppressedStore
               .filterUnseen(disallowed, "url", epoch - 1,
-                assumeDistributed =
-                  gatedAligned && suppressedStore.numBuckets == nShuffle)
+                assumeDistributed = gatedUrlPartitioned && storeBuckets == nShuffle)
               .persist(StorageLevel.MEMORY_AND_DISK)
             // the parquet delta and the shard-index delta are independent
             // consumers of the (O(delta)) cached frame — write them
@@ -778,6 +751,12 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           .agg(min(col("priority")).as("priority")))
         .select(col("url"), host_key(col("url")).as("host"), col("priority"))
         .persist(StorageLevel.MEMORY_AND_DISK)
+      // candidates leave a url exchange of nShuffle partitions — the
+      // groupBy's, or the links distinct's kept through `gated` — so both
+      // store probes downstream (seen, then suppressed) may skip their own
+      // exchange when the store bucket count matches
+      val candidatesAligned =
+        (gateCaches.nonEmpty || gatedUrlPartitioned) && storeBuckets == nShuffle
       // BASELINE.json metric numerator (URLs scheduled + entering dedup).
       // Counting FIRST materializes the candidates cache, so the fixpoint
       // epoch (0 candidates) skips the sketch merge, anti-join, and probe
@@ -789,57 +768,41 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         .union(fetchNow.select("url"))
       val seenCountNow = visitedRows + frontierCount // upper bound estimate
       // the sketch merge's whole decision tree depends only on pre-epoch
-      // state (seen estimate, activation flags) — never on the candidate
+      // state (seen estimate, the sketch itself) — never on the candidate
       // count — so it runs on its own action thread OVERLAPPED with the
       // candidates compute+count below, instead of serializing a
-      // treeAggregate/shard merge of the epoch's fetch between the count
+      // treeAggregate merge of the epoch's fetch between the count
       // and the frontier write. (The fixpoint epoch now pays one final
       // small merge the old count-gated form skipped; bloom adds are
       // idempotent and every non-final epoch stops paying the merge's
       // wall-clock.) The vars it mutates are read only after the Await.
       val sketchMergeF: Future[Unit] = Future {
-        if (sketchActive && !fileProbe && !useCuckoo && seenCountNow > sketchCapacity) {
+        if (seenSketch != null && !useCuckoo && seenCountNow > sketchCapacity) {
           // outgrown: a bloom at >1× its design load answers maybe for nearly
-          // everything (correct — the anti-join is authoritative — but it
+          // everything (correct — the exact check is authoritative — but it
           // stops pruning). Rebuild from the FULL seen set at 2× the current
-          // estimate, restoring the configured FPP. The sharded file sketch
-          // has fixed geometry (the 10^10 path is pre-sized per BASELINE.md)
-          // and cuckoo has its own degrade-to-maybe story.
+          // estimate, restoring the configured FPP — or, past the broadcast
+          // cap, drop it for good (the exact store probe takes every row).
+          // Cuckoo has its own degrade-to-maybe story.
           sketchCapacity = math.max(seenCountNow * 2, sketchCapacity * 2)
           seenSketch = null
-          mergeIntoSketch(visitedAll)
-        } else if (sketchActive) mergeIntoSketch(fetchNow) // maintain full coverage
-        else if (seenCountNow >= config.bloomMinSeen) {
+          if (sketchFits(sketchCapacity)) mergeIntoSketch(visitedAll)
+        } else if (seenSketch != null) mergeIntoSketch(fetchNow) // maintain full coverage
+        else if (seenCountNow >= config.bloomMinSeen && sketchFits(sketchCapacity))
           mergeIntoSketch(visitedAll) // first activation: cover ALL seen urls
-          sketchActive = true
-        }
       }
       val candidatesIn = candidates.count()
       lap("candidates_count")
       Await.result(sketchMergeF, scala.concurrent.duration.Duration.Inf)
       lap("sketch_merge_wait")
-      val bloomBcast =
-        if (candidatesIn > 0 && sketchActive && !fileProbe && !useCuckoo)
-          spark.sparkContext.broadcast(seenSketch)
+      val sketchBcast =
+        if (candidatesIn > 0 && seenSketch != null)
+          spark.sparkContext.broadcast[UrlSketch](seenSketch)
         else null
-      val cuckooBcast =
-        if (candidatesIn > 0 && sketchActive && useCuckoo)
-          spark.sparkContext.broadcast(seenCuckoo)
-        else null
-      val probe: Option[DataFrame => DataFrame] =
-        if (!sketchActive) None
-        else if (fileProbe)
-          // aligned (shard count == the candidate exchange's partition
-          // count, same HashPartitioning bucket function): the sketch probe
-          // consumes the candidates' own exchange and PRESERVES it for the
-          // exact probe behind it — the 10^10 configuration keeps the
-          // zero-exchange chain. Misaligned counts pay one routing exchange;
-          // correctness never depends on it.
-          Some(df => shardStore.probe(df, "url",
-            assumeDistributed = shardStore.numBuckets == nShuffle))
-        else if (useCuckoo)
-          Some(df => df.withColumn("maybe_seen", cuckoo_might_contain(cuckooBcast, col("url"))))
-        else Some(df => df.withColumn("maybe_seen", bloom_might_contain(bloomBcast, col("url"))))
+      // the broadcast flag is a narrow projection: the split keeps the
+      // candidates' partitioning for the exact probe behind it
+      val probe: Option[DataFrame => DataFrame] = Option(sketchBcast).map(b =>
+        df => df.withColumn("maybe_seen", might_contain(b, col("url"))))
       // the authoritative candidates−seen filter: bucket-local sorted-shard
       // lookup by default (no O(seen) exchange — the store's delta for THIS
       // epoch covers fetchNow, so probing up to `epoch` equals the
@@ -849,15 +812,8 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           // the shard files for this epoch are written by seenStoreF — they
           // must be on disk before the probe job launches
           Await.result(seenStoreF, scala.concurrent.duration.Duration.Inf)
-          // candidates flow out of the groupBy/distinct url exchange, the
-          // broadcast sketch probe is narrow, and the file-probe preserves
-          // the partitioning when ITS shard count matches — so when the
-          // store's bucket count matches the exchange's partitioning the
-          // probe needs NO exchange of its own. Alignment is a perf hint
-          // only; the probe is correct under any distribution.
-          val aligned = seenStore.numBuckets == nShuffle &&
-            (!fileProbe || shardStore.numBuckets == nShuffle)
-          seenStore.filterUnseen(df, "url", epoch, assumeDistributed = aligned)
+          seenStore.filterUnseen(df, "url", epoch,
+            assumeDistributed = candidatesAligned)
         } else { df =>
           df.join(visitedAll.select("url"), Seq("url"), "left_anti")
         }
@@ -874,15 +830,13 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           if (sState.totalRows > 0) {
             if (useSeenStore)
               // bucket-local subtraction of suppressed(≤ e) — the store's
-              // delta for THIS epoch is on disk (sStateF awaited above). The
-              // frame reaching here is always bucket-pure per partition
-              // (either it kept the candidates' url hash partitioning, or a
-              // store/sketch probe routed it by the same bucket function),
-              // so the probe never needs its own exchange — this replaces
-              // the left_anti that re-shuffled the CUMULATIVE suppressed set
-              // every robots epoch.
+              // delta for THIS epoch is on disk (sStateF awaited above). An
+              // aligned seen probe kept the candidates' partitioning, so this
+              // probe needs no exchange either — this replaces the left_anti
+              // that re-shuffled the CUMULATIVE suppressed set every robots
+              // epoch.
               suppressedStore.filterUnseen(deduped, "url", epoch,
-                assumeDistributed = true)
+                assumeDistributed = candidatesAligned)
             else deduped.join(spark.read.parquet(sState.files: _*).select("url"),
               Seq("url"), "left_anti")
           } else deduped
@@ -923,8 +877,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // the per-epoch sketch broadcast is consumed only by the frontier
       // write above — release it so long crawls don't accumulate broadcast
       // state on the driver/executors
-      if (bloomBcast != null) bloomBcast.destroy()
-      if (cuckooBcast != null) cuckooBcast.destroy()
+      if (sketchBcast != null) sketchBcast.destroy()
 
       // extraction accumulator is final here: both cleanLinks consumers
       // (links write + frontier chain) are awaited above, so every cached
@@ -945,7 +898,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           "new_suppressed" -> sState.deltaRows,
           "candidates_in" -> candidatesIn,
           "next_frontier" -> fState.deltaRows,
-          "sketch_capacity" -> (if (sketchActive) sketchCapacity else 0L),
+          "sketch_capacity" -> (if (seenSketch != null) sketchCapacity else 0L),
           "seen_bucketlocal" -> (if (useSeenStore) 1L else 0L),
           "links_base_rows" -> linksBaseRows,
           "links_compacted" -> (if (doCompact) 1L else 0L),

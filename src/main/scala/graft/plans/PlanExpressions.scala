@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType,
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.robots.Robots
-import graft.sketch.BloomSketch
+import graft.sketch.UrlSketch
 
 /** Codegen-callable helpers for the crawl-plan expressions. */
 object PlanOps {
@@ -93,44 +93,24 @@ case class CrawlDelayBudget(child: Expression, windowSec: Double)
     copy(child = c)
 }
 
-/** Bloom-sketch membership probe against a broadcast seen-set sketch —
-  * the O-7b fast path. `false` ⇒ definitely unseen (no false negatives).
+/** Seen-sketch membership probe against a broadcast [[graft.sketch.UrlSketch]]
+  * (bloom or its cuckoo fallback) — the O-7b fast path. `false` ⇒ definitely
+  * unseen (no false negatives); a degraded cuckoo answers `true` for every
+  * row, which only routes rows to the authoritative seen check.
   */
-case class BloomMightContain(bcast: Broadcast[BloomSketch], child: Expression)
+case class MightContain(bcast: Broadcast[UrlSketch], child: Expression)
     extends UnaryExpression {
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     bcast.value.mightContainBytes(input.asInstanceOf[UTF8String].getBytes)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomBcast", bcast,
-      classOf[Broadcast[BloomSketch]].getName)
+    val ref = ctx.addReferenceObj("sketchBcast", bcast,
+      classOf[Broadcast[UrlSketch]].getName)
     defineCodeGen(ctx, ev,
-      c => s"((graft.sketch.BloomSketch)$ref.value()).mightContainBytes($c.getBytes())")
+      c => s"((graft.sketch.UrlSketch)$ref.value()).mightContainBytes($c.getBytes())")
   }
-  override protected def withNewChildInternal(c: Expression): BloomMightContain =
-    copy(child = c)
-}
-
-/** Cuckoo-sketch membership probe against a broadcast [[graft.sketch.SeenSketch]]
-  * — the north_star's cuckoo-filter form of the O-7b fast path. Identical
-  * contract to [[BloomMightContain]]: `false` ⇒ definitely unseen. A degraded
-  * (saturated) sketch answers `true` for every row, which only routes rows to
-  * the authoritative anti-join.
-  */
-case class CuckooMightContain(bcast: Broadcast[graft.sketch.SeenSketch],
-    child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    bcast.value.mightContainBytes(input.asInstanceOf[UTF8String].getBytes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cuckooBcast", bcast,
-      classOf[Broadcast[graft.sketch.SeenSketch]].getName)
-    defineCodeGen(ctx, ev,
-      c => s"((graft.sketch.SeenSketch)$ref.value()).mightContainBytes($c.getBytes())")
-  }
-  override protected def withNewChildInternal(c: Expression): CuckooMightContain =
+  override protected def withNewChildInternal(c: Expression): MightContain =
     copy(child = c)
 }
 
@@ -138,10 +118,8 @@ object planfns {
   def host_key(c: Column): Column = column(HostKey(expression(c)))
   def robots_allowed(url: Column, prefixes: Column, allows: Column): Column =
     column(RobotsAllowed(expression(url), expression(prefixes), expression(allows)))
-  def bloom_might_contain(b: Broadcast[BloomSketch], c: Column): Column =
-    column(BloomMightContain(b, expression(c)))
-  def cuckoo_might_contain(b: Broadcast[graft.sketch.SeenSketch], c: Column): Column =
-    column(CuckooMightContain(b, expression(c)))
+  def might_contain(b: Broadcast[UrlSketch], c: Column): Column =
+    column(MightContain(b, expression(c)))
   def crawl_delay_budget(c: Column, windowSec: Double): Column =
     column(CrawlDelayBudget(expression(c), windowSec))
 }

@@ -10,7 +10,7 @@ package graft.sketch
   * Double hashing (Kirsch–Mitzenmacher): h_i = h1 + i·h2 over an FNV-64 +
   * splitmix64 finalizer pair.
   */
-final class BloomSketch(val numBits: Long, val numHashes: Int) extends Serializable {
+final class BloomSketch(val numBits: Long, val numHashes: Int) extends UrlSketch {
   require(numBits > 0 && (numBits & 63) == 0, "numBits must be a positive multiple of 64")
   val words = new Array[Long]((numBits >> 6).toInt)
 
@@ -71,6 +71,9 @@ final class BloomSketch(val numBits: Long, val numHashes: Int) extends Serializa
     this
   }
 
+  def addAll(urls: org.apache.spark.rdd.RDD[String]): Unit =
+    merge(BloomSketch.build(urls, new BloomSketch(numBits, numHashes)))
+
   def approxBitLoad: Double = {
     var set = 0L
     var i = 0
@@ -96,11 +99,9 @@ object BloomSketch {
 
   /** north_star build path: per-partition sketches, log-depth merge. */
   def build(urls: org.apache.spark.rdd.RDD[String], expectedItems: Long,
-      fpp: Double = 0.01): BloomSketch = {
-    val depth = math.max(2, (math.log(math.max(urls.getNumPartitions, 2)) / math.log(2)).toInt)
-    urls.treeAggregate(forExpected(expectedItems, fpp))(
-      seqOp = (b, u) => { b.add(u); b },
-      combOp = (a, b) => a.merge(b),
-      depth = depth)
-  }
+      fpp: Double = 0.01): BloomSketch =
+    build(urls, forExpected(expectedItems, fpp))
+
+  private def build(urls: org.apache.spark.rdd.RDD[String], zero: BloomSketch): BloomSketch =
+    UrlSketch.treeBuild(urls, zero)(_.add(_), _.merge(_))
 }

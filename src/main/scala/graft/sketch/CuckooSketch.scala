@@ -7,7 +7,7 @@ package graft.sketch
   * Merge is NOT naturally closed for cuckoo filters (SURVEY.md §7.3 #5):
   * [[merge]] re-inserts the other filter's fingerprints and reports failure
   * when occupancy is too high; [[SeenSketch]] wraps this with the documented
-  * degrade-to-bloom fallback so treeAggregate merging always succeeds.
+  * degrade-to-always-maybe fallback so treeAggregate merging always succeeds.
   */
 final class CuckooSketch(val numBuckets: Int) extends Serializable {
   require(numBuckets > 0 && (numBuckets & (numBuckets - 1)) == 0,
@@ -81,7 +81,7 @@ final class CuckooSketch(val numBuckets: Int) extends Serializable {
       kicks += 1
     }
     // restore nothing (a fingerprint was displaced into our hand; re-insert
-    // failing means the filter is saturated — caller falls back to bloom,
+    // failing means the filter is saturated — caller degrades to always-maybe,
     // and the displaced fingerprint loss is irrelevant post-fallback)
     false
   }
@@ -146,14 +146,22 @@ final class CuckooSketch(val numBuckets: Int) extends Serializable {
 }
 
 object CuckooSketch {
-  def forExpected(expectedItems: Long): CuckooSketch = {
+  def forExpected(expectedItems: Long): CuckooSketch =
+    new CuckooSketch(bucketsFor(expectedItems))
+
+  /** Table bytes of [[forExpected]]'s filter (4 slots × 16 bits per bucket),
+    * known without allocating it.
+    */
+  def bytesFor(expectedItems: Long): Long = bucketsFor(expectedItems) * 8L
+
+  private def bucketsFor(expectedItems: Long): Int = {
     // target ≤ ~84% load (practical cuckoo ceiling at b=4); floor of 4
     // buckets keeps the structure honest while letting deliberately tiny
     // filters saturate (the degrade-to-maybe path is itself under test)
     val needed = math.max(4L, math.ceil(expectedItems / 0.84 / 4).toLong)
     var buckets = 4
     while (buckets < needed && buckets < (1 << 30)) buckets <<= 1
-    new CuckooSketch(buckets)
+    buckets
   }
 }
 
@@ -161,12 +169,14 @@ object CuckooSketch {
   * fallback) URL-seen set"): a deletable cuckoo sketch that degrades to the
   * conservative "always maybe" answer when insert/merge saturates, so
   * treeAggregate builds never fail — correctness is preserved because
-  * `mightContain == true` only routes a row to the authoritative anti-join
-  * (CrawlEngine.dedupAgainst). A degraded sketch is rebuilt from source as a
-  * [[BloomSketch]] on the next epoch's build cycle; SURVEY.md §7.3 #5
-  * documents why cuckoo merge is not closed.
+  * `mightContain == true` only routes a row to the authoritative seen check
+  * (CrawlEngine.dedupAgainst). Degradation is permanent: the engine keeps
+  * merging into the same sketch and never rebuilds it, so from then on
+  * every candidate takes the exact probe (the sketch stops pruning, nothing
+  * else changes). SURVEY.md §7.3 #5 documents why cuckoo merge is not
+  * closed.
   */
-final class SeenSketch(expectedItems: Long) extends Serializable {
+final class SeenSketch(expectedItems: Long) extends UrlSketch {
   private val cuckoo: CuckooSketch = CuckooSketch.forExpected(expectedItems)
   private var degraded: Boolean = false
 
@@ -190,6 +200,9 @@ final class SeenSketch(expectedItems: Long) extends Serializable {
 
   def isDegraded: Boolean = degraded
 
+  def addAll(urls: org.apache.spark.rdd.RDD[String]): Unit =
+    merge(SeenSketch.build(urls, expectedItems))
+
   def merge(other: SeenSketch): SeenSketch = {
     if (degraded || other.degraded) degraded = true
     else if (!cuckoo.merge(other.cuckoo)) degraded = true
@@ -203,12 +216,6 @@ object SeenSketch {
     * step flips the result to the degraded always-maybe state — conservative
     * (extra anti-join traffic), never a false negative.
     */
-  def build(urls: org.apache.spark.rdd.RDD[String], expectedItems: Long): SeenSketch = {
-    val depth = math.max(2,
-      (math.log(math.max(urls.getNumPartitions, 2)) / math.log(2)).toInt)
-    urls.treeAggregate(new SeenSketch(expectedItems))(
-      seqOp = (s, u) => { s.add(u); s },
-      combOp = (a, b) => a.merge(b),
-      depth = depth)
-  }
+  def build(urls: org.apache.spark.rdd.RDD[String], expectedItems: Long): SeenSketch =
+    UrlSketch.treeBuild(urls, new SeenSketch(expectedItems))(_.add(_), _.merge(_))
 }

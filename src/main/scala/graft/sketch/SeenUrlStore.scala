@@ -39,16 +39,15 @@ import graft.util.SerializableHadoopConf
   *    dense fraction of its size (the regime where reading the shard once is
   *    optimal anyway).
   *
-  * Exact resume falls out of the epoch-suffixed file names: a probe during
-  * epoch e reads only files with epoch ≤ e, so deltas left behind by a
-  * crashed/truncated later epoch are invisible, and the re-run of an epoch
-  * deterministically overwrites its own files (same contract as the snapshot
-  * store's data dirs). Task retries are idempotent for the same reason.
-  * Compacted BASE files (`c<N>.seen`) are derived state: a resume that
-  * truncates snapshots back past a compaction must drop the stale base
-  * ([[dropBasesAbove]]) so the re-run's deltas are not hidden behind an
-  * old-timeline base; [[compact]] additionally rebuilds (never folds) a base
-  * whose epoch equals its own target, so a surviving stale base is
+  * Exact resume rests on the epoch-suffixed file names: a probe during
+  * epoch e reads only files with epoch ≤ e, and a task retry rewrites the
+  * same files (same contract as the snapshot store's data dirs). A resume
+  * that truncates snapshots back to epoch s drops every shard file above s
+  * ([[dropAbove]]): a compacted BASE (`c<N>.seen`, derived state) would
+  * hide the re-run's deltas behind an old-timeline base, and an
+  * old-timeline delta survives in every bucket its epoch's re-run leaves
+  * empty. [[compact]] additionally rebuilds (never folds) a base whose
+  * epoch equals its own target, so a surviving stale base is
   * deterministically overwritten rather than consulted forever.
   *
   * A `_meta.json` records the bucket count and the highest epoch the store
@@ -104,14 +103,25 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
 
   /** Advance the covered-epoch watermark (atomic tmp+rename; driver-side).
     * Called by [[writeDelta]]; call directly for an epoch whose delta is
-    * empty (no shard files written) so coverage shows no gap.
+    * empty (no shard files written) so coverage shows no gap. Throws when
+    * the directory's meta records a different bucket count: its shards are
+    * bucketed for another store, and a fresh meta stamped over them would
+    * validate a mixed-bucket shard set ([[clear]] it first).
     */
-  def markEpoch(conf: Configuration, epoch: Int): Unit = {
-    val fs = metaPath.getFileSystem(conf)
-    val maxE = meta(conf) match {
-      case Some((nb, m)) if nb == numBuckets => math.max(m, epoch)
-      case _ => epoch
+  def markEpoch(conf: Configuration, epoch: Int): Unit =
+    writeMeta(conf, math.max(checkedWatermark(conf).getOrElse(epoch), epoch))
+
+  /** The covered-epoch watermark, if any; throws on a bucket-count mismatch. */
+  private def checkedWatermark(conf: Configuration): Option[Int] =
+    meta(conf).map { case (nb, maxE) =>
+      if (nb != numBuckets)
+        throw new IllegalStateException(s"seen store $dir holds $nb buckets, " +
+          s"not $numBuckets: clear() it before writing")
+      maxE
     }
+
+  private def writeMeta(conf: Configuration, maxE: Int): Unit = {
+    val fs = metaPath.getFileSystem(conf)
     fs.mkdirs(new Path(dir))
     val tmp = new Path(dir, s".tmp-meta-${java.util.UUID.randomUUID().toString.take(8)}")
     val out = fs.create(tmp, true)
@@ -131,13 +141,15 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  /** Drop compacted base files `c<E>.seen` with E > `epoch` (driver-side).
-    * Called on resume: a base compacted on a LATER, now-truncated timeline
-    * would otherwise hide the re-run's own deltas once the re-run reaches
-    * the base's epoch. Bases are derived state (deltas are never deleted),
-    * so dropping them is always safe.
+  /** Truncate the store to `epoch` (driver-side, on resume): delete every
+    * shard file — compacted base `c<E>.seen` or delta `e<E>.seen` — with
+    * E > `epoch`, and lower the watermark to `epoch`. Such files belong to no
+    * committed snapshot. A stale base would hide the re-run's own deltas
+    * once the re-run reaches its epoch; a stale delta survives wherever the
+    * re-run of its epoch leaves that bucket empty, and would mark urls the
+    * new timeline never fetched as seen.
     */
-  def dropBasesAbove(conf: Configuration, epoch: Int): Unit = {
+  def dropAbove(conf: Configuration, epoch: Int): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return
@@ -145,12 +157,13 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
       if (d.isDirectory && d.getPath.getName.startsWith("bucket="))
         fs.listStatus(d.getPath).foreach { f =>
           val name = f.getPath.getName
-          if (name.startsWith("c") && name.endsWith(".seen") &&
+          if ((name.startsWith("c") || name.startsWith("e")) && name.endsWith(".seen") &&
             scala.util.Try(name.substring(1).stripSuffix(".seen").toInt)
               .toOption.exists(_ > epoch))
             fs.delete(f.getPath, false)
         }
     }
+    if (checkedWatermark(conf).exists(_ > epoch)) writeMeta(conf, epoch)
   }
 
   /** Write the epoch's url delta (single string column) as one sorted shard
@@ -163,6 +176,7 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
     val (d, nb) = (dir, numBuckets)
     val sconf = new SerializableHadoopConf(
       urls.sparkSession.sparkContext.hadoopConfiguration)
+    checkedWatermark(sconf.value) // refuse before writing into a foreign store
     urls
       .withColumn("__b", bucketCol(col(urls.columns.head)))
       .repartition(nb, col("__b"))
@@ -192,7 +206,7 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
     * consulted bucket). The merge is a STREAMING k-way merge over the
     * already-sorted inputs: memory is O(1) in the bucket's accumulated size
     * (url bytes stream through two temp files), so numBuckets sizing is a
-    * probe-side concern only. Deltas are NEVER deleted: a resume that
+    * probe-side concern only. Compaction never deletes deltas: a resume that
     * truncates snapshots back past this compaction ignores the base (its
     * epoch exceeds the probe's `upToEpoch`) and falls back to the per-epoch
     * deltas, so exact resume is preserved; re-compaction at the same epoch

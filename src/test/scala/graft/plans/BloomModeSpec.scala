@@ -123,22 +123,6 @@ class BloomModeSpec extends AnyFunSuite {
     assert(cap > 8, s"sketch capacity never grew: $cap")
   }
 
-  test("sharded shard-file probe ≡ broadcast probe ≡ plain anti-join") {
-    val wh = Files.createTempDirectory("graft-bloomfile-").toString
-    val r = new CrawlEngine(spark, CrawlConfig(domain, numPartitions = 4,
-      bloomMinSeen = 4, bloomExpectedTotal = 1024, bloomShards = 8,
-      bloomFileProbe = Some(true)))
-      .run(cyclicPages, s"https://$domain/p/0", wh)
-    val trace = r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq
-    val links = r.links.select("url").as[String].collect().sorted.toSeq
-    assert((trace, links) == plain)
-    // the sketch lives as per-bucket files, built executor-side
-    val shardDir = new java.io.File(s"$wh/sketch")
-    val shards = Option(shardDir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".bloom"))
-    assert(shards.nonEmpty, "no shard files written")
-  }
-
   test("cuckoo seen-sketch probe ≡ plain anti-join (north_star fallback wired)") {
     val (trace, links) = crawl(CrawlConfig(domain, numPartitions = 4,
       sketchKind = "cuckoo", bloomMinSeen = 4, bloomExpectedTotal = 1024))
@@ -156,18 +140,47 @@ class BloomModeSpec extends AnyFunSuite {
     assert((trace, links) == plain)
   }
 
-  test("BloomShardStore: no false negatives across delta merges; misses stay mostly false") {
-    val dir = Files.createTempDirectory("graft-shardstore-").toString
-    val store = new graft.sketch.BloomShardStore(dir, 8, 64L * 64, 4)
-    val d1 = (0 until 300).map(i => s"https://a.com/$i").toDF("url")
-    val d2 = (300 until 600).map(i => s"https://a.com/$i").toDF("url")
-    store.mergeDelta(d1)
-    store.mergeDelta(d2)
-    val probed = store.probe((0 until 600).map(i => s"https://a.com/$i").toDF("url"), "url")
-    assert(probed.filter(!probed("maybe_seen")).count() == 0, "false negative")
-    val misses = store.probe(
-      (0 until 500).map(i => s"https://other.org/$i").toDF("url"), "url")
-    val fp = misses.filter(misses("maybe_seen")).count()
-    assert(fp < 100, s"FPP implausibly high: $fp/500")
+  test("a sketch above the 256 MiB broadcast cap is never built: every " +
+    "candidate takes the exact store probe") {
+    // 3·10^8 expected urls at 1% fpp ⇒ a ~343 MiB bloom: over the cap, so
+    // the crawl runs sketch-less (nothing allocated) and stays exact
+    val expected = 300000000L
+    assert(graft.sketch.BloomSketch.sizing(expected, 0.01)._1 / 8 > (256L << 20))
+    val wh = Files.createTempDirectory("graft-bloomcap-").toString
+    val r = new CrawlEngine(spark, CrawlConfig(domain, numPartitions = 4,
+      bloomMinSeen = 4, bloomExpectedTotal = expected))
+      .run(cyclicPages, s"https://$domain/p/0", wh)
+    val got = (r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq,
+      r.links.select("url").orderBy("url").as[String].collect().toSeq)
+    assert(got == plain)
+    val store = new graft.snapshot.SnapshotStore(spark, wh)
+    val caps = (0 until r.epochs).map(e => store.snapshotAt(e).get.metrics("sketch_capacity"))
+    assert(caps.forall(_ == 0L), s"sketch built despite the cap: $caps")
+  }
+
+  test("truncate-resume with a changed budget: later-timeline seen deltas " +
+    "are dropped (bucketlocal ≡ anti)") {
+    // the first run's deltas for epochs 4..7 belong to no snapshot after the
+    // truncate; the re-run with a smaller budget fetches fewer urls per epoch,
+    // and with more store buckets than urls per epoch it leaves most buckets
+    // of each re-run epoch empty — a surviving stale delta there would mark
+    // urls this timeline never fetched as seen and drop them from the crawl
+    val pages = graft.synth.SiteGen.pages(spark, domain, nPages = 120, hosts = 4,
+      outDegree = 6, numPartitions = 4).persist()
+    def resumed(seenDedup: String): (Seq[(Int, String)], Seq[String]) = {
+      val wh = Files.createTempDirectory("graft-truncresume-").toString
+      def cfg(budget: Int) = CrawlConfig(domain, budget = Some(budget),
+        numPartitions = 4, seenDedup = seenDedup, seenStoreBuckets = 16)
+      new CrawlEngine(spark, cfg(3).copy(maxEpochs = 8))
+        .run(pages, s"https://$domain", wh)
+      new graft.snapshot.SnapshotStore(spark, wh).truncateAfter(3)
+      val r = new CrawlEngine(spark, cfg(2)).run(pages, s"https://$domain", wh)
+      (r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq,
+        r.links.select("url").orderBy("url").as[String].collect().toSeq)
+    }
+    val anti = resumed("anti")
+    assert(anti._1.map(_._1).max >= 8, "resumed crawl too short to reach the stale epochs")
+    assert(resumed("bucketlocal") == anti)
+    pages.unpersist()
   }
 }

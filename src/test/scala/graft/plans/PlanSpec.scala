@@ -160,46 +160,67 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
-  test("aligned sketch + seen-store probes add no exchange: the dedup chain " +
-    "keeps ONE shuffle (the distinct's) in the fileProbe configuration") {
+  test("aligned sketch flag + seen and suppressed store probes add no " +
+    "exchange: the dedup chain keeps ONE shuffle (the distinct's)") {
     import java.nio.file.Files
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.plans.planfns._
     // stores bucketed by the session's shuffle-partition count — candidates
     // leave their distinct exchange partitioned pmod(hash(url), n), which is
-    // both stores' bucket function, so neither probe may add an exchange.
-    // This is the 10^10 configuration (sharded file sketch + exact store).
+    // both stores' bucket function; the broadcast sketch flag is narrow, so
+    // no step after the distinct may add an exchange
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p.collect {
+      case e: ShuffleExchangeExec => Seq(e)
+      case c: InMemoryTableScanExec => shuffles(c.relation.cachedPlan)
+    }.flatten.distinct
     val nb = spark.sessionState.conf.numShufflePartitions
-    val seen = new graft.sketch.SeenUrlStore(
-      Files.createTempDirectory("graft-plan-seen-").toString + "/s", nb)
-    val sketch = new graft.sketch.BloomShardStore(
-      Files.createTempDirectory("graft-plan-bloom-").toString, nb, 64L * 64, 4)
+    def store(tag: String) = new graft.sketch.SeenUrlStore(
+      Files.createTempDirectory(s"graft-plan-$tag-").toString + "/s", nb)
+    val (seen, suppressed) = (store("seen"), store("suppressed"))
     val seeded = {
       import spark.implicits._
       (0 until 50).map(i => s"https://example.com/d/$i").toDF("url")
     }
+    val blocked = {
+      import spark.implicits._
+      (50 until 60).map(i => s"https://example.com/d/$i").toDF("url")
+    }
     seen.writeDelta(seeded, 0)
-    sketch.mergeDelta(seeded)
+    suppressed.writeDelta(blocked, 0)
+    val sketch = graft.sketch.BloomSketch.forExpected(1000, 0.01)
+    (0 until 50).foreach(i => sketch.add(s"https://example.com/d/$i"))
+    val bcast = spark.sparkContext.broadcast[graft.sketch.UrlSketch](sketch)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false") // inspectable plan
     try {
+      // persisted, like the engine's candidates (which also keeps the flag
+      // filters from being pushed below the distinct)
       val cand = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(concat(lit("https://example.com/d/"), col("doc_id")).as("url"))
-        .distinct()
-      // the engine's dedupAgainst shape: sketch flag → split → exact probe
-      val flagged = sketch.probe(cand, "url", assumeDistributed = true)
-      val next = flagged.filter(!col("maybe_seen")).drop("maybe_seen")
+        .distinct().persist()
+      // the engine's dedupAgainst shape: sketch flag → split → exact seen
+      // probe, then the suppressed subtraction
+      val flagged = cand.withColumn("maybe_seen", might_contain(bcast, col("url")))
+      val deduped = flagged.filter(!col("maybe_seen")).drop("maybe_seen")
         .union(seen.filterUnseen(
           flagged.filter(col("maybe_seen")).drop("maybe_seen"), "url", 0,
           assumeDistributed = true))
-      val exchanges = next.queryExecution.executedPlan
-        .collect { case e: ShuffleExchangeExec => e }
+      val next = suppressed.filterUnseen(deduped, "url", 0, assumeDistributed = true)
+      val exchanges = shuffles(next.queryExecution.executedPlan)
       assert(exchanges.size == 1,
         s"expected only the distinct's exchange, found ${exchanges.size}")
-      // and the chain is actually correct: seeded urls filtered out
+      // and the chain is actually correct: seen and suppressed urls are out
       val out = next.select("url")
         .as[String](org.apache.spark.sql.Encoders.STRING).collect().toSet
-      assert(!out.exists(u => u.stripPrefix("https://example.com/d/").toLong < 50))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      assert(out.nonEmpty &&
+        !out.exists(u => u.stripPrefix("https://example.com/d/").toLong < 60))
+      cand.unpersist()
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      bcast.destroy()
+    }
   }
 
   test("extraction chain stays in one codegen span (no UDF boundary)") {

@@ -165,17 +165,27 @@ class SeenUrlStoreSpec extends AnyFunSuite {
       == urls(200, 200).toSet, "stale-base urls survived re-compaction")
   }
 
-  test("dropBasesAbove removes later-timeline bases; deltas answer exactly") {
+  test("dropAbove removes later-timeline bases and deltas; earlier deltas " +
+    "answer exactly") {
     val store = freshStore(buckets = 2)
+    val conf = spark.sparkContext.hadoopConfiguration
     store.writeDelta(urls(0, 200).toDF("url"), 0)
     store.writeDelta(urls(200, 200).toDF("url"), 1)
     store.compact(spark, 1)
-    store.dropBasesAbove(spark.sparkContext.hadoopConfiguration, 0)
-    val dirs = new java.io.File(store.dir).listFiles().filter(_.isDirectory)
-    assert(!dirs.exists(_.listFiles().exists(_.getName.startsWith("c"))),
-      "base above the resume epoch survived")
-    // membership unchanged — the per-epoch deltas are never deleted
-    assert(store.filterUnseen(urls(0, 400).toDF("url"), "url", 1).count() == 0)
+    store.writeDelta(urls(400, 200).toDF("url"), 2) // a later-timeline delta
+    store.dropAbove(conf, 0)
+    val names = new java.io.File(store.dir).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles().map(_.getName))
+    assert(!names.exists(_.startsWith("c")), "base above the resume epoch survived")
+    assert(!names.exists(n => n == "e1.seen" || n == "e2.seen"),
+      "delta above the resume epoch survived")
+    assert(names.contains("e0.seen"))
+    // the watermark follows the truncation: coverage ends at epoch 0
+    assert(store.validFor(conf, 0) && !store.validFor(conf, 1))
+    // epoch-0 membership unchanged; the dropped epochs' urls are unseen even
+    // to a probe that reads up to epoch 2
+    assert(store.filterUnseen(urls(0, 200).toDF("url"), "url", 2).count() == 0)
+    assert(store.filterUnseen(urls(200, 400).toDF("url"), "url", 2).count() == 400)
   }
 
   test("meta watermark gates resume: bucket-count or coverage mismatch " +
@@ -190,6 +200,11 @@ class SeenUrlStoreSpec extends AnyFunSuite {
     assert(store.validFor(conf, 3))
     val other = new SeenUrlStore(store.dir, 8) // same dir, other bucket count
     assert(!other.validFor(conf, 0), "bucket-count mismatch must invalidate")
+    // writing into a store bucketed for another count refuses loudly
+    // instead of stamping a fresh meta over the mis-bucketed shards
+    intercept[IllegalStateException](other.writeDelta(urls(50, 10).toDF("url"), 4))
+    intercept[IllegalStateException](other.markEpoch(conf, 4))
+    assert(store.validFor(conf, 3) && !store.validFor(conf, 4), "meta was overwritten")
     other.clear(conf)
     assert(!store.hasAnyData(conf) && !store.validFor(conf, 0))
   }
