@@ -64,14 +64,18 @@ import graft.url.urlfns._
   *                        stop paying two O(cumulative-suppressed) anti-join
   *                        shuffles per epoch. "anti": the plain `left_anti`
   *                        joins against the visited/suppressed tables (the
-  *                        differential-test reference path).
+  *                        differential-test reference path); it builds no
+  *                        sketch, writes no store deltas, and so clears both
+  *                        stores at run start.
   * @param seenStoreBuckets url-hash buckets for the seen/suppressed shard
   *                        stores; 0 ⇒ the session's shuffle-partition count
-  *                        (`spark.sql.shuffle.partitions`) — candidates leave
-  *                        their groupBy/distinct exchange partitioned
-  *                        `pmod(hash(url), numShufflePartitions)`, which is
-  *                        the store's own bucket function, so matching counts
-  *                        make every store probe ZERO-exchange. Size so one
+  *                        (`spark.sql.shuffle.partitions`). A store probe
+  *                        repartitions its frame by url into this many
+  *                        partitions; candidates leave their groupBy/distinct
+  *                        exchange already url-partitioned into the
+  *                        shuffle-partition count, so at the default the
+  *                        planner drops that repartition and the probes add no
+  *                        exchange (any other count: one). Size so one
   *                        shard (total-seen × ~60 B / buckets) fits task
   *                        memory for the bulk-probe path (2^14 at 10^10).
   * @param seenCompactEvery every this many epochs, fold each bucket's seen
@@ -189,7 +193,7 @@ object CrawlEngine {
   *              → ExtractHrefs → explode → UrlResolve → scheme filter → CleanUrl
   *              → links delta (anti-join links)
   *              → in-domain filter → robots gate (broadcast)
-  *              → ∪ deferred → bloom-prefiltered anti-join vs visited
+  *              → ∪ deferred → sketch-pruned seen + suppressed store filter
   *              → frontier(e+1); snapshot commit
   *
   * State (visited / links / suppressed) is append-only parquet deltas under
@@ -294,26 +298,6 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     (fetchNow, defer, Seq(r1, r2))
   }
 
-  /** candidates − seen, with the O-7b sketch fast path: `probe` adds a
-    * `maybe_seen` flag (the broadcast-sketch expression); !maybe_seen rows
-    * skip the authoritative check entirely.
-    * `exactSeen` is the AUTHORITATIVE filter (rows NOT in the seen set):
-    * either the bucket-local sorted-shard lookup (seenDedup=bucketlocal — no
-    * O(seen) exchange) or the plain `left_anti` join (seenDedup=anti).
-    * Exactness comes from `exactSeen` either way — the sketch only prunes.
-    */
-  private def dedupAgainst(candidates: DataFrame,
-      exactSeen: DataFrame => DataFrame,
-      probe: Option[DataFrame => DataFrame]): DataFrame = probe match {
-    case None =>
-      exactSeen(candidates)
-    case Some(p) =>
-      val flagged = p(candidates)
-      val definitelyNew = flagged.filter(!col("maybe_seen")).drop("maybe_seen")
-      val maybeSeen = exactSeen(flagged.filter(col("maybe_seen")).drop("maybe_seen"))
-      definitelyNew.union(maybeSeen)
-  }
-
   /** Single-seed form (crawler.py:13 — seed = https://domain). */
   def run(pages: DataFrame, seedUrl: String, warehouse: String): CrawlResult =
     run(pages, Seq(seedUrl), warehouse)
@@ -348,25 +332,19 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     require(config.seenDedup == "bucketlocal" || config.seenDedup == "anti",
       s"unknown seenDedup '${config.seenDedup}' (bucketlocal|anti)")
     val useSeenStore = config.seenDedup == "bucketlocal"
-    // bucket count matches the session's shuffle partitioning by default:
-    // candidates leave their distinct/groupBy exchange partitioned by
-    // pmod(hash(url), numShufflePartitions) — the store's own bucket
-    // function — so equal counts make every store probe zero-exchange
+    // bucket count matches the session's shuffle partitioning by default, so
+    // the store probes' repartition matches the candidates' own url exchange
+    // and the planner drops it
     val storeBuckets =
       if (config.seenStoreBuckets > 0) config.seenStoreBuckets
       else spark.sessionState.conf.numShufflePartitions
-    val seenStore =
-      if (useSeenStore)
-        new graft.sketch.SeenUrlStore(s"$warehouse/seenstore", storeBuckets)
-      else null
+    val seenStore = new graft.sketch.SeenUrlStore(s"$warehouse/seenstore", storeBuckets)
     // the suppressed set rides a second store under the same contract: its
     // two per-epoch consumers (newSuppressed − suppressedSoFar and the
     // frontier subtraction) were the last O(cumulative-state) anti-join
     // shuffles left in the epoch loop
     val suppressedStore =
-      if (useSeenStore)
-        new graft.sketch.SeenUrlStore(s"$warehouse/suppressedstore", storeBuckets)
-      else null
+      new graft.sketch.SeenUrlStore(s"$warehouse/suppressedstore", storeBuckets)
     // url-only robots existence probe: parsing robots needs the html column,
     // and a predicate on url cannot row-group-prune an endsWith match — so a
     // corpus with NO robots.txt files would pay a full url+html scan just to
@@ -439,7 +417,17 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     var frontier: DataFrame = null
     var epoch = 0
 
-    store.latest() match {
+    // no snapshot ⇒ any store left in the warehouse belongs to an older
+    // crawl (maybe under another bucket count); an anti run writes no store
+    // deltas, so stores it left in place would look valid to a later
+    // bucket-local resume on another timeline: both cases start them empty
+    val latest = store.latest()
+    if (latest.isEmpty || !useSeenStore) {
+      val hconf = spark.sparkContext.hadoopConfiguration
+      seenStore.clear(hconf)
+      suppressedStore.clear(hconf)
+    }
+    latest match {
       case Some(s) =>
         snapshot = s
         epoch = s.epoch + 1
@@ -473,13 +461,6 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           .map(u => (u, graft.robots.Robots.hostKey(u), 0L))
           .toDF("url", "host", "priority")
         val suppressedSeed = blockedSeeds.toDF("url")
-        // no snapshot ⇒ any store left in the warehouse belongs to an older
-        // crawl (maybe under another bucket count): start both empty
-        if (useSeenStore) {
-          val hconf = spark.sparkContext.hadoopConfiguration
-          seenStore.clear(hconf)
-          suppressedStore.clear(hconf)
-        }
         // epoch "-1" bootstrap snapshot: seed frontier, empty state. The
         // four tiny writes are independent — run them concurrently so the
         // bootstrap pays one job latency, not four (guide §2.6)
@@ -523,10 +504,10 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     // built from the FULL visited-so-far ∪ this epoch's fetch (also the
     // resume path); every later epoch folds in only the fetch delta.
     // Invariant: whenever the probe is active, the sketch covers every URL in
-    // the authoritative seen set — no false negatives, so the dedup split is
-    // exact. One in-memory sketch (bloom, or the cuckoo fallback): built by
-    // per-partition treeAggregate merges (north_star path), rebroadcast and
-    // destroyed per epoch. A sketch above SketchMaxBytes is never built — the
+    // the authoritative seen set — no false negatives, so skipping the store
+    // probe on a sketch miss is exact. One in-memory sketch (bloom, or the
+    // cuckoo fallback): built by per-partition treeAggregate merges
+    // (north_star path), rebroadcast and destroyed per epoch. A sketch above SketchMaxBytes is never built — the
     // bucket-local exact store then takes every candidate on its own.
     require(config.sketchKind == "bloom" || config.sketchKind == "cuckoo",
       s"unknown sketchKind '${config.sketchKind}' (bloom|cuckoo)")
@@ -534,7 +515,6 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     def sketchFits(capacity: Long): Boolean = CrawlEngine.SketchMaxBytes >=
       (if (useCuckoo) CuckooSketch.bytesFor(capacity)
       else BloomSketch.sizing(capacity, config.bloomFpp)._1 / 8)
-    val nShuffle = spark.sessionState.conf.numShufflePartitions
     var seenSketch: UrlSketch = null // null ⇔ inactive
     // sketch capacity — grows by rebuild when a bloom crawl outgrows the
     // configured expectation (see the resize branch below)
@@ -686,22 +666,16 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // Bucket-local path: `disallowed − suppressedSoFar` is a shard probe
       // against the suppressed store (upToEpoch = e−1), not a left_anti over
       // the CUMULATIVE suppressed set — the probe cost tracks this epoch's
-      // disallowed rows, not the crawl's age. `gated` preserves the
-      // cleanLinks-distinct url hash partitioning unless the robots join was
-      // shuffled (by host), so the probe skips its exchange too. No distinct
-      // is needed on the store path: cleanLinks is distinct and the gates
-      // only filter, so urls are unique by construction (the anti path keeps
-      // the reference left_anti + distinct shape for the differential).
-      // Alignment is a perf hint only; every probe is exact under any
-      // distribution.
-      val gatedUrlPartitioned = !hasRobots || robotsCount <= config.robotsBroadcastMax
+      // disallowed rows, not the crawl's age. No distinct is needed on the
+      // store path: cleanLinks is distinct and the gates only filter, so urls
+      // are unique by construction (the anti path keeps the reference
+      // left_anti + distinct shape for the differential).
       val sStateF =
         if (hasRobots) Future {
           val disallowed = gated.filter(!col("allowed")).select("url")
           if (useSeenStore) {
             val newSuppressed = suppressedStore
-              .filterUnseen(disallowed, "url", epoch - 1,
-                assumeDistributed = gatedUrlPartitioned && storeBuckets == nShuffle)
+              .filterUnseen(disallowed, "url", epoch - 1)
               .persist(StorageLevel.MEMORY_AND_DISK)
             // the parquet delta and the shard-index delta are independent
             // consumers of the (O(delta)) cached frame — write them
@@ -742,21 +716,13 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         .select(col("url"), lit(newPriority).as("priority"))
       // no deferred union ⇒ base's urls are ALREADY distinct (cleanLinks is
       // distinct, the gates only filter) and priority is a constant, so the
-      // groupBy-min is an identity — skip its aggregate pair outright; the
-      // distinct's exchange still provides the url hash partitioning the
-      // dedup-probe alignment relies on
+      // groupBy-min is an identity — skip its aggregate pair outright
       val candidates = (if (gateCaches.isEmpty) base
         else base.union(defer.select("url", "priority"))
           .groupBy(col("url"))
           .agg(min(col("priority")).as("priority")))
         .select(col("url"), host_key(col("url")).as("host"), col("priority"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      // candidates leave a url exchange of nShuffle partitions — the
-      // groupBy's, or the links distinct's kept through `gated` — so both
-      // store probes downstream (seen, then suppressed) may skip their own
-      // exchange when the store bucket count matches
-      val candidatesAligned =
-        (gateCaches.nonEmpty || gatedUrlPartitioned) && storeBuckets == nShuffle
       // BASELINE.json metric numerator (URLs scheduled + entering dedup).
       // Counting FIRST materializes the candidates cache, so the fixpoint
       // epoch (0 candidates) skips the sketch merge, anti-join, and probe
@@ -775,8 +741,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // and the frontier write. (The fixpoint epoch now pays one final
       // small merge the old count-gated form skipped; bloom adds are
       // idempotent and every non-final epoch stops paying the merge's
-      // wall-clock.) The vars it mutates are read only after the Await.
-      val sketchMergeF: Future[Unit] = Future {
+      // wall-clock.) The vars it mutates are read only after the Await. The
+      // sketch only prunes store probes, so an anti run builds none.
+      val sketchMergeF: Future[Unit] = if (!useSeenStore) Future.successful(()) else Future {
         if (seenSketch != null && !useCuckoo && seenCountNow > sketchCapacity) {
           // outgrown: a bloom at >1× its design load answers maybe for nearly
           // everything (correct — the exact check is authoritative — but it
@@ -799,47 +766,34 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         if (candidatesIn > 0 && seenSketch != null)
           spark.sparkContext.broadcast[UrlSketch](seenSketch)
         else null
-      // the broadcast flag is a narrow projection: the split keeps the
-      // candidates' partitioning for the exact probe behind it
-      val probe: Option[DataFrame => DataFrame] = Option(sketchBcast).map(b =>
-        df => df.withColumn("maybe_seen", might_contain(b, col("url"))))
-      // the authoritative candidates−seen filter: bucket-local sorted-shard
-      // lookup by default (no O(seen) exchange — the store's delta for THIS
-      // epoch covers fetchNow, so probing up to `epoch` equals the
-      // visited∪fetchNow anti-join), or the plain left_anti reference path
-      val exactSeen: DataFrame => DataFrame =
-        if (useSeenStore) { df =>
-          // the shard files for this epoch are written by seenStoreF — they
-          // must be on disk before the probe job launches
-          Await.result(seenStoreF, scala.concurrent.duration.Duration.Inf)
-          seenStore.filterUnseen(df, "url", epoch,
-            assumeDistributed = candidatesAligned)
-        } else { df =>
-          df.join(visitedAll.select("url"), Seq("url"), "left_anti")
-        }
-      // deduped is already hash-partitioned (dropDuplicates/bucket-probe
-      // shuffles); writing it directly keeps that distribution in the files
-      // and lets AQE coalesce small epochs to few files. The fixpoint epoch
-      // (0 candidates) writes the empty delta without the join machinery.
       val sState = Await.result(sStateF, scala.concurrent.duration.Duration.Inf)
       lap("suppressed_wait")
+      // next = candidates − seen(≤ e) − suppressed(≤ e). Bucket-local: one
+      // repartition(storeBuckets, url) — dropped by the planner when the
+      // candidates' own url exchange already matches it — and ONE filter.
+      // The broadcast sketch prunes (a definite miss skips the store probe),
+      // the seen-store probe is authoritative (this epoch's delta covers
+      // fetchNow, so probing up to `epoch` equals the visited∪fetchNow
+      // anti-join), and the suppressed probe sees only the rows that survive
+      // it. `anti` is the plain left_anti reference on both sets. The
+      // fixpoint epoch (0 candidates) writes the empty delta without either.
       val next =
         if (candidatesIn == 0) candidates
-        else {
-          val deduped = dedupAgainst(candidates, exactSeen, probe)
-          if (sState.totalRows > 0) {
-            if (useSeenStore)
-              // bucket-local subtraction of suppressed(≤ e) — the store's
-              // delta for THIS epoch is on disk (sStateF awaited above). An
-              // aligned seen probe kept the candidates' partitioning, so this
-              // probe needs no exchange either — this replaces the left_anti
-              // that re-shuffled the CUMULATIVE suppressed set every robots
-              // epoch.
-              suppressedStore.filterUnseen(deduped, "url", epoch,
-                assumeDistributed = candidatesAligned)
-            else deduped.join(spark.read.parquet(sState.files: _*).select("url"),
+        else if (useSeenStore) {
+          // this epoch's shard files must be on disk before the probe job runs
+          Await.result(seenStoreF, scala.concurrent.duration.Duration.Inf)
+          val url = col("url")
+          val seen = seenStore.seen(url, epoch)
+          val unseen = !Option(sketchBcast).fold(seen)(b => might_contain(b, url) && seen)
+          candidates.repartition(storeBuckets, url).filter(
+            if (sState.totalRows > 0) unseen && !suppressedStore.seen(url, epoch)
+            else unseen)
+        } else {
+          val deduped = candidates.join(visitedAll, Seq("url"), "left_anti")
+          if (sState.totalRows > 0)
+            deduped.join(spark.read.parquet(sState.files: _*).select("url"),
               Seq("url"), "left_anti")
-          } else deduped
+          else deduped
         }
       dumpPlan(s"e${epoch}_candidates", candidates)
       if (candidatesIn > 0) dumpPlan(s"e${epoch}_frontier", next)

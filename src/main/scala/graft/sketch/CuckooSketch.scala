@@ -169,8 +169,8 @@ object CuckooSketch {
   * fallback) URL-seen set"): a deletable cuckoo sketch that degrades to the
   * conservative "always maybe" answer when insert/merge saturates, so
   * treeAggregate builds never fail — correctness is preserved because
-  * `mightContain == true` only routes a row to the authoritative seen check
-  * (CrawlEngine.dedupAgainst). Degradation is permanent: the engine keeps
+  * `mightContain == true` only sends a row on to the authoritative store
+  * probe (the engine's dedup filter). Degradation is permanent: the engine keeps
   * merging into the same sketch and never rebuilds it, so from then on
   * every candidate takes the exact probe (the sketch stops pruning, nothing
   * else changes). SURVEY.md §7.3 #5 documents why cuckoo merge is not

@@ -5,8 +5,15 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileContext, FileSystem, Options, Path}
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Nondeterministic}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.util.SerializableHadoopConf
 
@@ -27,17 +34,20 @@ import graft.util.SerializableHadoopConf
   *    ([[bucketCol]] = `pmod(hash(url), B)` — deliberately Spark's own
   *    HashPartitioning id function); each task writes
   *    one SORTED file per bucket: `bucket=<b>/e<epoch>.seen`, atomic rename.
-  *  - '''filterUnseen(df, urlCol, upToEpoch)''': candidates are routed by
-  *    the same bucket key — at worst an O(candidates) exchange, and ZERO
-  *    exchange when the frame is already url-hash-partitioned with matching
-  *    partition count (`assumeDistributed`); rows stream through a per-row
-  *    probe (no whole-partition buffering): each task opens a bucket's
-  *    files with epoch ≤ `upToEpoch` on first touch and keeps them open for
-  *    the task — binary search by positioned reads for sparse probes (cost
-  *    O(probes·log n), FLAT in the accumulated seen size), self-upgrading to
-  *    a one-shot bulk load + in-memory search once a shard has been probed a
-  *    dense fraction of its size (the regime where reading the shard once is
-  *    optimal anyway).
+  *  - '''seen(url, upToEpoch)''': a Catalyst predicate over the same bucket
+  *    key, placed above `repartition(numBuckets, url)` ([[filterUnseen]]).
+  *    Candidates and the store share Spark's url-hash bucketing, so a
+  *    candidate frame that is already url-hash-partitioned into numBuckets
+  *    partitions keeps its distribution: the planner drops the repartition
+  *    and the probe adds no exchange; any other frame gets exactly one
+  *    O(candidates) exchange, inserted by the planner. Rows stream through a
+  *    per-row probe (no whole-partition buffering): each task opens a
+  *    bucket's files with epoch ≤ `upToEpoch` on first touch and keeps them
+  *    open for the task — binary search by positioned reads for sparse
+  *    probes (cost O(probes·log n), FLAT in the accumulated seen size),
+  *    self-upgrading to a one-shot bulk load + in-memory search once a shard
+  *    has been probed a dense fraction of its size (the regime where reading
+  *    the shard once is optimal anyway).
   *
   * Exact resume rests on the epoch-suffixed file names: a probe during
   * epoch e reads only files with epoch ≤ e, and a task retry rewrites the
@@ -53,8 +63,9 @@ import graft.util.SerializableHadoopConf
   * A `_meta.json` records the bucket count and the highest epoch the store
   * has covered — the resume gate ([[validFor]]) rebuilds the index from the
   * authoritative parquet when the bucket count changed or earlier epochs
-  * never wrote deltas (e.g. they ran with the anti-join path), instead of
-  * trusting the mere existence of shard files.
+  * never wrote deltas, instead of trusting the mere existence of shard
+  * files. An anti-join run writes no deltas, so the engine clears both
+  * stores at its start: a later bucket-local resume finds no meta.
   *
   * Sizing: shard bytes ≈ total-seen × ~60 B / numBuckets — pick numBuckets
   * so a shard fits task memory for the bulk path (2^14 buckets ≈ 40 MB/shard
@@ -66,16 +77,6 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
   import SeenUrlStore._
 
   private def metaPath = new Path(dir, "_meta.json")
-
-  /** True iff any shard file exists (driver-side). */
-  def hasAnyData(conf: Configuration): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    fs.exists(p) && fs.listStatus(p).exists { s =>
-      s.isDirectory && s.getPath.getName.startsWith("bucket=") &&
-        fs.listStatus(s.getPath).exists(_.getPath.getName.endsWith(".seen"))
-    }
-  }
 
   /** (numBuckets, maxCoveredEpoch) from `_meta.json`, if present. */
   def meta(conf: Configuration): Option[(Int, Int)] = {
@@ -94,7 +95,7 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
     * its covered-epoch watermark reaches `requiredEpoch` (earlier epochs may
     * have run with a different bucket count, a deleted store, or the
     * anti-join path — all of which leave stale/mis-bucketed/gap-ridden
-    * shards that `hasAnyData` alone cannot distinguish).
+    * shards that the mere existence of shard files cannot distinguish).
     */
   def validFor(conf: Configuration, requiredEpoch: Int): Boolean =
     meta(conf).exists { case (nb, maxE) =>
@@ -227,60 +228,30 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
   }
 
   /** The bucket of a url Column — `pmod(hash(url), B)`, i.e. EXACTLY Spark's
-    * own `HashPartitioning` id function. That choice makes a frame that is
-    * already hash-partitioned by url (every post-groupBy/distinct candidate
-    * frame in the engine) arrive with each bucket wholly inside one task, so
-    * the probe can skip its exchange entirely (`assumeDistributed`).
+    * own `HashPartitioning` id function. So `repartition(B, url)` routes each
+    * bucket wholly into one partition, and a frame that is already
+    * hash-partitioned by url into B partitions (every post-groupBy/distinct
+    * candidate frame in the engine) needs no exchange at all: Spark's
+    * `EnsureRequirements` drops the redundant repartition.
     */
-  def bucketCol(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    pmod(hash(url), lit(numBuckets))
+  def bucketCol(url: Column): Column = pmod(hash(url), lit(numBuckets))
+
+  /** Membership predicate: true iff `url` is in a shard file with epoch ≤
+    * `upToEpoch` (exact, byte-equality on UTF-8; null is never seen). Place
+    * it above a `repartition(numBuckets, url)` so each task touches few
+    * buckets — [[filterUnseen]] does; it is exact under any distribution.
+    */
+  def seen(url: Column, upToEpoch: Int): Column =
+    column(SeenProbe(expression(url), expression(bucketCol(url)), dir, upToEpoch,
+      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration)))
 
   /** Rows of `df` whose `urlCol` is in NO shard file with epoch ≤
-    * `upToEpoch`. Exact (byte-equality on UTF-8), schema-preserving.
-    * STREAMING: rows are probed one at a time — no whole-partition
-    * materialization; a bucket's files open on first touch, stay open for
-    * the task (open-file count = distinct buckets per task: exactly one
-    * when aligned, bounded by numBuckets otherwise), and close at task end.
-    *
-    * `assumeDistributed = true` skips the co-locating exchange: correctness
-    * NEVER depends on it (each task opens whatever buckets its rows compute
-    * to), it only bounds duplicate shard opens — pass true only when `df` is
-    * already hash-partitioned by url with partition count == numBuckets
-    * (then bucket i ⊆ partition i, even under AQE coalescing, which merges
-    * whole partitions).
+    * `upToEpoch`. Exact, schema-preserving. The repartition co-locates each
+    * bucket in one task; the planner elides it when `df` is already
+    * url-hash-partitioned into numBuckets partitions.
     */
-  def filterUnseen(df: DataFrame, urlCol: String, upToEpoch: Int,
-      assumeDistributed: Boolean = false): DataFrame = {
-    val (d, nb) = (dir, numBuckets)
-    val width = df.schema.size
-    val urlIdx = df.schema.fieldIndex(urlCol)
-    val outSchema = df.schema
-    val sconf = new SerializableHadoopConf(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val keyed = df.withColumn("__b", bucketCol(col(urlCol)))
-    val routed =
-      if (assumeDistributed) keyed
-      else keyed.repartition(nb, col("__b"))
-    routed
-      .mapPartitions { it =>
-        val conf = sconf.value
-        val open = new java.util.HashMap[Int, Seq[SortedShard]]()
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit] { _ =>
-            open.values().forEach(_.foreach(_.close()))
-          })
-        it.filter { row =>
-          val b = row.getInt(width)
-          var shards = open.get(b)
-          if (shards == null) {
-            shards = openBucket(s"$d/bucket=$b", upToEpoch, conf)
-            open.put(b, shards)
-          }
-          val key = row.getString(urlIdx).getBytes(UTF_8)
-          !shards.exists(_.contains(key))
-        }.map(r => Row.fromSeq(r.toSeq.dropRight(1)))
-      }(Encoders.row(outSchema))
-  }
+  def filterUnseen(df: DataFrame, urlCol: String, upToEpoch: Int): DataFrame =
+    df.repartition(numBuckets, col(urlCol)).filter(!seen(col(urlCol), upToEpoch))
 }
 
 object SeenUrlStore {
@@ -604,5 +575,52 @@ object SeenUrlStore {
       val n = in.readInt()
       new SortedShard(in, n)
     }
+  }
+
+  /** The expression behind [[SeenUrlStore.seen]]. Rows stream through it one
+    * at a time: a task opens a bucket's files (epoch ≤ `upToEpoch`) on first
+    * touch, keeps them open for the task — open-file count = distinct buckets
+    * per task, one when the frame is bucket-aligned — and closes them when
+    * the task completes. `bucket` is the store's [[SeenUrlStore.bucketCol]]
+    * of `url`. Nondeterministic so the optimizer keeps it above the
+    * co-locating repartition (a deterministic filter is pushed below it).
+    */
+  private final case class SeenProbe(url: Expression, bucket: Expression,
+      dir: String, upToEpoch: Int, conf: SerializableHadoopConf)
+      extends BinaryExpression with Nondeterministic with CodegenFallback {
+    override def left: Expression = url
+    override def right: Expression = bucket
+    override def dataType: DataType = BooleanType
+    override def nullable: Boolean = false
+    override def prettyName: String = "seen"
+    override def flatArguments: Iterator[Any] = Iterator(url, dir, upToEpoch)
+
+    @transient private var open: java.util.HashMap[Int, Seq[SortedShard]] = _
+
+    override protected def initializeInternal(partitionIndex: Int): Unit = {
+      val opened = new java.util.HashMap[Int, Seq[SortedShard]]()
+      open = opened
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+        opened.values().forEach(_.foreach(_.close()))
+      })
+    }
+
+    override protected def evalInternal(input: InternalRow): Any = {
+      val u = url.eval(input).asInstanceOf[UTF8String]
+      u != null && {
+        val b = bucket.eval(input).asInstanceOf[Int]
+        var shards = open.get(b)
+        if (shards == null) {
+          shards = openBucket(s"$dir/bucket=$b", upToEpoch, conf.value)
+          open.put(b, shards)
+        }
+        val key = u.getBytes
+        shards.exists(_.contains(key))
+      }
+    }
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): SeenProbe =
+      copy(url = newLeft, bucket = newRight)
   }
 }

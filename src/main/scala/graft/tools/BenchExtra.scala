@@ -116,19 +116,26 @@ object BenchExtra {
       catch { case _: Throwable => () }
     }
     queries.foreach { case (name, fn) =>
+      // a rep that throws is no timing: it reports its error and stays out
+      // of best_sec
       val times = (1 to reps).map { i =>
         spark.sparkContext.setJobDescription(s"bench:$name:$i")
         val s0 = stealJiffies()
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+        val err =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+          catch { case t: Throwable => Some(t.toString) }
         val sec = (System.nanoTime() - t0) / 1e9
-        (sec, stealJiffies() - s0)
+        (sec, stealJiffies() - s0, err)
       }
-      val best = times.minBy(_._1)
-      val all = times.map(t => f"${t._1}%.3f").mkString("[", ",", "]")
+      val ok = times.filter(_._3.isEmpty).map(_._1)
+      val best = if (ok.isEmpty) "null" else f"${ok.min}%.3f"
+      val all = times.map(t => if (t._3.isEmpty) f"${t._1}%.3f" else "null")
+        .mkString("[", ",", "]")
       val steals = times.map(_._2).mkString("[", ",", "]")
-      println(f"""{"metric":"noop_query","name":"$name","best_sec":${best._1}%.3f,"reps":$all,"steal_jiffies":$steals}""")
+      val errorField = times.flatMap(_._3).headOption.fold("")(e =>
+        s""","error":${new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(e)}""")
+      println(s"""{"metric":"noop_query","name":"$name","best_sec":$best,"reps":$all,"steal_jiffies":$steals$errorField}""")
     }
     spark.stop()
   }

@@ -183,4 +183,34 @@ class BloomModeSpec extends AnyFunSuite {
     assert(resumed("bucketlocal") == anti)
     pages.unpersist()
   }
+
+  test("an anti leg between bucket-local legs clears the stores: the next " +
+    "bucket-local resume rebuilds them (bucketlocal ≡ anti)") {
+    // bucketlocal (budget 3) → truncate → anti resume (budget 2) → truncate
+    // → resume in the first mode. The anti leg writes no store deltas; had it
+    // left the stores in place, the last leg would trust the first leg's
+    // deltas for epochs 4..6 and mark urls its own timeline only deferred as
+    // seen
+    val pages = graft.synth.SiteGen.pages(spark, domain, nPages = 120, hosts = 4,
+      outDegree = 6, numPartitions = 4).persist()
+    def legs(outer: String): (Seq[(Int, String)], Seq[String]) = {
+      val wh = Files.createTempDirectory("graft-antileg-").toString
+      def run(seenDedup: String, budget: Int, maxEpochs: Int = Int.MaxValue) =
+        new CrawlEngine(spark, CrawlConfig(domain, budget = Some(budget),
+          numPartitions = 4, seenDedup = seenDedup, maxEpochs = maxEpochs))
+          .run(pages, s"https://$domain", wh)
+      val snapshots = new graft.snapshot.SnapshotStore(spark, wh)
+      run(outer, 3, maxEpochs = 8)
+      snapshots.truncateAfter(3)
+      run("anti", 2, maxEpochs = 8)
+      snapshots.truncateAfter(6)
+      val r = run(outer, 2)
+      (r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq,
+        r.links.select("url").orderBy("url").as[String].collect().toSeq)
+    }
+    val anti = legs("anti")
+    assert(anti._1.map(_._1).max > 8, "crawl too short to pass the second truncate")
+    assert(legs("bucketlocal") == anti)
+    pages.unpersist()
+  }
 }

@@ -160,66 +160,84 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
-  test("aligned sketch flag + seen and suppressed store probes add no " +
-    "exchange: the dedup chain keeps ONE shuffle (the distinct's)") {
+  /** The engine's dedup chain over persisted distinct candidates, run with
+    * AQE on or off: `repartition(nb, url)` + ONE filter carrying the sketch,
+    * seen-store and suppressed-store predicates. Checks the chain is exact
+    * (seen and suppressed urls are out) and returns the executed plan's
+    * shuffles (cached plans included) and its store filters.
+    */
+  private def dedupChain(nb: Int, aqe: Boolean) = {
     import java.nio.file.Files
-    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import graft.plans.planfns._
-    // stores bucketed by the session's shuffle-partition count — candidates
-    // leave their distinct exchange partitioned pmod(hash(url), n), which is
-    // both stores' bucket function; the broadcast sketch flag is narrow, so
-    // no step after the distinct may add an exchange
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p.collect {
+    import spark.implicits._
+    object helper extends AdaptiveSparkPlanHelper
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = helper.collect(p) {
       case e: ShuffleExchangeExec => Seq(e)
       case c: InMemoryTableScanExec => shuffles(c.relation.cachedPlan)
     }.flatten.distinct
-    val nb = spark.sessionState.conf.numShufflePartitions
     def store(tag: String) = new graft.sketch.SeenUrlStore(
       Files.createTempDirectory(s"graft-plan-$tag-").toString + "/s", nb)
     val (seen, suppressed) = (store("seen"), store("suppressed"))
-    val seeded = {
-      import spark.implicits._
-      (0 until 50).map(i => s"https://example.com/d/$i").toDF("url")
-    }
-    val blocked = {
-      import spark.implicits._
-      (50 until 60).map(i => s"https://example.com/d/$i").toDF("url")
-    }
-    seen.writeDelta(seeded, 0)
-    suppressed.writeDelta(blocked, 0)
+    seen.writeDelta((0 until 50).map(i => s"https://example.com/d/$i").toDF("url"), 0)
+    suppressed.writeDelta((50 until 60).map(i => s"https://example.com/d/$i").toDF("url"), 0)
     val sketch = graft.sketch.BloomSketch.forExpected(1000, 0.01)
     (0 until 50).foreach(i => sketch.add(s"https://example.com/d/$i"))
     val bcast = spark.sparkContext.broadcast[graft.sketch.UrlSketch](sketch)
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false") // inspectable plan
+    spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
     try {
-      // persisted, like the engine's candidates (which also keeps the flag
-      // filters from being pushed below the distinct)
+      // persisted and counted first, like the engine's candidates
       val cand = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(concat(lit("https://example.com/d/"), col("doc_id")).as("url"))
         .distinct().persist()
-      // the engine's dedupAgainst shape: sketch flag → split → exact seen
-      // probe, then the suppressed subtraction
-      val flagged = cand.withColumn("maybe_seen", might_contain(bcast, col("url")))
-      val deduped = flagged.filter(!col("maybe_seen")).drop("maybe_seen")
-        .union(seen.filterUnseen(
-          flagged.filter(col("maybe_seen")).drop("maybe_seen"), "url", 0,
-          assumeDistributed = true))
-      val next = suppressed.filterUnseen(deduped, "url", 0, assumeDistributed = true)
-      val exchanges = shuffles(next.queryExecution.executedPlan)
-      assert(exchanges.size == 1,
-        s"expected only the distinct's exchange, found ${exchanges.size}")
-      // and the chain is actually correct: seen and suppressed urls are out
-      val out = next.select("url")
-        .as[String](org.apache.spark.sql.Encoders.STRING).collect().toSet
-      assert(out.nonEmpty &&
-        !out.exists(u => u.stripPrefix("https://example.com/d/").toLong < 60))
+      cand.count()
+      val url = col("url")
+      val next = cand.repartition(nb, url).filter(
+        !(might_contain(bcast, url) && seen.seen(url, 0)) && !suppressed.seen(url, 0))
+      val out = next.as[String].collect().toSet
+      val plan = next.queryExecution.executedPlan
+      val storeFilters = helper.collect(plan) {
+        case f: FilterExec if f.condition.exists(_.prettyName == "seen") => f
+      }
       cand.unpersist()
+      assert(out.nonEmpty &&
+        !out.exists(u => u.stripPrefix("https://example.com/d/").toLong < 60), s"aqe=$aqe")
+      (shuffles(plan), storeFilters)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       bcast.destroy()
+    }
+  }
+
+  test("aligned dedup chain: sketch + seen + suppressed in one filter keeps " +
+    "ONE shuffle (the distinct's), AQE on and off") {
+    val nb = spark.sessionState.conf.numShufflePartitions
+    for (aqe <- Seq(false, true)) {
+      val (exchanges, storeFilters) = dedupChain(nb, aqe)
+      assert(exchanges.size == 1,
+        s"aqe=$aqe: expected only the distinct's exchange, found ${exchanges.size}")
+      assert(storeFilters.size == 1, s"aqe=$aqe: expected one store filter")
+    }
+  }
+
+  test("misaligned store buckets: the planner inserts exactly one exchange " +
+    "below the store filter, AQE on and off") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object helper extends AdaptiveSparkPlanHelper
+    val nb = spark.sessionState.conf.numShufflePartitions + 1
+    for (aqe <- Seq(false, true)) {
+      val (exchanges, storeFilters) = dedupChain(nb, aqe)
+      assert(exchanges.size == 2,
+        s"aqe=$aqe: expected the distinct's exchange + one, found ${exchanges.size}")
+      assert(storeFilters.size == 1, s"aqe=$aqe: expected one store filter")
+      val below = helper.collect(storeFilters.head) { case e: ShuffleExchangeExec => e }
+      assert(below.exists(_.outputPartitioning.numPartitions == nb),
+        s"aqe=$aqe: the store filter is not above the $nb-way exchange")
     }
   }
 

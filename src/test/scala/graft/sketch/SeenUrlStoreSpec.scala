@@ -83,23 +83,33 @@ class SeenUrlStoreSpec extends AnyFunSuite {
     assert(dense == big.map(_ + "x").toSet)
   }
 
-  test("assumeDistributed: zero-exchange probe ≡ routed probe, and stays " +
-    "correct even on a deliberately misaligned distribution") {
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+  test("aligned frame adds no exchange; misaligned adds one; both exact") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object helper extends AdaptiveSparkPlanHelper
     val store = freshStore(buckets = 4)
     store.writeDelta(urls(0, 2000).toDF("url"), 0)
     val probe = urls(1000, 2000).toDF("url") // half seen, half not
-    val expected = store.filterUnseen(probe, "url", 0).as[String].collect().toSet
-    assert(expected == urls(2000, 1000).toSet)
-    // aligned: pre-partitioned by the store's own bucket fn (Spark hash)
-    val aligned = probe.repartition(4, pmod(hash(col("url")), lit(4)))
-    assert(store.filterUnseen(aligned, "url", 0, assumeDistributed = true)
-      .as[String].collect().toSet == expected)
-    // misaligned (partitioned by something else) with the flag still set:
-    // slower (duplicate shard opens), never wrong
-    val misaligned = probe.repartition(3, col("url"))
-    assert(store.filterUnseen(misaligned, "url", 0, assumeDistributed = true)
-      .as[String].collect().toSet == expected)
+    // persisted, like the engine's candidates: the count is of exchanges
+    // the probe adds above the frame (and a cache keeps Spark from
+    // collapsing the probe's repartition into the frame's own)
+    def run(df: DataFrame): (Set[String], Int) = {
+      val frame = df.persist()
+      val out = store.filterUnseen(frame, "url", 0)
+      val got = out.as[String].collect().toSet
+      val added = helper.collect(out.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }.size
+      frame.unpersist()
+      (got, added)
+    }
+    val expected = urls(2000, 1000).toSet
+    // aligned: already hash-partitioned by url into the store's bucket count
+    // — the planner drops the probe's repartition
+    assert(run(probe.repartition(4, col("url"))) == ((expected, 0)))
+    // misaligned (another partition count): exactly one inserted exchange
+    assert(run(probe.repartition(3, col("url"))) == ((expected, 1)))
   }
 
   test("compaction: membership identical, epoch-bounded visibility intact " +
@@ -206,14 +216,11 @@ class SeenUrlStoreSpec extends AnyFunSuite {
     intercept[IllegalStateException](other.markEpoch(conf, 4))
     assert(store.validFor(conf, 3) && !store.validFor(conf, 4), "meta was overwritten")
     other.clear(conf)
-    assert(!store.hasAnyData(conf) && !store.validFor(conf, 0))
+    assert(!store.validFor(conf, 0))
   }
 
   test("empty store and bucket-less probes pass everything through") {
     val store = freshStore()
-    assert(!store.hasAnyData(spark.sparkContext.hadoopConfiguration))
     assert(store.filterUnseen(urls(0, 50).toDF("url"), "url", 99).count() == 50)
-    store.writeDelta(urls(0, 10).toDF("url"), 0)
-    assert(store.hasAnyData(spark.sparkContext.hadoopConfiguration))
   }
 }
