@@ -11,9 +11,8 @@ import org.apache.spark.sql.types._
   * ([[JdkCodec]]): PNG/JPEG/GIF/BMP/TIFF via `javax.imageio`, WAV PCM via
   * `javax.sound.sampled`, multi-frame PNG containers for video; decode →
   * box-resize → frame-sample → luma/amplitude feature pooling all operate
-  * on actual pixels/samples. [[StubCodec]] remains only as the fallback for
-  * codecs genuinely absent in this sandbox (h264-class video), clearly
-  * marked.
+  * on actual pixels/samples. A codec with no JDK decoder (h264-class
+  * video) yields no feature row, like null media.
   */
 object MediaOps {
 
@@ -31,7 +30,7 @@ object MediaOps {
       doc_id: Long,
       mediaType: String,
       featureDim: Int,
-      features: Array[Float], // pooled embedding (stubbed)
+      features: Array[Float], // mean-pooled luma/amplitude features
       frames: Int, // frames sampled (video) / 1 (image)
       outWidth: Int, // post-"resize" dims
       outHeight: Int)
@@ -46,52 +45,16 @@ object MediaOps {
       StructField("durationMs", LongType, nullable = false),
       StructField("codec", StringType, nullable = false))), nullable = false)))
 
-  /** ================ STUB CODEC (fallback only) ================
-    * Deterministic fake decode for codecs with no decoder in this sandbox:
-    * "pixels" are a splitmix64 stream seeded by the blob's FNV hash. The
-    * primary path is [[JdkCodec]] (real decode); this object is reached only
-    * for unrecognized codec tags.
-    */
-  object StubCodec {
-    def mixPublic(z: Long): Long = mix64(z)
-    @inline private def mix64(z0: Long): Long = {
-      var z = z0 + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    private def blobHash(bytes: Array[Byte]): Long = {
-      var h = 0xcbf29ce484222325L
-      var i = 0
-      while (i < bytes.length) { h ^= (bytes(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
-      h
-    }
-
-    /** "Decode + resize to (w,h) + mean-pool to dim features" — stub. */
-    def decodeAndPool(bytes: Array[Byte], w: Int, h: Int, dim: Int,
-        frame: Int): Array[Float] = {
-      val seed = mix64(blobHash(bytes) ^ (frame.toLong << 32))
-      val out = new Array[Float](dim)
-      var d = 0
-      while (d < dim) {
-        // deterministic "pooled pixel statistic" for cell d of a w×h grid
-        out(d) = (mix64(seed + d * 0x9E3779B97F4A7C15L + w * 31L + h).toFloat /
-          Long.MaxValue.toFloat)
-        d += 1
-      }
-      out
-    }
-
-    /** Frame indexes sampled uniformly from a stubbed duration. */
-    def sampleFrames(durationMs: Long, fps: Double, maxFrames: Int): Array[Int] = {
-      val total = math.max(1, (durationMs * fps / 1000.0).toInt)
-      val n = math.min(maxFrames, total)
-      Array.tabulate(n)(i => (i.toLong * total / n).toInt)
-    }
+  /** splitmix64 finalizer: the deterministic pixel stream of `synthesize`. */
+  @inline private def mix64(z0: Long): Long = {
+    var z = z0 + 0x9e3779b97f4a7c15L
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
   }
 
   @inline private def mixPix(id: Long, k: Long): Long =
-    StubCodec.mixPublic(id * 0xd1342543de82ef95L + k)
+    mix64(id * 0xd1342543de82ef95L + k)
 
   /** Image codecs synthesized into the corpus — every still-image format this
     * JDK's ImageIO round-trips (encode+decode verified in-sandbox). JPEG is
@@ -188,11 +151,11 @@ object MediaOps {
 
   /** decode → resize(targetW×targetH) → frame-sample → feature-extract →
     * mean-pool, batched per partition (constant-memory batch shape; the
-    * mapInPandas analog). Null media → null-safe skip; unrecognized codec →
-    * StubCodec fallback.
+    * mapInPandas analog). Null media and codecs with no decoder here
+    * (h264-class) yield no row.
     */
   def extractFeatures(media: Dataset[MediaRow], targetW: Int = 224,
-      targetH: Int = 224, dim: Int = 64, fps: Double = 1.0,
+      targetH: Int = 224, dim: Int = 64,
       maxFrames: Int = 8): Dataset[MediaFeatures] = {
     val spark = media.sparkSession
     import spark.implicits._
@@ -229,19 +192,7 @@ object MediaOps {
             }
             Iterator.single(MediaFeatures(row.doc_id, row.meta.mediaType, dim,
               pooled, idx.length, targetW, targetH))
-          case _ => // genuinely absent decoder (h264-class) → deterministic stub
-            val frames: Array[Int] = row.meta.mediaType match {
-              case "video" => StubCodec.sampleFrames(row.meta.durationMs, fps, maxFrames)
-              case _       => Array(0)
-            }
-            val pooled = new Array[Float](dim)
-            frames.foreach { f =>
-              val feat = StubCodec.decodeAndPool(row.media, targetW, targetH, dim, f)
-              var d = 0
-              while (d < dim) { pooled(d) += feat(d) / frames.length; d += 1 }
-            }
-            Iterator.single(MediaFeatures(row.doc_id, row.meta.mediaType, dim,
-              pooled, frames.length, targetW, targetH))
+          case _ => Iterator.empty // no decoder here (h264-class)
         }
       }
     }

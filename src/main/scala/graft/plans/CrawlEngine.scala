@@ -17,21 +17,12 @@ import graft.url.urlfns._
   * @param domain          scope suffix (crawler.py:12; O-8 endswith filter)
   * @param budget          per-host per-epoch politeness budget (north_rule);
   *                        None ⇒ ∞ ⇒ reference-exact trace mode (§A.1)
-  * @param numPartitions   explicit hash-partition count for frontier state
-  * @param saltBuckets     pre-aggregation salt for the per-host budget window
-  *                        (hot-host skew mitigation, SURVEY.md §4.3)
-  * @param saltMinRows     below this frontier size the budget window runs
-  *                        single-phase (one row_number per host): a frontier
-  *                        this small cannot produce a window shuffle whose
-  *                        skew matters, and the salted path costs a second
-  *                        window shuffle + cache per epoch. Scale-adaptive —
-  *                        driven by the measured frontier count, not a core
-  *                        count. The fetch/defer SETS are identical either
-  *                        way (the salted phase-1 top-K is provably a
-  *                        superset of the exact per-host top-K).
-  * @param bloomFpp        seen-sketch false-positive rate
+  * @param numPartitions   partition count of the SHUFFLED robots and fetch
+  *                        joins (taken only above `broadcastMaxRows`); every
+  *                        other exchange, the seen/suppressed store buckets
+  *                        included, uses `spark.sql.shuffle.partitions`
   * @param bloomMinSeen    below this seen-set size, skip the sketch entirely
-  *                        (the anti-join alone is cheaper). The sketch is
+  *                        (the store probe alone is cheaper). The sketch is
   *                        built lazily from the FULL visited set the first
   *                        time this threshold is crossed (and on resume), then
   *                        maintained with per-epoch deltas — so it always
@@ -59,25 +50,16 @@ import graft.url.urlfns._
   *                        cumulative O(total-crawled) seen set, probe cost
   *                        tracks the CANDIDATES (BASELINE.md's "dedup is
   *                        bucket-local" accounting). The SUPPRESSED set rides
-  *                        a second store under the same contract (url-keyed
-  *                        epoch deltas, aligned probes), so robots crawls
-  *                        stop paying two O(cumulative-suppressed) anti-join
-  *                        shuffles per epoch. "anti": the plain `left_anti`
-  *                        joins against the visited/suppressed tables (the
-  *                        differential-test reference path); it builds no
-  *                        sketch, writes no store deltas, and so clears both
-  *                        stores at run start.
-  * @param seenStoreBuckets url-hash buckets for the seen/suppressed shard
-  *                        stores; 0 ⇒ the session's shuffle-partition count
-  *                        (`spark.sql.shuffle.partitions`). A store probe
-  *                        repartitions its frame by url into this many
-  *                        partitions; candidates leave their groupBy/distinct
-  *                        exchange already url-partitioned into the
-  *                        shuffle-partition count, so at the default the
-  *                        planner drops that repartition and the probes add no
-  *                        exchange (any other count: one). Size so one
-  *                        shard (total-seen × ~60 B / buckets) fits task
-  *                        memory for the bulk-probe path (2^14 at 10^10).
+  *                        a second store under the same contract, so
+  *                        `disallowed − suppressed-so-far` is a probe too. Both
+  *                        stores have one bucket per shuffle partition, so
+  *                        the candidates' own url exchange already co-locates
+  *                        them and the probe adds no exchange; a resume under
+  *                        another shuffle-partition count rebuilds them from
+  *                        parquet. "anti": the plain `left_anti` joins against
+  *                        the visited/suppressed tables (the differential-test
+  *                        reference path); it builds no sketch, writes no
+  *                        store deltas, and so clears both stores at run start.
   * @param seenCompactEvery every this many epochs, fold each bucket's seen
   *                        delta shards into one base file (DRUM-style merge;
   *                        probe cost stops growing with epoch count;
@@ -93,26 +75,29 @@ import graft.url.urlfns._
   *                        ≤ 0 disables.
   * @param linksCompactMinRows no compaction below this row count (small
   *                        crawls never pay the rewrite).
+  * @param broadcastMaxRows broadcast cap, in rows, for the robots table (in
+  *                        the robots gate and the crawl-delay budget join)
+  *                        and for the epoch's fetch keys; above it each join
+  *                        is shuffled into `numPartitions` partitions
+  * @param depthPriority   O-9 priority = discovery depth (deferred older URLs
+  *                        outrank newly discovered ones); false ⇒ constant
+  *                        priority, the reference's lexicographic order
+  * @param maxEpochs       run only epochs below this index; a later run
+  *                        resumes from there
   */
 final case class CrawlConfig(
     domain: String,
     budget: Option[Int] = None,
     numPartitions: Int = 32,
-    saltBuckets: Int = 16,
-    saltMinRows: Long = 100000L,
-    bloomFpp: Double = 0.01,
     bloomMinSeen: Long = 100000L,
     bloomExpectedTotal: Long = 10000000L,
     sketchKind: String = "bloom",
     seenDedup: String = "bucketlocal",
-    seenStoreBuckets: Int = 0,
     seenCompactEvery: Int = 64,
     linksCompactFactor: Double = 3.0,
     linksCompactMinRows: Long = 1000000L,
-    broadcastFetchMax: Long = 100000L,
-    robotsBroadcastMax: Long = 100000L,
+    broadcastMaxRows: Long = 100000L,
     depthPriority: Boolean = false,
-    crawlDelayWindowSec: Double = 60.0,
     maxEpochs: Int = Int.MaxValue)
 
 final case class CrawlResult(
@@ -163,6 +148,21 @@ final case class CrawlResult(
 object CrawlEngine {
   /** Broadcast cap for the seen sketch: a larger one is never built. */
   private val SketchMaxBytes = 256L << 20
+  /** Seen-sketch false-positive rate. */
+  private val BloomFpp = 0.01
+  /** Pre-aggregation salt buckets of the per-host budget window (hot-host
+    * skew mitigation, SURVEY.md §4.3).
+    */
+  private val SaltBuckets = 16
+  /** At or below this frontier size the budget window runs single-phase:
+    * one row_number per host. A frontier this small cannot skew a window
+    * shuffle, and the salted path costs a second window shuffle + cache per
+    * epoch. The fetch/defer sets are identical either way (the salted
+    * phase-1 top-K is a superset of the exact per-host top-K).
+    */
+  private val SaltMinRows = 100000L
+  /** Politeness window per epoch, seconds (the oracle's EPOCH_WINDOW_SEC). */
+  private val CrawlDelayWindowSec = 60.0
 
   /** Python-str `<` = Unicode code-point order (crawler.py:94's sort). Spark
     * string sorts are already code-point order (UTF8_BINARY = UTF-8 byte
@@ -193,7 +193,7 @@ object CrawlEngine {
   *              → ExtractHrefs → explode → UrlResolve → scheme filter → CleanUrl
   *              → links delta (anti-join links)
   *              → in-domain filter → robots gate (broadcast)
-  *              → ∪ deferred → sketch-pruned seen + suppressed store filter
+  *              → ∪ deferred → sketch-pruned seen-store filter
   *              → frontier(e+1); snapshot commit
   *
   * State (visited / links / suppressed) is append-only parquet deltas under
@@ -262,7 +262,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         frontier.withColumn("__b", lit(config.budget.get.toLong))
       case Some(db) =>
         val joined = frontier.join(
-          if (robotsCount <= config.robotsBroadcastMax) broadcast(db)
+          if (robotsCount <= config.broadcastMaxRows) broadcast(db)
           else db.repartition(P, col("host")),
           Seq("host"), "left")
         val delayCap = coalesce(col("delay_budget"), lit(Long.MaxValue))
@@ -270,12 +270,8 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           .map(cb => least(delayCap, lit(cb.toLong))).getOrElse(delayCap))
           .drop("delay_budget")
     }
-    if (frontierCount <= config.saltMinRows) {
-      // single-phase: one exact per-host ranking. A frontier this small
-      // cannot skew a window shuffle; the salted second phase would cost an
-      // extra window shuffle + cache per epoch for nothing. The fetch/defer
-      // sets are IDENTICAL to the salted path's (exact per-host top-K by
-      // (priority, url) either way).
+    if (frontierCount <= CrawlEngine.SaltMinRows) {
+      // single-phase: one exact per-host ranking by (priority, url)
       val r = withB.withColumn("r",
         row_number().over(Window.partitionBy("host").orderBy("priority", "url")))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -284,7 +280,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       return (fetchNow, defer, Seq(r))
     }
     val salted = withB.withColumn(
-      "salt", pmod(xxhash64(col("url")), lit(config.saltBuckets)))
+      "salt", pmod(xxhash64(col("url")), lit(CrawlEngine.SaltBuckets)))
     val r1 = salted.withColumn("r1",
       row_number().over(Window.partitionBy("host", "salt").orderBy("priority", "url")))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -332,19 +328,25 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     require(config.seenDedup == "bucketlocal" || config.seenDedup == "anti",
       s"unknown seenDedup '${config.seenDedup}' (bucketlocal|anti)")
     val useSeenStore = config.seenDedup == "bucketlocal"
-    // bucket count matches the session's shuffle partitioning by default, so
-    // the store probes' repartition matches the candidates' own url exchange
-    // and the planner drops it
-    val storeBuckets =
-      if (config.seenStoreBuckets > 0) config.seenStoreBuckets
-      else spark.sessionState.conf.numShufflePartitions
+    // one bucket per shuffle partition: the store probes' repartition then
+    // matches the candidates' own url exchange and the planner drops it
+    val storeBuckets = spark.sessionState.conf.numShufflePartitions
     val seenStore = new graft.sketch.SeenUrlStore(s"$warehouse/seenstore", storeBuckets)
-    // the suppressed set rides a second store under the same contract: its
-    // two per-epoch consumers (newSuppressed − suppressedSoFar and the
-    // frontier subtraction) were the last O(cumulative-state) anti-join
-    // shuffles left in the epoch loop
+    // the suppressed set rides a second store under the same contract, so
+    // disallowed − suppressed-so-far is a probe, not an O(cumulative-state)
+    // anti-join shuffle
     val suppressedStore =
       new graft.sketch.SeenUrlStore(s"$warehouse/suppressedstore", storeBuckets)
+    // no snapshot ⇒ any store left in the warehouse belongs to an older
+    // crawl (maybe under another bucket count); an anti run writes no store
+    // deltas, so stores it left in place would look valid to a later
+    // bucket-local resume on another timeline: both cases start them empty
+    val latest = store.latest()
+    if (latest.isEmpty || !useSeenStore) {
+      val hconf = spark.sparkContext.hadoopConfiguration
+      seenStore.clear(hconf)
+      suppressedStore.clear(hconf)
+    }
     // url-only robots existence probe: parsing robots needs the html column,
     // and a predicate on url cannot row-group-prune an endsWith match — so a
     // corpus with NO robots.txt files would pay a full url+html scan just to
@@ -377,8 +379,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     // `nan > 0` is False (no cap); +inf passes both and caps at 1.
     // Both run-start probes below only READ the materialized robots cache
     // and are independent — run them concurrently (guide §2.6), so a robots
-    // crawl's setup pays max(two jobs), not their sum.
-    val (delayBudgets, collectedRules): (Option[DataFrame],
+    // crawl's setup pays max(two jobs), not their sum. Seed rules are needed
+    // only to bootstrap: a resumed run skips that job.
+    val (delayBudgets, seedRules): (Option[DataFrame],
         Map[String, Seq[graft.robots.Robots.Rule]]) =
       if (!hasRobots) (None, Map.empty)
       else {
@@ -389,44 +392,31 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           val db = robots
             .filter(col("crawl_delay") > 0.0 && !isnan(col("crawl_delay")))
             .select(col("host"),
-              crawl_delay_budget(col("crawl_delay"), config.crawlDelayWindowSec)
+              crawl_delay_budget(col("crawl_delay"), CrawlEngine.CrawlDelayWindowSec)
                 .as("delay_budget"))
             .persist(StorageLevel.MEMORY_AND_DISK)
           if (db.count() == 0) { db.unpersist(); None } else Some(db)
         }
         // Seed gating needs rules only for the SEED hosts — semi-join before
         // collecting, so a 10^8-host robots table never reaches the driver.
-        val rulesF = Future {
-          val seedHosts = seedUrls.map(graft.robots.Robots.hostKey).distinct.toDF("host")
-          robots.join(broadcast(seedHosts), Seq("host"), "left_semi")
-            .select("host", "prefixes", "allows")
-            .as[(String, Array[String], Array[Boolean])].collect()
-            .map { case (h, ps, as) =>
-              h -> ps.zip(as).map { case (p, a) => graft.robots.Robots.Rule(p, a) }.toSeq
-            }.toMap
-        }
+        val rulesF =
+          if (latest.nonEmpty) Future.successful(Map.empty[String, Seq[graft.robots.Robots.Rule]])
+          else Future {
+            val seedHosts = seedUrls.map(graft.robots.Robots.hostKey).distinct.toDF("host")
+            robots.join(broadcast(seedHosts), Seq("host"), "left_semi")
+              .select("host", "prefixes", "allows")
+              .as[(String, Array[String], Array[Boolean])].collect()
+              .map { case (h, ps, as) =>
+                h -> ps.zip(as).map { case (p, a) => graft.robots.Robots.Rule(p, a) }.toSeq
+              }.toMap
+          }
         (Await.result(dbF, Duration.Inf), Await.result(rulesF, Duration.Inf))
       }
-    def seedAllowed(u: String): Boolean =
-      graft.robots.Robots.allowed(u,
-        collectedRules.getOrElse(graft.robots.Robots.hostKey(u), Nil))
-    val (allowedSeeds, blockedSeeds) =
-      seedUrls.distinct.sorted(CrawlEngine.codePointOrdering).partition(seedAllowed)
 
     var snapshot: Snapshot = null
     var frontier: DataFrame = null
     var epoch = 0
 
-    // no snapshot ⇒ any store left in the warehouse belongs to an older
-    // crawl (maybe under another bucket count); an anti run writes no store
-    // deltas, so stores it left in place would look valid to a later
-    // bucket-local resume on another timeline: both cases start them empty
-    val latest = store.latest()
-    if (latest.isEmpty || !useSeenStore) {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      seenStore.clear(hconf)
-      suppressedStore.clear(hconf)
-    }
     latest match {
       case Some(s) =>
         snapshot = s
@@ -457,6 +447,10 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           syncStore(suppressedStore, "suppressed")
         }
       case None =>
+        val (allowedSeeds, blockedSeeds) = seedUrls.distinct
+          .sorted(CrawlEngine.codePointOrdering)
+          .partition(u => graft.robots.Robots.allowed(u,
+            seedRules.getOrElse(graft.robots.Robots.hostKey(u), Nil)))
         val seedDf = allowedSeeds
           .map(u => (u, graft.robots.Robots.hostKey(u), 0L))
           .toDF("url", "host", "priority")
@@ -514,7 +508,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     val useCuckoo = config.sketchKind == "cuckoo"
     def sketchFits(capacity: Long): Boolean = CrawlEngine.SketchMaxBytes >=
       (if (useCuckoo) CuckooSketch.bytesFor(capacity)
-      else BloomSketch.sizing(capacity, config.bloomFpp)._1 / 8)
+      else BloomSketch.sizing(capacity, CrawlEngine.BloomFpp)._1 / 8)
     var seenSketch: UrlSketch = null // null ⇔ inactive
     // sketch capacity — grows by rebuild when a bloom crawl outgrows the
     // configured expectation (see the resize branch below)
@@ -525,7 +519,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       val rdd0 = urls.select("url").as[String].rdd
       if (seenSketch == null) seenSketch =
         if (useCuckoo) new SeenSketch(sketchCapacity)
-        else BloomSketch.forExpected(sketchCapacity, config.bloomFpp)
+        else BloomSketch.forExpected(sketchCapacity, CrawlEngine.BloomFpp)
       // a saturating cuckoo merge degrades the sketch to always-maybe (every
       // row then takes the authoritative check) — never a false negative
       seenSketch.addAll(if (rdd0.getNumPartitions > 8) rdd0.coalesce(8) else rdd0)
@@ -554,7 +548,6 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         tLast = now
       }
       val visitedSoFar = store.readTable(snapshot, "visited")
-      val suppressedSoFar = store.readTable(snapshot, "suppressed")
       val visitedRows = snapshot.tables("visited").totalRows
 
       // 1. politeness gate. The frontier parquet was hash-distributed at
@@ -608,7 +601,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       }
       lap("bucket_prune")
       val fetchKeys =
-        if (frontierCount <= config.broadcastFetchMax)
+        if (frontierCount <= config.broadcastMaxRows)
           broadcast(fetchNow.select("url"))
         else fetchNow.select("url").repartition(P, col("url"))
       val fetched = pagesForEpoch.select("url", "html").join(fetchKeys, Seq("url"))
@@ -650,7 +643,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
             // size-gated: broadcast only a small rule table; a web-scale one
             // (10^8 hosts) falls back to a shuffled equi-join on host
             .join(
-              if (robotsCount <= config.robotsBroadcastMax) broadcast(robots)
+              if (robotsCount <= config.broadcastMaxRows) broadcast(robots)
               else robots.repartition(P, col("host")),
               Seq("host"), "left")
             .withColumn("allowed",
@@ -658,12 +651,11 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
             .persist(StorageLevel.MEMORY_AND_DISK)
         else inDom.withColumn("allowed", lit(true))
       lap("gate_build")
-      // the suppressed write overlaps the candidates chain below (the same
-      // action-thread pattern as visited/links: both consumers share the
-      // persisted `gated` cache, and the frontier chain — the only reader of
-      // this epoch's suppressed delta — awaits the future before it
-      // subtracts). Synchronous, this cost ~0.7 s/epoch on robots crawls.
-      // Bucket-local path: `disallowed − suppressedSoFar` is a shard probe
+      // the suppressed write overlaps the candidates chain and the frontier
+      // write below (the same action-thread pattern as visited/links: both
+      // consumers share the persisted `gated` cache, and only the commit
+      // awaits it). Synchronous, this cost ~0.7 s/epoch on robots crawls.
+      // Bucket-local path: `disallowed − suppressed-so-far` is a shard probe
       // against the suppressed store (upToEpoch = e−1), not a left_anti over
       // the CUMULATIVE suppressed set — the probe cost tracks this epoch's
       // disallowed rows, not the crawl's age. No distinct is needed on the
@@ -688,9 +680,8 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
             newSuppressed.unpersist()
             ss
           } else {
-            val newSuppressed = disallowed
-              .join(suppressedSoFar.select("url"), Seq("url"), "left_anti")
-              .distinct()
+            val soFar = store.readTable(snapshot, "suppressed").select("url")
+            val newSuppressed = disallowed.join(soFar, Seq("url"), "left_anti").distinct()
             store.writeDelta("suppressed", epoch, newSuppressed,
               Some(snapshot.tables("suppressed")))
           }
@@ -698,7 +689,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           snapshot.tables("suppressed").copy(deltaRows = 0L))
       lap("suppressed_write_launch")
 
-      // 6. next frontier = (allowed ∪ deferred) − visited(≤e) − suppressed(≤e).
+      // 6. next frontier = (allowed ∪ deferred) − visited(≤e).
       // O-9 priority: discovery depth when depthPriority (deferred older URLs
       // outrank newly discovered ones in the (priority, url) schedule);
       // constant 0 in trace-match mode (reference FIFO ⇒ exact). A URL both
@@ -766,17 +757,17 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         if (candidatesIn > 0 && seenSketch != null)
           spark.sparkContext.broadcast[UrlSketch](seenSketch)
         else null
-      val sState = Await.result(sStateF, scala.concurrent.duration.Duration.Inf)
-      lap("suppressed_wait")
-      // next = candidates − seen(≤ e) − suppressed(≤ e). Bucket-local: one
+      // next = candidates − seen(≤ e). No candidate is suppressed: robots
+      // rules are parsed once per run, and a candidate is a link that passed
+      // the same per-host longest-match gate (or a deferred row, which came
+      // in that way or as an allowed seed). Bucket-local: one
       // repartition(storeBuckets, url) — dropped by the planner when the
       // candidates' own url exchange already matches it — and ONE filter.
-      // The broadcast sketch prunes (a definite miss skips the store probe),
-      // the seen-store probe is authoritative (this epoch's delta covers
+      // The broadcast sketch prunes (a definite miss skips the store probe)
+      // and the seen-store probe is authoritative (this epoch's delta covers
       // fetchNow, so probing up to `epoch` equals the visited∪fetchNow
-      // anti-join), and the suppressed probe sees only the rows that survive
-      // it. `anti` is the plain left_anti reference on both sets. The
-      // fixpoint epoch (0 candidates) writes the empty delta without either.
+      // anti-join). `anti` is the plain left_anti reference. The fixpoint
+      // epoch (0 candidates) writes the empty delta without either.
       val next =
         if (candidatesIn == 0) candidates
         else if (useSeenStore) {
@@ -784,17 +775,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           Await.result(seenStoreF, scala.concurrent.duration.Duration.Inf)
           val url = col("url")
           val seen = seenStore.seen(url, epoch)
-          val unseen = !Option(sketchBcast).fold(seen)(b => might_contain(b, url) && seen)
-          candidates.repartition(storeBuckets, url).filter(
-            if (sState.totalRows > 0) unseen && !suppressedStore.seen(url, epoch)
-            else unseen)
-        } else {
-          val deduped = candidates.join(visitedAll, Seq("url"), "left_anti")
-          if (sState.totalRows > 0)
-            deduped.join(spark.read.parquet(sState.files: _*).select("url"),
-              Seq("url"), "left_anti")
-          else deduped
-        }
+          candidates.repartition(storeBuckets, url)
+            .filter(!Option(sketchBcast).fold(seen)(b => might_contain(b, url) && seen))
+        } else candidates.join(visitedAll, Seq("url"), "left_anti")
       dumpPlan(s"e${epoch}_candidates", candidates)
       if (candidatesIn > 0) dumpPlan(s"e${epoch}_frontier", next)
       val fState = store.writeDelta("frontier", epoch + 1, next,
@@ -807,6 +790,8 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       lap("visited_wait")
       val lStateRaw = Await.result(lStateF, scala.concurrent.duration.Duration.Inf)
       lap("links_wait")
+      val sState = Await.result(sStateF, scala.concurrent.duration.Duration.Inf)
+      lap("suppressed_wait")
       // threshold-triggered links compaction (amortized: only when the delta
       // pile outgrows the last compacted size by linksCompactFactor)
       val doCompact = config.linksCompactFactor > 0 && linksBaseRows > 0 &&

@@ -67,10 +67,12 @@ import graft.util.SerializableHadoopConf
   * files. An anti-join run writes no deltas, so the engine clears both
   * stores at its start: a later bucket-local resume finds no meta.
   *
-  * Sizing: shard bytes ≈ total-seen × ~60 B / numBuckets — pick numBuckets
-  * so a shard fits task memory for the bulk path (2^14 buckets ≈ 40 MB/shard
-  * at 10^10 urls; sorting cost at write time is per-epoch-delta only).
-  * Compaction streams: memory is O(1) in the bucket's accumulated size.
+  * Sizing: shard bytes ≈ total-seen × ~60 B / numBuckets, and a shard must
+  * fit task memory for the bulk path. The engine's stores have one bucket
+  * per shuffle partition, so to size the store, size
+  * `spark.sql.shuffle.partitions` (2^14 ≈ 40 MB/shard at 10^10 urls;
+  * sorting cost at write time is per-epoch-delta only). Compaction streams:
+  * memory is O(1) in the bucket's accumulated size.
   */
 final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializable {
   require(numBuckets > 0)

@@ -83,23 +83,7 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
       parent: Option[TableState], fullRewrite: Boolean = false): TableState = {
     val dir = new Path(new Path(root, table), s"epoch=$epoch")
     delta.write.mode("overwrite").parquet(dir.toString)
-    val f = fs(dir)
-    val paths = f.listStatus(dir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(_.getPath.toString)
-      .sorted
-    // per-file row counts from parquet footers, driver-side — no Spark job;
-    // one file = one write partition, so this IS the per-partition lineage.
-    // Footers are read concurrently: ~32 serial opens cost 100-200 ms per
-    // write, a visible slice of small-epoch latency.
-    val dataFiles = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(
-        Future.sequence(paths.map(fp => Future {
-          DataFile(fp, parquetRowCount(new Path(fp), hconf))
-        })), scala.concurrent.duration.Duration.Inf)
-    }
+    val dataFiles = partFiles(dir)
     val deltaRows = dataFiles.map(_.rows).sum
     val parentFiles = if (fullRewrite) Nil else parent.map(_.dataFiles).getOrElse(Nil)
     val parentRows = if (fullRewrite) 0L else parent.map(_.totalRows).getOrElse(0L)
@@ -122,25 +106,8 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     */
   def compactDistinct(table: String, epoch: Int, st: TableState): TableState = {
     val dir = new Path(new Path(root, table), s"compact=$epoch")
-    val reader =
-      if (st.schemaJson == null) spark.read
-      else spark.read.schema(org.apache.spark.sql.types.DataType
-        .fromJson(st.schemaJson).asInstanceOf[org.apache.spark.sql.types.StructType])
-    reader.parquet(st.files: _*).distinct()
-      .write.mode("overwrite").parquet(dir.toString)
-    val f = fs(dir)
-    val paths = f.listStatus(dir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .map(_.getPath.toString)
-      .sorted
-    val dataFiles = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(
-        Future.sequence(paths.map(fp => Future {
-          DataFile(fp, parquetRowCount(new Path(fp), hconf))
-        })), scala.concurrent.duration.Duration.Inf)
-    }
+    read(st).distinct().write.mode("overwrite").parquet(dir.toString)
+    val dataFiles = partFiles(dir)
     TableState(dataFiles, st.deltaRows, dataFiles.map(_.rows).sum, st.schemaJson)
   }
 
@@ -151,11 +118,32 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     val st = s.tables(table)
     if (st.files.isEmpty)
       throw new IllegalStateException(s"table $table has no files in snapshot ${s.snapshotId}")
-    val reader =
-      if (st.schemaJson == null) spark.read
-      else spark.read.schema(org.apache.spark.sql.types.DataType
-        .fromJson(st.schemaJson).asInstanceOf[org.apache.spark.sql.types.StructType])
-    reader.parquet(st.files: _*)
+    read(st)
+  }
+
+  /** The state's files, read with its manifest schema when recorded. */
+  private def read(st: TableState): DataFrame =
+    (if (st.schemaJson == null) spark.read
+    else spark.read.schema(org.apache.spark.sql.types.DataType
+      .fromJson(st.schemaJson).asInstanceOf[org.apache.spark.sql.types.StructType]))
+      .parquet(st.files: _*)
+
+  /** The part files just written under `dir`, name-sorted, each with its
+    * row count from the parquet footer — driver-side, no Spark job; one file
+    * = one write partition, so this IS the per-partition lineage. Footers
+    * are read concurrently: ~32 serial opens cost 100-200 ms per write, a
+    * visible slice of small-epoch latency.
+    */
+  private def partFiles(dir: Path): Seq[DataFile] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val paths = fs(dir).listStatus(dir).toSeq
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+      .map(_.getPath.toString)
+      .sorted
+    Await.result(Future.sequence(paths.map(fp => Future {
+      DataFile(fp, parquetRowCount(new Path(fp), hconf))
+    })), scala.concurrent.duration.Duration.Inf)
   }
 
   def readTableOrEmpty(s: Snapshot, table: String, schemaOf: DataFrame): DataFrame = {

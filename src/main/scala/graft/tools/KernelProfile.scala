@@ -36,7 +36,7 @@ object KernelProfile {
     val t0 = System.nanoTime()
     val bmax = sys.env.getOrElse("GRAFT_BCAST_MAX", "4000000").toLong
     val r = new CrawlEngine(spark, CrawlConfig(domain, numPartitions = cpus.toInt,
-      bloomMinSeen = 50000L, broadcastFetchMax = bmax,
+      bloomMinSeen = 50000L, broadcastMaxRows = bmax,
       bloomExpectedTotal = 4L * n)).run(pages, s"https://$domain", wh)
     val sec = (System.nanoTime() - t0) / 1e9
     val store = new SnapshotStore(spark, wh)

@@ -214,16 +214,18 @@ class OperatorSpec extends AnyFunSuite {
   test("jpeg/gif/tiff/bmp rows take the real decode path, not the stub") {
     import graft.multimodal.{JdkCodec, MediaOps}
     // a solid mid-gray frame in every codec: real decode pools every feature
-    // to ~128/255 (JPEG is lossy but flat fields survive near-exactly); the
-    // stub would emit pseudo-random values in (-1,1) — unmistakably different
+    // to ~128/255 (JPEG is lossy but flat fields survive near-exactly)
     val rows = Seq("jpeg", "gif", "tiff", "bmp").zipWithIndex.map { case (c, i) =>
       MediaOps.MediaRow(i.toLong,
         JdkCodec.encodeImage(c, 48, 32, (_, _) => 0x808080),
         MediaOps.MediaMeta("image", 48, 32, 0L, c))
     }
-    val feats = MediaOps.extractFeatures(spark.createDataset(rows),
+    // a codec with no decoder here yields no row (no fabricated features)
+    val h264 = MediaOps.MediaRow(99L, Array.fill[Byte](64)(7),
+      MediaOps.MediaMeta("video", 48, 32, 2000L, "h264"))
+    val feats = MediaOps.extractFeatures(spark.createDataset(rows :+ h264),
       targetW = 8, targetH = 8, dim = 4).collect().sortBy(_.doc_id)
-    assert(feats.length == 4)
+    assert(feats.map(_.doc_id).toSeq == Seq(0L, 1L, 2L, 3L))
     feats.foreach { f =>
       f.features.foreach(v =>
         assert(math.abs(v - 128f / 255f) < 3f / 255f, s"doc ${f.doc_id}: $v"))

@@ -41,6 +41,16 @@ class BloomModeSpec extends AnyFunSuite {
       r.links.select("url").orderBy("url").as[String].collect().toSeq)
   }
 
+  /** Runs `body` with `spark.sql.shuffle.partitions` — and so the engine's
+    * store bucket count — set to `n`.
+    */
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toLong)
+    try body finally spark.conf.set(key, prev)
+  }
+
   private lazy val plain = crawl(CrawlConfig(domain, numPartitions = 4,
     bloomMinSeen = Long.MaxValue, // sketch never activates…
     seenDedup = "anti")) // …and the authoritative check is the left_anti join
@@ -83,16 +93,20 @@ class BloomModeSpec extends AnyFunSuite {
 
   test("resume with a changed seen-store bucket count rebuilds the index " +
     "from the authoritative parquet (trace exact)") {
-    // the store's _meta.json records its bucket count; a resume under a
-    // different count must NOT trust the mis-bucketed shards — the gate
-    // clears and rebuilds from visited, and the crawl stays exact
+    // the store's _meta.json records its bucket count (= the session's
+    // shuffle partitions); a resume under a different count must NOT trust
+    // the mis-bucketed shards — the gate clears and rebuilds from visited,
+    // and the crawl stays exact
     val wh = Files.createTempDirectory("graft-bucketchange-").toString
-    new CrawlEngine(spark, CrawlConfig(domain, numPartitions = 4,
-      seenStoreBuckets = 3, maxEpochs = 8))
-      .run(cyclicPages, s"https://$domain/p/0", wh)
+    withShufflePartitions(3) {
+      new CrawlEngine(spark, CrawlConfig(domain, numPartitions = 4, maxEpochs = 8))
+        .run(cyclicPages, s"https://$domain/p/0", wh)
+    }
     new graft.snapshot.SnapshotStore(spark, wh).truncateAfter(5)
-    val resumed = new CrawlEngine(spark, CrawlConfig(domain, numPartitions = 4,
-      seenStoreBuckets = 7)).run(cyclicPages, s"https://$domain/p/0", wh)
+    val resumed = withShufflePartitions(7) {
+      new CrawlEngine(spark, CrawlConfig(domain, numPartitions = 4))
+        .run(cyclicPages, s"https://$domain/p/0", wh)
+    }
     val got = (resumed.trace.select("epoch", "url").as[(Int, String)].collect().toSeq,
       resumed.links.select("url").orderBy("url").as[String].collect().toSeq)
     assert(got == plain)
@@ -167,17 +181,18 @@ class BloomModeSpec extends AnyFunSuite {
     // urls this timeline never fetched as seen and drop them from the crawl
     val pages = graft.synth.SiteGen.pages(spark, domain, nPages = 120, hosts = 4,
       outDegree = 6, numPartitions = 4).persist()
-    def resumed(seenDedup: String): (Seq[(Int, String)], Seq[String]) = {
-      val wh = Files.createTempDirectory("graft-truncresume-").toString
-      def cfg(budget: Int) = CrawlConfig(domain, budget = Some(budget),
-        numPartitions = 4, seenDedup = seenDedup, seenStoreBuckets = 16)
-      new CrawlEngine(spark, cfg(3).copy(maxEpochs = 8))
-        .run(pages, s"https://$domain", wh)
-      new graft.snapshot.SnapshotStore(spark, wh).truncateAfter(3)
-      val r = new CrawlEngine(spark, cfg(2)).run(pages, s"https://$domain", wh)
-      (r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq,
-        r.links.select("url").orderBy("url").as[String].collect().toSeq)
-    }
+    def resumed(seenDedup: String): (Seq[(Int, String)], Seq[String]) =
+      withShufflePartitions(16) {
+        val wh = Files.createTempDirectory("graft-truncresume-").toString
+        def cfg(budget: Int) = CrawlConfig(domain, budget = Some(budget),
+          numPartitions = 4, seenDedup = seenDedup)
+        new CrawlEngine(spark, cfg(3).copy(maxEpochs = 8))
+          .run(pages, s"https://$domain", wh)
+        new graft.snapshot.SnapshotStore(spark, wh).truncateAfter(3)
+        val r = new CrawlEngine(spark, cfg(2)).run(pages, s"https://$domain", wh)
+        (r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq,
+          r.links.select("url").orderBy("url").as[String].collect().toSeq)
+      }
     val anti = resumed("anti")
     assert(anti._1.map(_._1).max >= 8, "resumed crawl too short to reach the stale epochs")
     assert(resumed("bucketlocal") == anti)

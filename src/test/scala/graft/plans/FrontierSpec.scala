@@ -105,13 +105,61 @@ class FrontierSpec extends AnyFunSuite {
     checkScenario("budget2")
   }
 
+  test("salted budget window + shuffled fetch join: a 100 001-url frontier " +
+    "fetches the exact per-host top 2") {
+    // above the single-phase cutoff and the broadcast cap (both 10^5 rows),
+    // so the budget window runs salted two-phase and the fetch keys shuffle
+    val d = "example.com"
+    val seeds = (0 to 100000).map(i => s"https://h${i % 8}.$d/p/$i")
+    val pages = Seq((s"https://$d", new java.sql.Timestamp(1700000000000L),
+      "<p>x</p>".getBytes(UTF_8), "", "en")).toDF("url", "warc_ts", "html", "text", "lang")
+    val wh = Files.createTempDirectory("graft-salted-").toString
+    val r = new CrawlEngine(spark, CrawlConfig(d, budget = Some(2),
+      numPartitions = 4, maxEpochs = 1)).run(pages, seeds, wh)
+    val top2 = seeds.groupBy(u => u.split('/')(2)).values.flatMap(_.sorted.take(2)).toSet
+    assert(top2.size == 16)
+    val visited = r.visited.as[(Int, String)].collect().toSeq
+    assert(visited.map(_._1).toSet == Set(0) && visited.map(_._2).toSet == top2)
+    assert(visited.size == 16, "duplicate visits")
+    val next = new graft.snapshot.SnapshotStore(spark, wh)
+      .readTable(r.lastSnapshot, "frontier").select("url", "priority").as[(String, Long)]
+      .collect().toSeq
+    assert(next.size == seeds.size - 16 && next.forall(_._2 == 0L))
+    assert(next.map(_._1).toSet == seeds.toSet -- top2)
+  }
+
   test("robots: disallow/allow longest-match gating") {
     checkScenario("robots")
     // no budget + shuffled robots join: the store probes see host-partitioned
-    // candidates and stores bucketed unlike the shuffle partitions, so both
-    // must route their rows — the crawl stays oracle-exact
-    checkScenario("robots",
-      _.copy(robotsBroadcastMax = 0L, seenStoreBuckets = 3))
+    // candidates, so both must route their rows — the crawl stays
+    // oracle-exact
+    checkScenario("robots", _.copy(broadcastMaxRows = 0L))
+  }
+
+  test("a robots-blocked seed that a fetched page links to is never visited " +
+    "and suppressed exactly once (bucketlocal ≡ anti)") {
+    val d = "example.com"
+    val blocked = s"https://$d/private/a"
+    def b(html: String): Array[Byte] = html.getBytes(UTF_8)
+    val pages = Seq(
+      s"https://$d/robots.txt" -> b("User-agent: *\nDisallow: /private\n"),
+      s"https://$d" -> b("""<a href="/private/a">x</a><a href="/pub">y</a>"""),
+      s"https://$d/pub" -> b(s"""<a href="$blocked">x</a>"""),
+      blocked -> b("<p>never fetched</p>"))
+      .map { case (u, h) => (u, new java.sql.Timestamp(1700000000000L), h, "", "en") }
+      .toDF("url", "warc_ts", "html", "text", "lang")
+    def crawl(seenDedup: String): (Seq[(Int, String)], Seq[String]) = {
+      val wh = Files.createTempDirectory("graft-blockedseed-").toString
+      val r = new CrawlEngine(spark, CrawlConfig(d, numPartitions = 4,
+        seenDedup = seenDedup)).run(pages, Seq(s"https://$d", blocked), wh)
+      (r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq,
+        new graft.snapshot.SnapshotStore(spark, wh).readTable(r.lastSnapshot, "suppressed")
+          .select("url").as[String].collect().toSeq)
+    }
+    val (trace, suppressed) = crawl("bucketlocal")
+    assert(trace == Seq((0, s"https://$d"), (1, s"https://$d/pub")), trace.toString)
+    assert(suppressed == Seq(blocked), suppressed.toString)
+    assert(crawl("anti") == ((trace, suppressed)))
   }
 
   test("combo: budget=1 + per-host robots + subdomains + dead links together") {

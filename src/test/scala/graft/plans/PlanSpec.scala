@@ -161,10 +161,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   /** The engine's dedup chain over persisted distinct candidates, run with
-    * AQE on or off: `repartition(nb, url)` + ONE filter carrying the sketch,
-    * seen-store and suppressed-store predicates. Checks the chain is exact
-    * (seen and suppressed urls are out) and returns the executed plan's
-    * shuffles (cached plans included) and its store filters.
+    * AQE on or off: `repartition(nb, url)` + ONE filter carrying the sketch
+    * and seen-store predicates. Checks the chain is exact (seen urls are
+    * out) and returns the executed plan's shuffles (cached plans included)
+    * and its store filters.
     */
   private def dedupChain(nb: Int, aqe: Boolean) = {
     import java.nio.file.Files
@@ -179,11 +179,9 @@ class PlanSpec extends AnyFunSuite {
       case e: ShuffleExchangeExec => Seq(e)
       case c: InMemoryTableScanExec => shuffles(c.relation.cachedPlan)
     }.flatten.distinct
-    def store(tag: String) = new graft.sketch.SeenUrlStore(
-      Files.createTempDirectory(s"graft-plan-$tag-").toString + "/s", nb)
-    val (seen, suppressed) = (store("seen"), store("suppressed"))
+    val seen = new graft.sketch.SeenUrlStore(
+      Files.createTempDirectory("graft-plan-seen-").toString + "/s", nb)
     seen.writeDelta((0 until 50).map(i => s"https://example.com/d/$i").toDF("url"), 0)
-    suppressed.writeDelta((50 until 60).map(i => s"https://example.com/d/$i").toDF("url"), 0)
     val sketch = graft.sketch.BloomSketch.forExpected(1000, 0.01)
     (0 until 50).foreach(i => sketch.add(s"https://example.com/d/$i"))
     val bcast = spark.sparkContext.broadcast[graft.sketch.UrlSketch](sketch)
@@ -196,8 +194,8 @@ class PlanSpec extends AnyFunSuite {
         .distinct().persist()
       cand.count()
       val url = col("url")
-      val next = cand.repartition(nb, url).filter(
-        !(might_contain(bcast, url) && seen.seen(url, 0)) && !suppressed.seen(url, 0))
+      val next = cand.repartition(nb, url)
+        .filter(!(might_contain(bcast, url) && seen.seen(url, 0)))
       val out = next.as[String].collect().toSet
       val plan = next.queryExecution.executedPlan
       val storeFilters = helper.collect(plan) {
@@ -205,7 +203,7 @@ class PlanSpec extends AnyFunSuite {
       }
       cand.unpersist()
       assert(out.nonEmpty &&
-        !out.exists(u => u.stripPrefix("https://example.com/d/").toLong < 60), s"aqe=$aqe")
+        !out.exists(u => u.stripPrefix("https://example.com/d/").toLong < 50), s"aqe=$aqe")
       (shuffles(plan), storeFilters)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
@@ -213,7 +211,7 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("aligned dedup chain: sketch + seen + suppressed in one filter keeps " +
+  test("aligned dedup chain: sketch + seen-store probe in one filter keeps " +
     "ONE shuffle (the distinct's), AQE on and off") {
     val nb = spark.sessionState.conf.numShufflePartitions
     for (aqe <- Seq(false, true)) {

@@ -42,7 +42,7 @@ class RobotsScaleSpec extends AnyFunSuite {
 
     val wh = Files.createTempDirectory("graft-robots10k-").toString
     val r = new CrawlEngine(spark, CrawlConfig("example.com", numPartitions = 4,
-      robotsBroadcastMax = 0L)) // force the shuffled fallback
+      broadcastMaxRows = 0L)) // force the shuffled fallback
       .run(pages, "https://example.com", wh)
     val visited = r.visited.select("url").as[String].collect().toSet
     assert(visited == Set("https://example.com",
@@ -51,7 +51,7 @@ class RobotsScaleSpec extends AnyFunSuite {
 
   test("10^4-host crawl-delay budgets apply via the shuffled join (broadcast forced off)") {
     // every hN host declares Crawl-delay: 60 → 1 fetch/epoch/host; with
-    // robotsBroadcastMax=0 the per-host delay budgets flow through the
+    // broadcastMaxRows=0 the per-host delay budgets flow through the
     // SHUFFLED host join, the 10^8-host regime's path
     val nHosts = 10000
     val robotsBody = "User-agent: *\nCrawl-delay: 60\n"
@@ -73,7 +73,7 @@ class RobotsScaleSpec extends AnyFunSuite {
 
     val wh = Files.createTempDirectory("graft-delay10k-").toString
     val r = new CrawlEngine(spark, CrawlConfig("example.com", numPartitions = 4,
-      robotsBroadcastMax = 0L)) // force the shuffled fallback
+      broadcastMaxRows = 0L)) // force the shuffled fallback
       .run(pages, "https://example.com", wh)
     val trace = r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq
     // h1 drains ONE url per epoch under its 60s delay (no configured budget)

@@ -89,7 +89,7 @@ def host_key(url):
 # ---- robots (RFC 9309-lite, '*' group only) ---------------------------------
 # per-epoch politeness window: a host with crawl-delay d gets at most
 # max(1, floor(EPOCH_WINDOW_SEC / d)) fetches per epoch (min with any
-# configured budget). Mirrored by CrawlConfig.crawlDelayWindowSec.
+# configured budget). Mirrored by CrawlEngine.CrawlDelayWindowSec.
 EPOCH_WINDOW_SEC = 60.0
 
 
