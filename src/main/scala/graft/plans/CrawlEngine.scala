@@ -28,21 +28,22 @@ import graft.url.urlfns._
   *                        maintained with per-epoch deltas — so it always
   *                        covers every visited URL (no-false-negative
   *                        invariant).
-  * @param bloomExpectedTotal seen-sketch design capacity; a bloom crawl that
-  *                        outgrows it triggers an automatic rebuild from the
-  *                        full seen set at 2× the running estimate (FPP is
-  *                        restored; correctness never depended on it — the
-  *                        exact seen check is authoritative). A sketch whose
-  *                        table would exceed 256 MiB (the broadcast cap) is
-  *                        never built, or is dropped at that resize: every
-  *                        candidate then takes the exact store probe, which
-  *                        is already bucket-local at any scale
+  * @param bloomExpectedTotal cap on the seen sketch's first build, otherwise
+  *                        sized at 2× the seen estimate; an outgrown sketch
+  *                        is rebuilt from the full seen set at 2× the running
+  *                        estimate (FPP is restored; correctness never depended
+  *                        on it — the exact seen check is authoritative). A
+  *                        sketch whose table would exceed 256 MiB (the
+  *                        broadcast cap) is never built, or is dropped at that
+  *                        resize: every candidate then takes the exact store
+  *                        probe, which is already bucket-local at any scale
   * @param sketchKind      "bloom" (default) or "cuckoo" — the north_star's
   *                        cuckoo-filter fallback for the URL-seen set
   *                        ([[graft.sketch.SeenSketch]]: deletable membership;
   *                        saturation degrades to always-maybe, never a false
   *                        negative). Both are broadcast
-  *                        [[graft.sketch.UrlSketch]]es behind one probe.
+  *                        [[graft.sketch.UrlSketch]]es behind one probe and
+  *                        one sizing rule (an outgrown cuckoo is rebuilt too).
   * @param seenDedup       "bucketlocal" (default): the authoritative
   *                        candidates−seen check runs against the
   *                        [[graft.sketch.SeenUrlStore]] sorted shard files —
@@ -163,6 +164,22 @@ object CrawlEngine {
   private val SaltMinRows = 100000L
   /** Politeness window per epoch, seconds (the oracle's EPOCH_WINDOW_SEC). */
   private val CrawlDelayWindowSec = 60.0
+
+  /** Capacity of a seen-sketch build covering `seen` urls, or None when its
+    * table would exceed [[SketchMaxBytes]] (no sketch: the exact store probe
+    * takes every candidate). One 2×-headroom rule for bloom and cuckoo: the
+    * first build (`capacity` 0) gets 2 × `seen`, capped at `expectedTotal`;
+    * a rebuild of a sketch the seen set outgrew gets the larger of 2 × `seen`
+    * and 2 × `capacity`.
+    */
+  private[plans] def sketchCapacity(seen: Long, capacity: Long,
+      expectedTotal: Long, cuckoo: Boolean): Option[Long] = {
+    val next = if (capacity == 0) math.min(expectedTotal, 2 * seen)
+      else math.max(2 * seen, 2 * capacity)
+    val bytes = if (cuckoo) CuckooSketch.bytesFor(next)
+      else BloomSketch.sizing(next, BloomFpp)._1 / 8
+    Option.when(bytes <= SketchMaxBytes)(next)
+  }
 
   /** Python-str `<` = Unicode code-point order (crawler.py:94's sort). Spark
     * string sorts are already code-point order (UTF8_BINARY = UTF-8 byte
@@ -501,27 +518,21 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     // the authoritative seen set — no false negatives, so skipping the store
     // probe on a sketch miss is exact. One in-memory sketch (bloom, or the
     // cuckoo fallback): built by per-partition treeAggregate merges
-    // (north_star path), rebroadcast and destroyed per epoch. A sketch above SketchMaxBytes is never built — the
-    // bucket-local exact store then takes every candidate on its own.
+    // (north_star path), sized by CrawlEngine.sketchCapacity, rebroadcast and
+    // destroyed per epoch.
     require(config.sketchKind == "bloom" || config.sketchKind == "cuckoo",
       s"unknown sketchKind '${config.sketchKind}' (bloom|cuckoo)")
     val useCuckoo = config.sketchKind == "cuckoo"
-    def sketchFits(capacity: Long): Boolean = CrawlEngine.SketchMaxBytes >=
-      (if (useCuckoo) CuckooSketch.bytesFor(capacity)
-      else BloomSketch.sizing(capacity, CrawlEngine.BloomFpp)._1 / 8)
     var seenSketch: UrlSketch = null // null ⇔ inactive
-    // sketch capacity — grows by rebuild when a bloom crawl outgrows the
-    // configured expectation (see the resize branch below)
-    var sketchCapacity = config.bloomExpectedTotal
+    // capacity of seenSketch: 0 before the first build, -1 once a build would
+    // exceed the broadcast cap (no sketch for the rest of the run)
+    var sketchCapacity = 0L
     def mergeIntoSketch(urls: DataFrame): Unit = {
       // few, larger leaf tasks: every treeAggregate leaf ships one
-      // full-size sketch, so bound the leaf count rather than the row count
-      val rdd0 = urls.select("url").as[String].rdd
-      if (seenSketch == null) seenSketch =
-        if (useCuckoo) new SeenSketch(sketchCapacity)
-        else BloomSketch.forExpected(sketchCapacity, CrawlEngine.BloomFpp)
-      // a saturating cuckoo merge degrades the sketch to always-maybe (every
+      // full-size sketch, so bound the leaf count rather than the row count.
+      // A saturating cuckoo merge degrades the sketch to always-maybe (every
       // row then takes the authoritative check) — never a false negative
+      val rdd0 = urls.select("url").as[String].rdd
       seenSketch.addAll(if (rdd0.getNumPartitions > 8) rdd0.coalesce(8) else rdd0)
     }
 
@@ -727,27 +738,25 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // the sketch merge's whole decision tree depends only on pre-epoch
       // state (seen estimate, the sketch itself) — never on the candidate
       // count — so it runs on its own action thread OVERLAPPED with the
-      // candidates compute+count below, instead of serializing a
-      // treeAggregate merge of the epoch's fetch between the count
-      // and the frontier write. (The fixpoint epoch now pays one final
-      // small merge the old count-gated form skipped; bloom adds are
-      // idempotent and every non-final epoch stops paying the merge's
-      // wall-clock.) The vars it mutates are read only after the Await. The
-      // sketch only prunes store probes, so an anti run builds none.
+      // candidates compute+count below. The vars it mutates are read only
+      // after the Await. The sketch only prunes store probes, so an anti run
+      // builds none.
       val sketchMergeF: Future[Unit] = if (!useSeenStore) Future.successful(()) else Future {
-        if (seenSketch != null && !useCuckoo && seenCountNow > sketchCapacity) {
-          // outgrown: a bloom at >1× its design load answers maybe for nearly
-          // everything (correct — the exact check is authoritative — but it
-          // stops pruning). Rebuild from the FULL seen set at 2× the current
-          // estimate, restoring the configured FPP — or, past the broadcast
-          // cap, drop it for good (the exact store probe takes every row).
-          // Cuckoo has its own degrade-to-maybe story.
-          sketchCapacity = math.max(seenCountNow * 2, sketchCapacity * 2)
-          seenSketch = null
-          if (sketchFits(sketchCapacity)) mergeIntoSketch(visitedAll)
-        } else if (seenSketch != null) mergeIntoSketch(fetchNow) // maintain full coverage
-        else if (seenCountNow >= config.bloomMinSeen && sketchFits(sketchCapacity))
-          mergeIntoSketch(visitedAll) // first activation: cover ALL seen urls
+        if (seenSketch != null && seenCountNow <= sketchCapacity)
+          mergeIntoSketch(fetchNow) // maintain full coverage
+        else if (seenSketch != null ||
+            (sketchCapacity == 0 && seenCountNow >= config.bloomMinSeen)) {
+          // first activation, or outgrown (a full bloom answers maybe for
+          // nearly everything, a full cuckoo saturates to always-maybe):
+          // build from the FULL seen set — or, past the broadcast cap, build
+          // none for good (the exact store probe takes every row)
+          val next = CrawlEngine.sketchCapacity(seenCountNow, sketchCapacity,
+            config.bloomExpectedTotal, useCuckoo)
+          sketchCapacity = next.getOrElse(-1L)
+          seenSketch = next.map(c => if (useCuckoo) new SeenSketch(c)
+            else BloomSketch.forExpected(c, CrawlEngine.BloomFpp)).orNull
+          if (seenSketch != null) mergeIntoSketch(visitedAll)
+        }
       }
       val candidatesIn = candidates.count()
       lap("candidates_count")
@@ -838,6 +847,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           "candidates_in" -> candidatesIn,
           "next_frontier" -> fState.deltaRows,
           "sketch_capacity" -> (if (seenSketch != null) sketchCapacity else 0L),
+          "sketch_bytes" -> (if (seenSketch != null) seenSketch.bytes else 0L),
           "seen_bucketlocal" -> (if (useSeenStore) 1L else 0L),
           "links_base_rows" -> linksBaseRows,
           "links_compacted" -> (if (doCompact) 1L else 0L),

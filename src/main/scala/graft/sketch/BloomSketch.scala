@@ -13,6 +13,7 @@ package graft.sketch
 final class BloomSketch(val numBits: Long, val numHashes: Int) extends UrlSketch {
   require(numBits > 0 && (numBits & 63) == 0, "numBits must be a positive multiple of 64")
   val words = new Array[Long]((numBits >> 6).toInt)
+  def bytes: Long = numBits >> 3
 
   @inline private def mix64(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
@@ -73,13 +74,6 @@ final class BloomSketch(val numBits: Long, val numHashes: Int) extends UrlSketch
 
   def addAll(urls: org.apache.spark.rdd.RDD[String]): Unit =
     merge(BloomSketch.build(urls, new BloomSketch(numBits, numHashes)))
-
-  def approxBitLoad: Double = {
-    var set = 0L
-    var i = 0
-    while (i < words.length) { set += java.lang.Long.bitCount(words(i)); i += 1 }
-    set.toDouble / numBits
-  }
 }
 
 object BloomSketch {

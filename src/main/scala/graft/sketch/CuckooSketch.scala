@@ -123,7 +123,6 @@ final class CuckooSketch(val numBuckets: Int) extends Serializable {
     false
   }
 
-  def size: Long = count
   def loadFactor: Double = count.toDouble / (numBuckets.toLong * SlotsPerBucket)
 
   /** Re-insert other's fingerprints; false ⇒ saturated (fallback needed).
@@ -170,11 +169,11 @@ object CuckooSketch {
   * conservative "always maybe" answer when insert/merge saturates, so
   * treeAggregate builds never fail — correctness is preserved because
   * `mightContain == true` only sends a row on to the authoritative store
-  * probe (the engine's dedup filter). Degradation is permanent: the engine keeps
-  * merging into the same sketch and never rebuilds it, so from then on
-  * every candidate takes the exact probe (the sketch stops pruning, nothing
-  * else changes). SURVEY.md §7.3 #5 documents why cuckoo merge is not
-  * closed.
+  * probe (the engine's dedup filter). A degraded sketch stays degraded: every
+  * candidate takes the exact probe (it stops pruning, nothing else changes)
+  * until the seen set outgrows its capacity and the engine rebuilds a larger
+  * one from the full seen set, as it does for the bloom. SURVEY.md §7.3 #5
+  * documents why cuckoo merge is not closed.
   */
 final class SeenSketch(expectedItems: Long) extends UrlSketch {
   private val cuckoo: CuckooSketch = CuckooSketch.forExpected(expectedItems)
@@ -182,9 +181,6 @@ final class SeenSketch(expectedItems: Long) extends UrlSketch {
 
   def add(x: String): Unit =
     if (!degraded && !cuckoo.add(x)) degraded = true
-
-  def addBytes(bytes: Array[Byte]): Unit =
-    if (!degraded && !cuckoo.addBytes(bytes)) degraded = true
 
   /** Deletable membership (the property blooms lack). No-op once degraded. */
   def remove(x: String): Boolean = !degraded && cuckoo.remove(x)
@@ -199,6 +195,8 @@ final class SeenSketch(expectedItems: Long) extends UrlSketch {
     degraded || cuckoo.mightContainBytes(bytes)
 
   def isDegraded: Boolean = degraded
+
+  def bytes: Long = CuckooSketch.bytesFor(expectedItems)
 
   def addAll(urls: org.apache.spark.rdd.RDD[String]): Unit =
     merge(SeenSketch.build(urls, expectedItems))

@@ -13,6 +13,9 @@ trait UrlSketch extends Serializable {
   /** Membership on the url's UTF-8 bytes (the plan-side probe's form). */
   def mightContainBytes(bytes: Array[Byte]): Boolean
 
+  /** Table size in bytes — what one broadcast of this sketch ships. */
+  def bytes: Long
+
   /** Fold `urls` into this sketch in place: per-partition sketches of this
     * one's geometry, treeAggregate-merged (north_star build path), then
     * merged here on the driver.

@@ -146,13 +146,6 @@ final class SnapshotStore(spark: SparkSession, val root: String) {
     })), scala.concurrent.duration.Duration.Inf)
   }
 
-  def readTableOrEmpty(s: Snapshot, table: String, schemaOf: DataFrame): DataFrame = {
-    val st = s.tables.get(table)
-    if (st.isEmpty || st.get.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf.schema)
-    else readTable(s, table)
-  }
-
   def commit(epoch: Int, tables: Map[String, TableState],
       metrics: Map[String, Long]): Snapshot =
     commit(epoch, tables, metrics, latest())

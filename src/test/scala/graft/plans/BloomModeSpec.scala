@@ -137,6 +137,46 @@ class BloomModeSpec extends AnyFunSuite {
     assert(cap > 8, s"sketch capacity never grew: $cap")
   }
 
+  test("first sketch build is sized at 2× the seen estimate, not expectedTotal") {
+    // default bloomExpectedTotal (10^7): the first build covers visited rows
+    // + this epoch's frontier with 2× headroom, no build comes near 10^7, and
+    // the manifest's sketch_bytes is the table that was built
+    val wh = Files.createTempDirectory("graft-bloomsize-").toString
+    val r = new CrawlEngine(spark, CrawlConfig(domain, numPartitions = 4,
+      bloomMinSeen = 4)).run(cyclicPages, s"https://$domain/p/0", wh)
+    val got = (r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq,
+      r.links.select("url").orderBy("url").as[String].collect().toSeq)
+    assert(got == plain)
+    val store = new graft.snapshot.SnapshotStore(spark, wh)
+    val snaps = (0 until r.epochs).map(e => store.snapshotAt(e).get)
+    val first = snaps.indexWhere(_.metrics("sketch_capacity") > 0L)
+    assert(first > 0, "sketch never activated")
+    val seen = store.snapshotAt(first - 1).get.tables("visited").totalRows +
+      snaps(first).metrics("urls_in")
+    assert(snaps(first).metrics("sketch_capacity") == 2 * seen)
+    snaps.foreach { s =>
+      val c = s.metrics("sketch_capacity")
+      assert(c < 1000L, s"capacity $c is not sized to a 24-url crawl")
+      assert(s.metrics("sketch_bytes") ==
+        (if (c == 0L) 0L else graft.sketch.BloomSketch.sizing(c, 0.01)._1 / 8))
+    }
+  }
+
+  test("cuckoo sketch auto-resizes when the crawl outgrows bloomExpectedTotal") {
+    // the bloom resize test's cuckoo twin: the same rule rebuilds a larger
+    // cuckoo from the full seen set, and the results stay exact
+    val wh = Files.createTempDirectory("graft-cuckooresize-").toString
+    val r = new CrawlEngine(spark, CrawlConfig(domain, numPartitions = 4,
+      sketchKind = "cuckoo", bloomMinSeen = 4, bloomExpectedTotal = 8))
+      .run(cyclicPages, s"https://$domain/p/0", wh)
+    val got = (r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq,
+      r.links.select("url").orderBy("url").as[String].collect().toSeq)
+    assert(got == plain)
+    val last = new graft.snapshot.SnapshotStore(spark, wh).latest().get.metrics
+    assert(last("sketch_capacity") > 8, s"sketch capacity never grew: ${last("sketch_capacity")}")
+    assert(last("sketch_bytes") == graft.sketch.CuckooSketch.bytesFor(last("sketch_capacity")))
+  }
+
   test("cuckoo seen-sketch probe ≡ plain anti-join (north_star fallback wired)") {
     val (trace, links) = crawl(CrawlConfig(domain, numPartitions = 4,
       sketchKind = "cuckoo", bloomMinSeen = 4, bloomExpectedTotal = 1024))
@@ -146,30 +186,51 @@ class BloomModeSpec extends AnyFunSuite {
   }
 
   test("saturated (degraded) cuckoo sketch still crawls exactly") {
-    // expectedTotal 1 ⇒ 64-bucket filter saturates mid-crawl and degrades to
-    // always-maybe; every row then takes the authoritative anti-join — the
-    // trace must stay identical (correctness never rides on the sketch)
-    val (trace, links) = crawl(CrawlConfig(domain, numPartitions = 4,
-      sketchKind = "cuckoo", bloomMinSeen = 4, bloomExpectedTotal = 1))
-    assert((trace, links) == plain)
-  }
-
-  test("a sketch above the 256 MiB broadcast cap is never built: every " +
-    "candidate takes the exact store probe") {
-    // 3·10^8 expected urls at 1% fpp ⇒ a ~343 MiB bloom: over the cap, so
-    // the crawl runs sketch-less (nothing allocated) and stays exact
-    val expected = 300000000L
-    assert(graft.sketch.BloomSketch.sizing(expected, 0.01)._1 / 8 > (256L << 20))
-    val wh = Files.createTempDirectory("graft-bloomcap-").toString
+    // activation at 20 seen urls with expectedTotal 1 ⇒ a 4-bucket (16-slot)
+    // filter must take 20 fingerprints: it saturates and degrades to
+    // always-maybe, so every row takes the authoritative store probe. The
+    // next epoch outgrows capacity 1 and rebuilds a larger, healthy cuckoo
+    // — the trace must stay identical (correctness never rides on the sketch)
+    val wh = Files.createTempDirectory("graft-cuckoosat-").toString
     val r = new CrawlEngine(spark, CrawlConfig(domain, numPartitions = 4,
-      bloomMinSeen = 4, bloomExpectedTotal = expected))
+      sketchKind = "cuckoo", bloomMinSeen = 20, bloomExpectedTotal = 1))
       .run(cyclicPages, s"https://$domain/p/0", wh)
     val got = (r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq,
       r.links.select("url").orderBy("url").as[String].collect().toSeq)
     assert(got == plain)
     val store = new graft.snapshot.SnapshotStore(spark, wh)
     val caps = (0 until r.epochs).map(e => store.snapshotAt(e).get.metrics("sketch_capacity"))
-    assert(caps.forall(_ == 0L), s"sketch built despite the cap: $caps")
+    assert(caps.dropWhile(_ == 0L).take(2) == Seq(1L, 42L),
+      s"expected a capacity-1 activation, then a rebuild: $caps")
+  }
+
+  test("a sketch above the 256 MiB broadcast cap is never built (capacity rule)") {
+    // the engine sizes every build through this one rule, so a huge sketch
+    // can no longer be forced end to end through bloomExpectedTotal: pin the
+    // cap on the rule itself, for both kinds and both branches
+    val cap = 256L << 20
+    for (cuckoo <- Seq(false, true)) {
+      // first build: 2× the seen estimate, capped at expectedTotal
+      assert(CrawlEngine.sketchCapacity(108000L, 0L, 10000000L, cuckoo) == Some(216000L))
+      assert(CrawlEngine.sketchCapacity(108000L, 0L, 1000L, cuckoo) == Some(1000L))
+      // outgrown: the larger of 2× the seen estimate and 2× the old capacity
+      assert(CrawlEngine.sketchCapacity(1001L, 1000L, 8L, cuckoo) == Some(2002L))
+      assert(CrawlEngine.sketchCapacity(5000L, 1000L, 8L, cuckoo) == Some(10000L))
+    }
+    def bloomBytes(n: Long) = graft.sketch.BloomSketch.sizing(n, 0.01)._1 / 8
+    def cuckooBytes(n: Long) = graft.sketch.CuckooSketch.bytesFor(n)
+    // bloom: 2.24·10^8 urls fit (just under 256 MiB), 2.25·10^8 do not
+    assert(bloomBytes(224000000L) <= cap && bloomBytes(225000000L) > cap)
+    assert(CrawlEngine.sketchCapacity(112000000L, 0L, Long.MaxValue, false) == Some(224000000L))
+    assert(CrawlEngine.sketchCapacity(112500000L, 0L, Long.MaxValue, false).isEmpty)
+    assert(CrawlEngine.sketchCapacity(150000000L, 0L, 300000000L, false).isEmpty)
+    assert(CrawlEngine.sketchCapacity(120000001L, 120000000L, 8L, false).isEmpty)
+    // cuckoo: 1.12·10^8 urls fill a 2^25-bucket (256 MiB) table, 1.2·10^8 a
+    // 512 MiB one
+    assert(cuckooBytes(112000000L) == cap && cuckooBytes(120000000L) > cap)
+    assert(CrawlEngine.sketchCapacity(56000000L, 0L, Long.MaxValue, true) == Some(112000000L))
+    assert(CrawlEngine.sketchCapacity(60000000L, 0L, Long.MaxValue, true).isEmpty)
+    assert(CrawlEngine.sketchCapacity(60000001L, 60000000L, 8L, true).isEmpty)
   }
 
   test("truncate-resume with a changed budget: later-timeline seen deltas " +
