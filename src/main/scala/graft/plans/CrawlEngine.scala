@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -216,6 +216,15 @@ object CrawlEngine {
   * State (visited / links / suppressed) is append-only parquet deltas under
   * the snapshot store; every epoch's outputs are written once and re-read
   * from disk, truncating lineage and making resume exact.
+  *
+  * `run()` sets `spark.sql.adaptive.enabled` false on the session and
+  * restores the caller's value when it returns or throws. The engine sizes
+  * its exchanges itself (store buckets = shuffle partitions, broadcast
+  * caps, salting), and AQE's per-stage jobs more than doubled a small
+  * epoch's job count, each paying job latency. Without AQE nothing
+  * coalesces, so every epoch shuffle runs `spark.sql.shuffle.partitions`
+  * tasks; on a 4-core host a budgeted robots crawl still ran faster
+  * without AQE at 1, 16 and 64 shuffle partitions per core.
   */
 final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
   import spark.implicits._
@@ -339,6 +348,15 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     * the driver — the manifest makes that listing unnecessary).
     */
   private def runSource(pagesPlain: () => DataFrame, bucketed: Option[BucketedPages],
+      seedUrls: Seq[String], warehouse: String): CrawlResult = {
+    val aqe = "spark.sql.adaptive.enabled"
+    val callerAqe = spark.conf.getAll.get(aqe)
+    spark.conf.set(aqe, false)
+    try crawl(pagesPlain, bucketed, seedUrls, warehouse)
+    finally callerAqe.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+  }
+
+  private def crawl(pagesPlain: () => DataFrame, bucketed: Option[BucketedPages],
       seedUrls: Seq[String], warehouse: String): CrawlResult = {
     lazy val pages: DataFrame = pagesPlain()
     val store = new SnapshotStore(spark, warehouse)
@@ -503,7 +521,17 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         epoch = 0
     }
 
-    var frontierCount = frontier.count()
+    // the page buckets of this epoch's frontier, a superset of its fetch's
+    // (the politeness gate only removes rows): at run start one
+    // groupBy(bucket) job gives the count (the sum) and the buckets (the
+    // keys); later epochs observe them on the frontier write
+    var (frontierCount, fetchBuckets) = bucketed match {
+      case None => (frontier.count(), Set.empty[Int])
+      case Some(bp) =>
+        val perBucket = frontier.groupBy(bp.bucketExpr(col("url"))).count()
+          .as[(Int, Long)].collect()
+        (perBucket.map(_._2).sum, perBucket.map(_._1).toSet)
+    }
 
     // links-compaction base: the row count the table last held in compacted
     // (or first-delta) form; persisted in the manifest metrics so resume
@@ -593,23 +621,12 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // missing page row contributes an empty link set either way
       // (crawler.py:45-46). Small epochs broadcast the frontier side and
       // stream the pages scan (no pages shuffle); huge epochs fall back to a
-      // shuffled join that AQE can re-plan.
+      // join shuffled into `numPartitions` partitions.
       //
-      // Bucket-manifest pruning (the 100-TB lever): with a BucketedPages
-      // source, the epoch's frontier names its bucket set (≤ numBuckets ints,
-      // driver-collected) and the scan below is built from ONLY those data
-      // files — an epoch touching 1% of buckets reads 1% of the corpus
-      // instead of all of it.
-      var pagesFilesRead = -1L
-      val pagesForEpoch = bucketed match {
-        case None => pages
-        case Some(bp) =>
-          val bucketSet = fetchNow
-            .select(bp.bucketExpr(col("url")).as("b"))
-            .distinct().as[Int].collect().toSet
-          pagesFilesRead = bp.filesFor(bucketSet).size.toLong
-          bp.scanBuckets(bucketSet)
-      }
+      // Bucket-manifest pruning (the 100-TB lever, no job of its own): a
+      // BucketedPages scan reads ONLY the data files of `fetchBuckets` — an
+      // epoch touching 1% of buckets reads 1% of the corpus, not all of it.
+      val pagesForEpoch = bucketed.fold(pages)(_.scanBuckets(fetchBuckets))
       lap("bucket_prune")
       val fetchKeys =
         if (frontierCount <= config.broadcastMaxRows)
@@ -789,7 +806,12 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         } else candidates.join(visitedAll, Seq("url"), "left_anti")
       dumpPlan(s"e${epoch}_candidates", candidates)
       if (candidatesIn > 0) dumpPlan(s"e${epoch}_frontier", next)
-      val fState = store.writeDelta("frontier", epoch + 1, next,
+      // over bucketed pages the write also collects the next frontier's
+      // bucket set (a metric of the write's own tasks, no job of its own)
+      val nextBuckets = new Observation()
+      val fState = store.writeDelta("frontier", epoch + 1,
+        bucketed.fold(next)(bp =>
+          next.observe(nextBuckets, collect_set(bp.bucketExpr(col("url"))).as("b"))),
         Some(snapshot.tables("frontier")), fullRewrite = true)
       lap("frontier_write")
       val vState = Await.result(vStateF, scala.concurrent.duration.Duration.Inf)
@@ -857,10 +879,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           "links_out" -> pmetrics.map(_.linksOut).sum,
           "parse_errors" -> pmetrics.map(_.parseErrors).sum,
           "wall_ms" -> wallMs) ++ stepMs ++
-          (if (pagesFilesRead >= 0)
-            Map("pages_files_read" -> pagesFilesRead,
-              "pages_files_total" -> bucketed.get.totalFiles.toLong)
-          else Map.empty[String, Long]),
+          bucketed.fold(Map.empty[String, Long])(bp => Map(
+            "pages_files_read" -> bp.filesFor(fetchBuckets).size.toLong,
+            "pages_files_total" -> bp.totalFiles.toLong)),
         parent = Some(snapshot),
         partitionMetrics = pmetrics)
 
@@ -870,6 +891,8 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       gateCaches.foreach(_.unpersist())
       frontier = store.readTable(snapshot, "frontier")
       frontierCount = fState.deltaRows
+      if (bucketed.isDefined)
+        fetchBuckets = nextBuckets.get("b").asInstanceOf[collection.Seq[Int]].toSet
       epoch += 1
     }
 

@@ -47,7 +47,8 @@ import graft.util.SerializableHadoopConf
   *    probes (cost O(probes·log n), FLAT in the accumulated seen size),
   *    self-upgrading to a one-shot bulk load + in-memory search once a shard
   *    has been probed a dense fraction of its size (the regime where reading
-  *    the shard once is optimal anyway).
+  *    the shard once is optimal anyway). The crawl runs without AQE, so
+  *    no probe partition is AQE-coalesced: an aligned task opens one bucket.
   *
   * Exact resume rests on the epoch-suffixed file names: a probe during
   * epoch e reads only files with epoch ≤ e, and a task retry rewrites the
@@ -71,8 +72,9 @@ import graft.util.SerializableHadoopConf
   * fit task memory for the bulk path. The engine's stores have one bucket
   * per shuffle partition, so to size the store, size
   * `spark.sql.shuffle.partitions` (2^14 ≈ 40 MB/shard at 10^10 urls;
-  * sorting cost at write time is per-epoch-delta only). Compaction streams:
-  * memory is O(1) in the bucket's accumulated size.
+  * sorting cost at write time is per-epoch-delta only). The crawl runs
+  * without AQE, so that is also every epoch shuffle's task count.
+  * Compaction streams: memory is O(1) in the bucket's accumulated size.
   */
 final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializable {
   require(numBuckets > 0)

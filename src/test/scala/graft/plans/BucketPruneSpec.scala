@@ -2,6 +2,7 @@ package graft.plans
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,8 +13,9 @@ import graft.synth.SiteGen
 /** Pages-side manifest/bucket file pruning for the fetch join (SURVEY.md
   * §1.4/§4.2; the 100-TB fetch-join lever): the adopted layout's per-file
   * bucket stats must be exact, a small-frontier epoch must read strictly
-  * fewer data files than the table has, and the crawl results must be
-  * identical to the unpruned path.
+  * fewer data files than the table has, every epoch reads the files of its
+  * frontier's buckets and no more, and the crawl results —
+  * across a truncate-resume too — must be identical to the unpruned path.
   */
 class BucketPruneSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -83,10 +85,62 @@ class BucketPruneSpec extends AnyFunSuite {
     assert(total == bp.totalFiles.toLong)
     assert(read0 < total, s"epoch 0 read $read0 of $total files — no pruning")
     assert(read0 <= 2, s"single-seed epoch should touch ~1 bucket, read $read0 files")
-    // every epoch records the pruning metrics
-    (0 until pruned.epochs).foreach { e =>
-      val s = store.snapshotAt(e).get
-      assert(s.metrics.contains("pages_files_read"), s"epoch $e missing metric")
+    // every later epoch reads exactly the files of its frontier's buckets
+    // (observed on the previous epoch's frontier write), and so no more than
+    // those of the previous epoch's candidate buckets
+    def bucketsOf(df: DataFrame): Set[Int] =
+      df.select(bp.bucketExpr(col("url"))).distinct().as[Int].collect().toSet
+    def filesFor(buckets: Set[Int]): Long = bp.filesFor(buckets).size.toLong
+    val snaps = (-1 until pruned.epochs).map(e => e -> store.snapshotAt(e).get).toMap
+    def visitedAt(e: Int) = store.readTable(snaps(e), "visited").filter(col("epoch") === e)
+    // candidates(e) = in-domain links found in e ∪ frontier(e) deferred in e
+    def candidates(e: Int): DataFrame = {
+      val linksDelta = snaps(e).tables("links").files
+        .diff(snaps(e - 1).tables("links").files)
+      spark.read.parquet(linksDelta: _*)
+        .filter(graft.url.urlfns.url_in_domain(col("url"), lit(domain)))
+        .select("url")
+        .union(store.readTable(snaps(e - 1), "frontier").select("url")
+          .join(visitedAt(e), Seq("url"), "left_anti"))
     }
+    val tighter = (1 until pruned.epochs).count { e =>
+      val read = snaps(e).metrics("pages_files_read")
+      val candidateFiles = filesFor(bucketsOf(candidates(e - 1)))
+      assert(read <= candidateFiles,
+        s"epoch $e read $read files, more than its candidate buckets hold")
+      assert(read == filesFor(bucketsOf(store.readTable(snaps(e - 1), "frontier"))),
+        s"epoch $e read $read files, not those of its frontier's buckets")
+      assert(read >= filesFor(bucketsOf(visitedAt(e))),
+        s"epoch $e read $read files, fewer than its fetch needs")
+      read < candidateFiles
+    }
+    // rediscovered, already-seen links fill the candidates' buckets: the
+    // deduplicated frontier's must be the smaller set somewhere
+    assert(tighter > 0, "no epoch read fewer files than its candidate buckets hold")
+  }
+
+  test("truncate-resume over bucketed pages: identical results; the resumed " +
+    "epoch reads the files of its frontier's buckets") {
+    val pages = synthPages
+    val dir = Files.createTempDirectory("graft-bp-resume-").toString + "/pages"
+    val bp = BucketedPages.adopt(spark, pages, dir, numBuckets = 16)
+    val cfg = CrawlConfig(domain, budget = Some(20), numPartitions = 4)
+    val whFull = Files.createTempDirectory("graft-bp-full-").toString
+    val whPart = Files.createTempDirectory("graft-bp-part-").toString
+    val full = new CrawlEngine(spark, cfg).run(bp, s"https://$domain", whFull)
+    new CrawlEngine(spark, cfg.copy(maxEpochs = 4)).run(bp, s"https://$domain", whPart)
+    val store = new graft.snapshot.SnapshotStore(spark, whPart)
+    store.truncateAfter(1)
+    val resumed = new CrawlEngine(spark, cfg).run(bp, s"https://$domain", whPart)
+    assert(resumed.trace.select("epoch", "url").as[(Int, String)].collect().toSeq ==
+      full.trace.select("epoch", "url").as[(Int, String)].collect().toSeq)
+    assert(resumed.links.select("url").orderBy("url").as[String].collect().toSeq ==
+      full.links.select("url").orderBy("url").as[String].collect().toSeq)
+    // the resumed run's first epoch takes its bucket set from the run-start
+    // frontier count
+    val frontierBuckets = store.readTable(store.snapshotAt(1).get, "frontier")
+      .select(bp.bucketExpr(col("url"))).distinct().as[Int].collect().toSet
+    assert(store.snapshotAt(2).get.metrics("pages_files_read") ==
+      bp.filesFor(frontierBuckets).size.toLong)
   }
 }
