@@ -30,6 +30,8 @@ object ScalingBench {
     val cores = if (args.nonEmpty) args(0).toInt else 32
     val nPages = if (args.length > 1) args(1).toLong else 200000L
     val mode = if (args.length > 2) args(2) else "steady"
+    val modes = Seq("steady", "bfs", "aged", "agedanti", "pruned", "prunedfull")
+    require(modes.contains(mode), s"unknown mode '$mode' (${modes.mkString("|")})")
     val reps = if (args.length > 3) args(3).toInt else 3
     val frontierN = if (args.length > 4) args(4).toLong else 200L
     val epochFrontier = if (args.length > 5) args(5).toLong else 0L
@@ -63,20 +65,10 @@ object ScalingBench {
       // (prior ⊇ corpus, candidates genuinely already-seen)
       case "aged" | "agedanti" =>
         Bench.agedKernel(spark, n, frontierN, epochFrontier, cores, mode == "aged")
-      // bucket-local SUPPRESSED-state evidence: one steady epoch over a
-      // robots crawl aged by arg5 prior suppressed urls — "agedsup" probes
-      // the suppressed shard store, "agedsupanti" is the left_anti control
-      case "agedsup" | "agedsupanti" =>
-        graft.tools.BenchExtra.agedSuppressedKernel(spark, n, frontierN,
-          cores, mode == "agedsup")
-      case _ => Bench.steadyKernel(spark, n, cores)
+      case "steady" => Bench.steadyKernel(spark, n, cores)
     }
     if (mode == "pruned" || mode == "prunedfull") once(40000L)
-    else if (mode == "agedsup" || mode == "agedsupanti") {
-      val w = graft.tools.BenchExtra.agedSuppressedKernel(spark, 20000L,
-        math.min(frontierN, 100000L), cores, mode == "agedsup")
-      require(w._2 > 0)
-    } else if (mode == "aged" || mode == "agedanti") {
+    else if (mode == "aged" || mode == "agedanti") {
       val w = Bench.agedKernel(spark, 20000L, math.min(frontierN, 100000L),
         if (epochFrontier > 0) 200L else 0L,
         cores, mode == "aged") // warmup at small scale, same code paths

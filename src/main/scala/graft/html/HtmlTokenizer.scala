@@ -80,7 +80,8 @@ object HtmlTokenizer {
     * Why two sets: the full Unicode class compiles to a ~9-node predicate
     * union that Java evaluates per character — measured 1.35× slower
     * single-threaded and 4.3× slower at 32 threads than the ASCII bitmap
-    * class (MicroBench, this box). Documents containing NO exotic-whitespace
+    * class (a pure-JVM micro-benchmark on the 32-core single-socket host of
+    * BASELINE.md's scaling protocol). Documents containing NO exotic-whitespace
     * char match identically under both sets (every distinguishing char is
     * absent), so [[parse]] picks the ASCII set after one cheap scan and the
     * Unicode set only for the rare document that needs it. The fuzz fixtures
@@ -307,9 +308,6 @@ object HtmlTokenizer {
       (c == 0x85 || c == 0xa0 || c == 0x1680 ||
         (c >= 0x2000 && c <= 0x200a) || c == 0x2028 || c == 0x2029 ||
         c == 0x202f || c == 0x205f || c == 0x3000)))
-
-  /** Profiling hook (graft.tools.ExtractProfile) — same scan [[parse]] runs. */
-  private[graft] def hasExoticWsProbe(s: String): Boolean = hasExoticWs(s)
 
   private def hasExoticWs(s: String): Boolean = {
     var i = 0

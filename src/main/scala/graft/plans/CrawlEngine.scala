@@ -1,5 +1,10 @@
 package graft.plans
 
+import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -199,6 +204,22 @@ object CrawlEngine {
   }
   val codePointOrdering: Ordering[String] =
     (a: String, b: String) => codePointCompare(a, b)
+
+  /** The action threads and caches a crawl has started and not released.
+    * Only the thread that runs the crawl touches it.
+    */
+  private final class InFlight {
+    private val actions = ArrayBuffer.empty[Future[_]]
+    private val caches = ArrayBuffer.empty[DataFrame]
+    def launch[T](body: => T): Future[T] = { val f = Future(body); actions += f; f }
+    def cache(df: DataFrame): DataFrame = { caches += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
+    /** Waits for every action, whatever its outcome, then drops every cache. */
+    def release(): Unit = {
+      actions.foreach(Await.ready(_, Duration.Inf))
+      caches.foreach(_.unpersist())
+      actions.clear(); caches.clear()
+    }
+  }
 }
 
 /** Distributed level-synchronous BFS crawl over a pages table — the Spark
@@ -267,7 +288,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
   /** Per-host budget gate: salted two-phase top-K so one hot host cannot
     * serialize the window shuffle. Phase 1 ranks within (host, salt) — the
     * global per-host top-K is a subset of the per-salt top-Ks — phase 2
-    * ranks the ≤ K·S survivors exactly. Returns (fetchNow, deferred).
+    * ranks the ≤ K·S survivors exactly. Returns (fetchNow, deferred, whether
+    * a window ran: without one nothing is deferred). `cache` persists the
+    * window frames.
     *
     * `delayBudgets` (host, delay_budget) — derived from robots crawl-delay
     * — tightens the per-host cap to min(configured, delay_budget); hosts
@@ -276,10 +299,10 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     * the exact per-host top-K.
     */
   private def politenessSplit(frontier: DataFrame,
-      delayBudgets: Option[DataFrame],
-      robotsCount: Long, frontierCount: Long): (DataFrame, DataFrame, Seq[DataFrame]) = {
+      delayBudgets: Option[DataFrame], robotsCount: Long, frontierCount: Long,
+      cache: DataFrame => DataFrame): (DataFrame, DataFrame, Boolean) = {
     if (config.budget.isEmpty && delayBudgets.isEmpty)
-      return (frontier, frontier.limit(0), Nil)
+      return (frontier, frontier.limit(0), false)
     // priority-queue order (O-9): (priority asc, url asc). Trace-match
     // mode uses constant priority, which degenerates to the SURVEY §A.1
     // lexicographic contract.
@@ -298,26 +321,23 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     }
     if (frontierCount <= CrawlEngine.SaltMinRows) {
       // single-phase: one exact per-host ranking by (priority, url)
-      val r = withB.withColumn("r",
-        row_number().over(Window.partitionBy("host").orderBy("priority", "url")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val r = cache(withB.withColumn("r",
+        row_number().over(Window.partitionBy("host").orderBy("priority", "url"))))
       val fetchNow = r.filter(col("r") <= col("__b")).select("url", "host", "priority")
       val defer = r.filter(col("r") > col("__b")).select("url", "host", "priority")
-      return (fetchNow, defer, Seq(r))
+      return (fetchNow, defer, true)
     }
     val salted = withB.withColumn(
       "salt", pmod(xxhash64(col("url")), lit(CrawlEngine.SaltBuckets)))
-    val r1 = salted.withColumn("r1",
-      row_number().over(Window.partitionBy("host", "salt").orderBy("priority", "url")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val r1 = cache(salted.withColumn("r1",
+      row_number().over(Window.partitionBy("host", "salt").orderBy("priority", "url"))))
     val survivors = r1.filter(col("r1") <= col("__b"))
-    val r2 = survivors.withColumn("r2",
-      row_number().over(Window.partitionBy("host").orderBy("priority", "url")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val r2 = cache(survivors.withColumn("r2",
+      row_number().over(Window.partitionBy("host").orderBy("priority", "url"))))
     val fetchNow = r2.filter(col("r2") <= col("__b")).select("url", "host", "priority")
     val defer = r1.filter(col("r1") > col("__b")).select("url", "host", "priority")
       .union(r2.filter(col("r2") > col("__b")).select("url", "host", "priority"))
-    (fetchNow, defer, Seq(r1, r2))
+    (fetchNow, defer, true)
   }
 
   /** Single-seed form (crawler.py:13 — seed = https://domain). */
@@ -352,12 +372,21 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     val aqe = "spark.sql.adaptive.enabled"
     val callerAqe = spark.conf.getAll.get(aqe)
     spark.conf.set(aqe, false)
-    try crawl(pagesPlain, bucketed, seedUrls, warehouse)
-    finally callerAqe.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    // what the run and its current epoch have started: when the run returns
+    // or throws, no action thread it launched is still running and no cache
+    // it made is still registered
+    val (perRun, perEpoch) = (new CrawlEngine.InFlight, new CrawlEngine.InFlight)
+    try crawl(pagesPlain, bucketed, seedUrls, warehouse, perRun, perEpoch)
+    finally {
+      perEpoch.release()
+      perRun.release()
+      callerAqe.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+    }
   }
 
   private def crawl(pagesPlain: () => DataFrame, bucketed: Option[BucketedPages],
-      seedUrls: Seq[String], warehouse: String): CrawlResult = {
+      seedUrls: Seq[String], warehouse: String, perRun: CrawlEngine.InFlight,
+      perEpoch: CrawlEngine.InFlight): CrawlResult = {
     lazy val pages: DataFrame = pagesPlain()
     val store = new SnapshotStore(spark, warehouse)
     require(config.seenDedup == "bucketlocal" || config.seenDedup == "anti",
@@ -399,7 +428,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     }
     val robots: DataFrame =
       if (!robotsMayExist) null
-      else robotsTable(robotsSource).persist(StorageLevel.MEMORY_AND_DISK)
+      else perRun.cache(robotsTable(robotsSource))
     // no robots rows (the common case) ⇒ the gate is a constant-true filter
     // and the whole suppression machinery is skipped (2 jobs/epoch saved)
     val robotsCount = if (robots == null) 0L else robots.count()
@@ -420,23 +449,19 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         Map[String, Seq[graft.robots.Robots.Rule]]) =
       if (!hasRobots) (None, Map.empty)
       else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val dbF = Future {
-          val db = robots
-            .filter(col("crawl_delay") > 0.0 && !isnan(col("crawl_delay")))
-            .select(col("host"),
-              crawl_delay_budget(col("crawl_delay"), CrawlEngine.CrawlDelayWindowSec)
-                .as("delay_budget"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        val db = perRun.cache(robots
+          .filter(col("crawl_delay") > 0.0 && !isnan(col("crawl_delay")))
+          .select(col("host"),
+            crawl_delay_budget(col("crawl_delay"), CrawlEngine.CrawlDelayWindowSec)
+              .as("delay_budget")))
+        val dbF = perRun.launch {
           if (db.count() == 0) { db.unpersist(); None } else Some(db)
         }
         // Seed gating needs rules only for the SEED hosts — semi-join before
         // collecting, so a 10^8-host robots table never reaches the driver.
         val rulesF =
           if (latest.nonEmpty) Future.successful(Map.empty[String, Seq[graft.robots.Robots.Rule]])
-          else Future {
+          else perRun.launch {
             val seedHosts = seedUrls.map(graft.robots.Robots.hostKey).distinct.toDF("host")
             robots.join(broadcast(seedHosts), Seq("host"), "left_semi")
               .select("host", "prefixes", "allows")
@@ -493,16 +518,13 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         // epoch "-1" bootstrap snapshot: seed frontier, empty state. The
         // four tiny writes are independent — run them concurrently so the
         // bootstrap pays one job latency, not four (guide §2.6)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val fStateF = Future(
+        val fStateF = perRun.launch(
           store.writeDelta("frontier", 0, seedDf, None, fullRewrite = true))
-        val vStateF = Future(store.writeDelta("visited", -1,
+        val vStateF = perRun.launch(store.writeDelta("visited", -1,
           Seq.empty[(Int, String)].toDF("epoch", "url"), None))
-        val lStateF = Future(
+        val lStateF = perRun.launch(
           store.writeDelta("links", -1, Seq.empty[String].toDF("url"), None))
-        val sStateF = Future {
+        val sStateF = perRun.launch {
           val st = store.writeDelta("suppressed", -1, suppressedSeed, None)
           if (useSeenStore) {
             if (blockedSeeds.nonEmpty)
@@ -592,8 +614,8 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // 1. politeness gate. The frontier parquet was hash-distributed at
       // write time; no re-shuffle here — the budget window (when enabled)
       // shuffles by (host, salt) itself.
-      val (fetchNowRaw, defer, gateCaches) =
-        politenessSplit(frontier, delayBudgets, robotsCount, frontierCount)
+      val (fetchNowRaw, defer, windowed) = politenessSplit(frontier,
+        delayBudgets, robotsCount, frontierCount, perEpoch.cache)
 
       // 2. visited delta = fetched this epoch. fetchNowRaw reads straight
       // from the frontier manifest files (1-hop lineage), so the write runs
@@ -604,15 +626,13 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // files must exist before this epoch's dedup probe, which awaits
       // seenStoreF — not the parquet write it no longer depends on.
       val fetchNow = fetchNowRaw
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val vStateF = Future {
+      val vStateF = perEpoch.launch {
         store.writeDelta("visited", epoch,
           fetchNow.select(lit(epoch).as("epoch"), col("url")),
           Some(snapshot.tables("visited")))
       }
       val seenStoreF: Future[Unit] =
-        if (useSeenStore) Future(seenStore.writeDelta(fetchNow.select("url"), epoch))
+        if (useSeenStore) perEpoch.launch(seenStore.writeDelta(fetchNow.select("url"), epoch))
         else Future.successful(())
       lap("visited_write_launch")
 
@@ -638,14 +658,13 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // fresh per epoch so each snapshot reports its own partitions
       val extractAcc = new graft.html.ExtractMetricsAcc
       spark.sparkContext.register(extractAcc, s"extract_metrics_e$epoch")
-      val cleanLinks = fetched
+      val cleanLinks = perEpoch.cache(fetched
         .select(col("url").as("page_url"),
           explode_outer(extract_hrefs_metered(col("html"), extractAcc)).as("href"))
         .filter(col("href").isNotNull)
         .select(graft.url.urlfns2.resolve_clean(col("page_url"), col("href")).as("url"))
         .filter(col("url").isNotNull) // null = scheme-filtered (O-5)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct())
 
       // 4. links delta (O-10): append this epoch's per-epoch-distinct links;
       // the global distinct is taken once at read time (distinct of unions ==
@@ -656,7 +675,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // materialization safe), and lState is only needed at commit. At small
       // epochs this halves the per-epoch fixed job latency; at scale the two
       // jobs pipeline on free task slots.
-      val lStateF = Future {
+      val lStateF = perEpoch.launch {
         store.writeDelta("links", epoch, cleanLinks, Some(snapshot.tables("links")))
       }
       lap("links_write_launch")
@@ -667,7 +686,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         .withColumn("host", host_key(col("url")))
       val gated =
         if (hasRobots)
-          inDom
+          perEpoch.cache(inDom
             // size-gated: broadcast only a small rule table; a web-scale one
             // (10^8 hosts) falls back to a shuffled equi-join on host
             .join(
@@ -675,8 +694,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
               else robots.repartition(P, col("host")),
               Seq("host"), "left")
             .withColumn("allowed",
-              coalesce(robots_allowed(col("url"), col("prefixes"), col("allows")), lit(true)))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+              coalesce(robots_allowed(col("url"), col("prefixes"), col("allows")), lit(true))))
         else inDom.withColumn("allowed", lit(true))
       lap("gate_build")
       // the suppressed write overlaps the candidates chain and the frontier
@@ -691,7 +709,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // are unique by construction (the anti path keeps the reference
       // left_anti + distinct shape for the differential).
       val sStateF =
-        if (hasRobots) Future {
+        if (hasRobots) perEpoch.launch {
           val disallowed = gated.filter(!col("allowed")).select("url")
           if (useSeenStore) {
             val newSuppressed = suppressedStore
@@ -699,14 +717,15 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
               .persist(StorageLevel.MEMORY_AND_DISK)
             // the parquet delta and the shard-index delta are independent
             // consumers of the (O(delta)) cached frame — write them
-            // concurrently; the epoch pays max(two writes), not their sum
+            // concurrently; the epoch pays max(two writes), not their sum.
+            // Both end before the cache goes, even when one of them fails
             val pF = Future(store.writeDelta("suppressed", epoch,
               newSuppressed, Some(snapshot.tables("suppressed"))))
             val stF = Future(suppressedStore.writeDelta(newSuppressed, epoch))
-            Await.result(stF, scala.concurrent.duration.Duration.Inf)
-            val ss = Await.result(pF, scala.concurrent.duration.Duration.Inf)
+            Seq(stF, pF).foreach(Await.ready(_, Duration.Inf))
             newSuppressed.unpersist()
-            ss
+            Await.result(stF, Duration.Inf)
+            Await.result(pF, Duration.Inf)
           } else {
             val soFar = store.readTable(snapshot, "suppressed").select("url")
             val newSuppressed = disallowed.join(soFar, Seq("url"), "left_anti").distinct()
@@ -736,12 +755,11 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // no deferred union ⇒ base's urls are ALREADY distinct (cleanLinks is
       // distinct, the gates only filter) and priority is a constant, so the
       // groupBy-min is an identity — skip its aggregate pair outright
-      val candidates = (if (gateCaches.isEmpty) base
+      val candidates = perEpoch.cache((if (!windowed) base
         else base.union(defer.select("url", "priority"))
           .groupBy(col("url"))
           .agg(min(col("priority")).as("priority")))
-        .select(col("url"), host_key(col("url")).as("host"), col("priority"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(col("url"), host_key(col("url")).as("host"), col("priority")))
       // BASELINE.json metric numerator (URLs scheduled + entering dedup).
       // Counting FIRST materializes the candidates cache, so the fixpoint
       // epoch (0 candidates) skips the sketch merge, anti-join, and probe
@@ -758,7 +776,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // candidates compute+count below. The vars it mutates are read only
       // after the Await. The sketch only prunes store probes, so an anti run
       // builds none.
-      val sketchMergeF: Future[Unit] = if (!useSeenStore) Future.successful(()) else Future {
+      val sketchMergeF: Future[Unit] = if (!useSeenStore) Future.successful(()) else perEpoch.launch {
         if (seenSketch != null && seenCountNow <= sketchCapacity)
           mergeIntoSketch(fetchNow) // maintain full coverage
         else if (seenSketch != null ||
@@ -885,10 +903,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         parent = Some(snapshot),
         partitionMetrics = pmetrics)
 
-      candidates.unpersist()
-      cleanLinks.unpersist()
-      if (hasRobots) gated.unpersist()
-      gateCaches.foreach(_.unpersist())
+      perEpoch.release()
       frontier = store.readTable(snapshot, "frontier")
       frontierCount = fState.deltaRows
       if (bucketed.isDefined)
@@ -896,8 +911,6 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       epoch += 1
     }
 
-    delayBudgets.foreach(_.unpersist())
-    if (robots != null) robots.unpersist()
     val visited = store.readTable(snapshot, "visited")
     CrawlResult(
       trace = visited.orderBy("epoch", "url"),

@@ -5,18 +5,20 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CacheBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.snapshot.BucketedPages
 import graft.synth.SiteGen
 
-/** The epoch chain's job budget and the scope of its AQE switch. A small
+/** The epoch chain's job budget and the scope of what a run holds. A small
   * epoch is bound by per-job latency, not by rows, so the number of Spark
-  * jobs an epoch launches is a performance contract of its own; and the
-  * engine turns AQE off only for the duration of `run()`.
+  * jobs an epoch launches is a performance contract of its own; the engine
+  * turns AQE off only for the duration of `run()`; and a run that throws
+  * leaves no job running and no cache behind.
   */
 class EpochJobsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -25,15 +27,19 @@ class EpochJobsSpec extends AnyFunSuite {
   private val aqe = "spark.sql.adaptive.enabled"
 
   /** Jobs started while `body` runs, counted by a listener between two
-    * marker jobs: the end marker's start event proves every earlier job
-    * start has been delivered.
+    * marker jobs, and those of them still running when the end marker was
+    * submitted: the end marker's start event proves every earlier job start
+    * and end has been delivered.
     */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val starts = new ConcurrentLinkedQueue[(Int, String)]
+  private def jobsDuring[T](body: => T): (T, Int, Set[Int]) = {
+    // (job id, start or end, description), in delivery order
+    val events = new ConcurrentLinkedQueue[(Int, Boolean, String)]
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        starts.add((js.jobId, Option(js.properties)
+        events.add((js.jobId, true, Option(js.properties)
           .map(_.getProperty("spark.job.description")).orNull))
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        events.add((je.jobId, false, null))
     }
     val sc = spark.sparkContext
     def marker(name: String): Unit = {
@@ -41,7 +47,7 @@ class EpochJobsSpec extends AnyFunSuite {
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
     }
     def markerId(name: String): Option[Int] =
-      starts.asScala.collectFirst { case (id, `name`) => id }
+      events.asScala.collectFirst { case (id, true, `name`) => id }
     sc.addSparkListener(listener)
     try {
       marker("jobs-before")
@@ -51,7 +57,10 @@ class EpochJobsSpec extends AnyFunSuite {
       while (markerId("jobs-after").isEmpty && System.nanoTime() < deadline)
         Thread.sleep(20)
       val (from, until) = (markerId("jobs-before").get, markerId("jobs-after").get)
-      (out, starts.asScala.count { case (id, _) => id > from && id < until })
+      val delivered = events.asScala.toSeq
+      val during = delivered.collect { case (id, true, _) if id > from && id < until => id }
+      val endedFirst = delivered.takeWhile(_._1 != until).collect { case (id, false, _) => id }
+      (out, during.size, during.toSet -- endedFirst)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -69,7 +78,7 @@ class EpochJobsSpec extends AnyFunSuite {
     val cfg = CrawlConfig(domain, budget = Some(7), numPartitions = 4,
       depthPriority = true, bloomMinSeen = 1, maxEpochs = epochs)
     val wh = Files.createTempDirectory("graft-jobs-wh-").toString
-    val (result, jobs) = jobsDuring(
+    val (result, jobs, _) = jobsDuring(
       new CrawlEngine(spark, cfg).run(bp, s"https://$domain", wh))
     assert(result.epochs == epochs)
     val store = new graft.snapshot.SnapshotStore(spark, wh)
@@ -85,6 +94,7 @@ class EpochJobsSpec extends AnyFunSuite {
       s"$jobs jobs for $epochs epochs (budget $perEpoch/epoch + $prologue)")
   }
 
+  // a run that throws also leaves no job running and no cache behind
   test("the caller's AQE setting is restored after a run, and after a run " +
     "that throws") {
     val pages = SiteGen.pages(spark, domain, nPages = 40, hosts = 2,
@@ -93,7 +103,11 @@ class EpochJobsSpec extends AnyFunSuite {
       if (true) throw new IllegalStateException("boom")
       Array.emptyByteArray
     }
-    val failing = pages.withColumn("html", boom(col("html")))
+    // the first fails while the epoch plans its links cache (the optimizer
+    // folds the udf into the local rows), with the epoch's writes running;
+    // the shuffle keeps the second from folding, so it fails in a task with
+    // the epoch's caches registered
+    val failing = Seq(pages, pages.repartition(2)).map(_.withColumn("html", boom(col("html"))))
     val cfg = CrawlConfig(domain, numPartitions = 4, maxEpochs = 2)
     def crawl(p: org.apache.spark.sql.DataFrame) = new CrawlEngine(spark, cfg)
       .run(p, s"https://$domain", Files.createTempDirectory("graft-aqe-").toString)
@@ -103,8 +117,14 @@ class EpochJobsSpec extends AnyFunSuite {
         setting.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
         assert(crawl(pages).epochs == 2)
         assert(spark.conf.getAll.get(aqe) == setting, s"after a run, set $setting")
-        assert(intercept[Exception](crawl(failing)).toString.contains("boom"))
-        assert(spark.conf.getAll.get(aqe) == setting, s"after a failed run, set $setting")
+        for (f <- failing) {
+          val cachedBefore = CacheBridge.cachedEntries(spark)
+          val (failure, _, running) = jobsDuring(intercept[Exception](crawl(f)))
+          assert(failure.toString.contains("boom"))
+          assert(spark.conf.getAll.get(aqe) == setting, s"after a failed run, set $setting")
+          assert(running.isEmpty, s"jobs $running of a failed run still running")
+          assert(CacheBridge.cachedEntries(spark) == cachedBefore, "caches left by a failed run")
+        }
       }
     } finally original.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
   }
