@@ -1,10 +1,13 @@
 package graft.plans
 
 import scala.collection.mutable.ArrayBuffer
-import scala.concurrent.{Await, Future}
+import scala.concurrent.{Await, Future, blocking}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
+import scala.reflect.ClassTag
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -81,10 +84,14 @@ import graft.url.urlfns._
   *                        ≤ 0 disables.
   * @param linksCompactMinRows no compaction below this row count (small
   *                        crawls never pay the rewrite).
-  * @param broadcastMaxRows broadcast cap, in rows, for the robots table (in
-  *                        the robots gate and the crawl-delay budget join)
-  *                        and for the epoch's fetch keys; above it each join
-  *                        is shuffled into `numPartitions` partitions
+  * @param broadcastMaxRows row cap for the robots table and for the epoch's
+  *                        fetch keys. A robots table within it is collected
+  *                        once per run and broadcast as a host map: the
+  *                        robots gate and the crawl-delay budgets are
+  *                        expressions over it, with no join. Above it the
+  *                        table is cached and both joins shuffle on host;
+  *                        fetch keys above it take a shuffled join. Shuffled
+  *                        joins use `numPartitions` partitions
   * @param depthPriority   O-9 priority = discovery depth (deferred older URLs
   *                        outrank newly discovered ones); false ⇒ constant
   *                        priority, the reference's lexicographic order
@@ -205,19 +212,30 @@ object CrawlEngine {
   val codePointOrdering: Ordering[String] =
     (a: String, b: String) => codePointCompare(a, b)
 
-  /** The action threads and caches a crawl has started and not released.
-    * Only the thread that runs the crawl touches it.
+  /** The action threads, caches and broadcasts a crawl has started and not
+    * released. Only the thread that runs the crawl touches it.
     */
-  private final class InFlight {
+  private final class InFlight(sc: SparkContext) {
     private val actions = ArrayBuffer.empty[Future[_]]
     private val caches = ArrayBuffer.empty[DataFrame]
-    def launch[T](body: => T): Future[T] = { val f = Future(body); actions += f; f }
+    private val broadcasts = ArrayBuffer.empty[Broadcast[_]]
+    /** An action blocks its thread until its job ends: marked `blocking`, it
+      * gets a thread of its own rather than queueing on the global pool's
+      * one-per-core threads behind other actions.
+      */
+    def launch[T](body: => T): Future[T] = { val f = Future(blocking(body)); actions += f; f }
     def cache(df: DataFrame): DataFrame = { caches += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
-    /** Waits for every action, whatever its outcome, then drops every cache. */
+    def broadcast[T: ClassTag](value: T): Broadcast[T] = {
+      val b = sc.broadcast(value); broadcasts += b; b
+    }
+    /** Waits for every action, whatever its outcome, then drops every cache
+      * and broadcast.
+      */
     def release(): Unit = {
       actions.foreach(Await.ready(_, Duration.Inf))
       caches.foreach(_.unpersist())
-      actions.clear(); caches.clear()
+      broadcasts.foreach(_.destroy())
+      actions.clear(); caches.clear(); broadcasts.clear()
     }
   }
 }
@@ -230,7 +248,7 @@ object CrawlEngine {
   *              → fetch left-join pages on url
   *              → ExtractHrefs → explode → UrlResolve → scheme filter → CleanUrl
   *              → links delta (anti-join links)
-  *              → in-domain filter → robots gate (broadcast)
+  *              → in-domain filter → robots gate (run-scoped broadcast)
   *              → ∪ deferred → sketch-pruned seen-store filter
   *              → frontier(e+1); snapshot commit
   *
@@ -292,28 +310,25 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     * a window ran: without one nothing is deferred). `cache` persists the
     * window frames.
     *
-    * `delayBudgets` (host, delay_budget) — derived from robots crawl-delay
-    * — tightens the per-host cap to min(configured, delay_budget); hosts
-    * absent from it keep the configured budget (or no cap). The budget is a
-    * per-host CONSTANT, so the salted phase-1 top-K remains a superset of
-    * the exact per-host top-K.
+    * `withDelayBudget` adds a `delay_budget` column — derived from robots
+    * crawl-delay — that tightens the per-host cap to min(configured,
+    * delay_budget); hosts without one (null or `Long.MaxValue`) keep the
+    * configured budget (or no cap). The budget is a per-host CONSTANT, so
+    * the salted phase-1 top-K remains a superset of the exact per-host top-K.
     */
   private def politenessSplit(frontier: DataFrame,
-      delayBudgets: Option[DataFrame], robotsCount: Long, frontierCount: Long,
+      withDelayBudget: Option[DataFrame => DataFrame], frontierCount: Long,
       cache: DataFrame => DataFrame): (DataFrame, DataFrame, Boolean) = {
-    if (config.budget.isEmpty && delayBudgets.isEmpty)
+    if (config.budget.isEmpty && withDelayBudget.isEmpty)
       return (frontier, frontier.limit(0), false)
     // priority-queue order (O-9): (priority asc, url asc). Trace-match
     // mode uses constant priority, which degenerates to the SURVEY §A.1
     // lexicographic contract.
-    val withB = delayBudgets match {
+    val withB = withDelayBudget match {
       case None =>
         frontier.withColumn("__b", lit(config.budget.get.toLong))
-      case Some(db) =>
-        val joined = frontier.join(
-          if (robotsCount <= config.broadcastMaxRows) broadcast(db)
-          else db.repartition(P, col("host")),
-          Seq("host"), "left")
+      case Some(addBudget) =>
+        val joined = addBudget(frontier)
         val delayCap = coalesce(col("delay_budget"), lit(Long.MaxValue))
         joined.withColumn("__b", config.budget
           .map(cb => least(delayCap, lit(cb.toLong))).getOrElse(delayCap))
@@ -375,7 +390,8 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     // what the run and its current epoch have started: when the run returns
     // or throws, no action thread it launched is still running and no cache
     // it made is still registered
-    val (perRun, perEpoch) = (new CrawlEngine.InFlight, new CrawlEngine.InFlight)
+    val (perRun, perEpoch) =
+      (new CrawlEngine.InFlight(spark.sparkContext), new CrawlEngine.InFlight(spark.sparkContext))
     try crawl(pagesPlain, bucketed, seedUrls, warehouse, perRun, perEpoch)
     finally {
       perEpoch.release()
@@ -426,13 +442,26 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       case None => robotsSource
         .filter(col("url").endsWith("/robots.txt")).select("url").count() > 0
     }
-    val robots: DataFrame =
-      if (!robotsMayExist) null
-      else perRun.cache(robotsTable(robotsSource))
-    // no robots rows (the common case) ⇒ the gate is a constant-true filter
-    // and the whole suppression machinery is skipped (2 jobs/epoch saved)
-    val robotsCount = if (robots == null) 0L else robots.count()
-    val hasRobots = robotsCount > 0
+    // The robots table, parsed once per run. One job brings at most
+    // broadcastMaxRows + 1 of its rows to the driver. A table within the cap
+    // is broadcast once as a host map: the gate, the crawl-delay budgets and
+    // the seed rules all read it, and no epoch plans a broadcast of its own.
+    // A larger one is cached, and the gate and the budgets join it shuffled
+    // on host. No robots rows (the common case) ⇒ the gate is a constant-true
+    // filter and the whole suppression machinery is skipped.
+    val robotsAll = Option.when(robotsMayExist)(robotsTable(robotsSource))
+    val robotsRows = robotsAll.flatMap { rt =>
+      // through `.rdd` the limit is planned as one job (a collect() of a
+      // limit takes its rows in rounds of partitions, one job per round)
+      val n = math.max(0L, math.min(config.broadcastMaxRows, Int.MaxValue - 1L) + 1)
+      val rows = rt.limit(n.toInt).as[RobotsRules.Row].rdd.collect()
+      Option.when(rows.length <= config.broadcastMaxRows)(rows.toSeq)
+    }
+    val rules = robotsRows.filter(_.nonEmpty)
+      .map(RobotsRules(_, CrawlEngine.CrawlDelayWindowSec))
+    val rulesB = rules.map(perRun.broadcast(_))
+    val robots = if (robotsRows.isDefined) None else robotsAll.map(perRun.cache)
+    val hasRobots = rules.isDefined || robots.isDefined
 
     // robots crawl-delay → per-host politeness budget (SURVEY §1.2 schema):
     // delay d caps a host at max(1, int(window // d)) fetches per epoch with
@@ -441,37 +470,27 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     // delays). NaN needs the explicit isnan guard: Spark SQL orders NaN
     // greater than every value, so `NaN > 0.0` is TRUE here while Python's
     // `nan > 0` is False (no cap); +inf passes both and caps at 1.
-    // Both run-start probes below only READ the materialized robots cache
-    // and are independent — run them concurrently (guide §2.6), so a robots
-    // crawl's setup pays max(two jobs), not their sum. Seed rules are needed
-    // only to bootstrap: a resumed run skips that job.
-    val (delayBudgets, seedRules): (Option[DataFrame],
-        Map[String, Seq[graft.robots.Robots.Rule]]) =
-      if (!hasRobots) (None, Map.empty)
-      else {
-        val db = perRun.cache(robots
+    val withDelayBudget: Option[DataFrame => DataFrame] = rulesB match {
+      case Some(b) => Option.when(rules.get.hasDelays)(
+        _.withColumn("delay_budget", robots_delay_budget(b, col("host"))))
+      case None => robots.flatMap { rt =>
+        val db = perRun.cache(rt
           .filter(col("crawl_delay") > 0.0 && !isnan(col("crawl_delay")))
           .select(col("host"),
             crawl_delay_budget(col("crawl_delay"), CrawlEngine.CrawlDelayWindowSec)
               .as("delay_budget")))
-        val dbF = perRun.launch {
-          if (db.count() == 0) { db.unpersist(); None } else Some(db)
-        }
-        // Seed gating needs rules only for the SEED hosts — semi-join before
-        // collecting, so a 10^8-host robots table never reaches the driver.
-        val rulesF =
-          if (latest.nonEmpty) Future.successful(Map.empty[String, Seq[graft.robots.Robots.Rule]])
-          else perRun.launch {
-            val seedHosts = seedUrls.map(graft.robots.Robots.hostKey).distinct.toDF("host")
-            robots.join(broadcast(seedHosts), Seq("host"), "left_semi")
-              .select("host", "prefixes", "allows")
-              .as[(String, Array[String], Array[Boolean])].collect()
-              .map { case (h, ps, as) =>
-                h -> ps.zip(as).map { case (p, a) => graft.robots.Robots.Rule(p, a) }.toSeq
-              }.toMap
-          }
-        (Await.result(dbF, Duration.Inf), Await.result(rulesF, Duration.Inf))
+        Option.when(db.count() > 0)(
+          _.join(db.repartition(P, col("host")), Seq("host"), "left"))
       }
+    }
+    // Seed gating needs rules only to bootstrap, and only for the SEED hosts:
+    // a larger table is semi-joined before collecting, so a 10^8-host robots
+    // table never reaches the driver.
+    lazy val seedRules = rules.orElse(robots.map { rt =>
+      val seedHosts = seedUrls.map(graft.robots.Robots.hostKey).distinct.toDF("host")
+      RobotsRules(rt.join(broadcast(seedHosts), Seq("host"), "left_semi")
+        .as[RobotsRules.Row].collect().toSeq, CrawlEngine.CrawlDelayWindowSec)
+    }).fold(Map.empty[String, Seq[graft.robots.Robots.Rule]])(_.rules)
 
     var snapshot: Snapshot = null
     var frontier: DataFrame = null
@@ -525,14 +544,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         val lStateF = perRun.launch(
           store.writeDelta("links", -1, Seq.empty[String].toDF("url"), None))
         val sStateF = perRun.launch {
-          val st = store.writeDelta("suppressed", -1, suppressedSeed, None)
-          if (useSeenStore) {
-            if (blockedSeeds.nonEmpty)
-              suppressedStore.writeDelta(suppressedSeed, -1)
-            else suppressedStore.markEpoch(
-              spark.sparkContext.hadoopConfiguration, -1)
-          }
-          st
+          def write(df: DataFrame) = store.writeDelta("suppressed", -1, df, None)
+          if (useSeenStore) suppressedStore.writeWith(suppressedSeed, "url", -1)(write)
+          else write(suppressedSeed)
         }
         snapshot = store.commit(-1, Map(
           "frontier" -> Await.result(fStateF, Duration.Inf),
@@ -614,26 +628,22 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // 1. politeness gate. The frontier parquet was hash-distributed at
       // write time; no re-shuffle here — the budget window (when enabled)
       // shuffles by (host, salt) itself.
-      val (fetchNowRaw, defer, windowed) = politenessSplit(frontier,
-        delayBudgets, robotsCount, frontierCount, perEpoch.cache)
+      val (fetchNow, defer, windowed) = politenessSplit(frontier,
+        withDelayBudget, frontierCount, perEpoch.cache)
 
-      // 2. visited delta = fetched this epoch. fetchNowRaw reads straight
-      // from the frontier manifest files (1-hop lineage), so the write runs
+      // 2. visited delta = fetched this epoch. fetchNow reads straight from
+      // the frontier manifest files (1-hop lineage), so the write runs
       // CONCURRENTLY with extraction on a separate action thread. The exact
       // seen index gets the SAME delta (O(epoch) rows — the only state that
-      // is new) on ITS OWN action thread, concurrent with the visited
-      // parquet write (both scan the same gate cache); the sorted shard
-      // files must exist before this epoch's dedup probe, which awaits
-      // seenStoreF — not the parquet write it no longer depends on.
-      val fetchNow = fetchNowRaw
+      // is new) from the parquet write's own tasks, with no job of its own;
+      // its sorted shard files must exist before this epoch's dedup probe,
+      // which awaits this write.
       val vStateF = perEpoch.launch {
-        store.writeDelta("visited", epoch,
-          fetchNow.select(lit(epoch).as("epoch"), col("url")),
-          Some(snapshot.tables("visited")))
+        val rows = fetchNow.select(lit(epoch).as("epoch"), col("url"))
+        def write(df: DataFrame) =
+          store.writeDelta("visited", epoch, df, Some(snapshot.tables("visited")))
+        if (useSeenStore) seenStore.writeWith(rows, "url", epoch)(write) else write(rows)
       }
-      val seenStoreF: Future[Unit] =
-        if (useSeenStore) perEpoch.launch(seenStore.writeDelta(fetchNow.select("url"), epoch))
-        else Future.successful(())
       lap("visited_write_launch")
 
       // 3. fetch join + extract + clean (crawler.py:30-42). INNER join is
@@ -684,18 +694,17 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       val inDom = cleanLinks
         .filter(url_in_domain(col("url"), lit(config.domain)))
         .withColumn("host", host_key(col("url")))
-      val gated =
-        if (hasRobots)
-          perEpoch.cache(inDom
-            // size-gated: broadcast only a small rule table; a web-scale one
-            // (10^8 hosts) falls back to a shuffled equi-join on host
-            .join(
-              if (robotsCount <= config.broadcastMaxRows) broadcast(robots)
-              else robots.repartition(P, col("host")),
-              Seq("host"), "left")
-            .withColumn("allowed",
-              coalesce(robots_allowed(col("url"), col("prefixes"), col("allows")), lit(true))))
-        else inDom.withColumn("allowed", lit(true))
+      // a rule table within the cap is an expression over the run's
+      // broadcast; a web-scale one (10^8 hosts) is a shuffled equi-join on host
+      val gated = (rulesB, robots) match {
+        case (Some(b), _) => perEpoch.cache(
+          inDom.withColumn("allowed", robots_gate(b, col("host"), col("url"))))
+        case (_, Some(rt)) => perEpoch.cache(inDom
+          .join(rt.repartition(P, col("host")), Seq("host"), "left")
+          .withColumn("allowed",
+            coalesce(robots_allowed(col("url"), col("prefixes"), col("allows")), lit(true))))
+        case _ => inDom.withColumn("allowed", lit(true))
+      }
       lap("gate_build")
       // the suppressed write overlaps the candidates chain and the frontier
       // write below (the same action-thread pattern as visited/links: both
@@ -704,33 +713,23 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // Bucket-local path: `disallowed − suppressed-so-far` is a shard probe
       // against the suppressed store (upToEpoch = e−1), not a left_anti over
       // the CUMULATIVE suppressed set — the probe cost tracks this epoch's
-      // disallowed rows, not the crawl's age. No distinct is needed on the
-      // store path: cleanLinks is distinct and the gates only filter, so urls
-      // are unique by construction (the anti path keeps the reference
-      // left_anti + distinct shape for the differential).
+      // disallowed rows, not the crawl's age. The probe leaves the rows
+      // partitioned by (buckets, url), so the store delta rides the parquet
+      // write's tasks with no exchange. No distinct is needed on the store
+      // path: cleanLinks is distinct and the gates only filter, so urls are
+      // unique by construction (the anti path keeps the reference left_anti
+      // + distinct shape for the differential).
       val sStateF =
         if (hasRobots) perEpoch.launch {
           val disallowed = gated.filter(!col("allowed")).select("url")
-          if (useSeenStore) {
-            val newSuppressed = suppressedStore
-              .filterUnseen(disallowed, "url", epoch - 1)
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            // the parquet delta and the shard-index delta are independent
-            // consumers of the (O(delta)) cached frame — write them
-            // concurrently; the epoch pays max(two writes), not their sum.
-            // Both end before the cache goes, even when one of them fails
-            val pF = Future(store.writeDelta("suppressed", epoch,
-              newSuppressed, Some(snapshot.tables("suppressed"))))
-            val stF = Future(suppressedStore.writeDelta(newSuppressed, epoch))
-            Seq(stF, pF).foreach(Await.ready(_, Duration.Inf))
-            newSuppressed.unpersist()
-            Await.result(stF, Duration.Inf)
-            Await.result(pF, Duration.Inf)
-          } else {
+          def write(df: DataFrame) =
+            store.writeDelta("suppressed", epoch, df, Some(snapshot.tables("suppressed")))
+          if (useSeenStore)
+            suppressedStore.writeWith(
+              suppressedStore.filterUnseen(disallowed, "url", epoch - 1), "url", epoch)(write)
+          else {
             val soFar = store.readTable(snapshot, "suppressed").select("url")
-            val newSuppressed = disallowed.join(soFar, Seq("url"), "left_anti").distinct()
-            store.writeDelta("suppressed", epoch, newSuppressed,
-              Some(snapshot.tables("suppressed")))
+            write(disallowed.join(soFar, Seq("url"), "left_anti").distinct())
           }
         } else scala.concurrent.Future.successful(
           snapshot.tables("suppressed").copy(deltaRows = 0L))
@@ -761,19 +760,20 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           .agg(min(col("priority")).as("priority")))
         .select(col("url"), host_key(col("url")).as("host"), col("priority")))
       // BASELINE.json metric numerator (URLs scheduled + entering dedup).
-      // Counting FIRST materializes the candidates cache, so the fixpoint
-      // epoch (0 candidates) skips the sketch merge, anti-join, and probe
-      // below entirely, and the frontier write of a non-empty epoch scans
-      // the cache instead of recomputing. (An observe() on the candidates
-      // plan would not surface through the cache boundary —
-      // InMemoryRelation swallows the CollectMetrics node.)
+      // The count materializes the candidates cache, so the frontier write
+      // of a non-empty epoch scans the cache instead of recomputing, and the
+      // fixpoint epoch (0 candidates) skips the sketch broadcast and the
+      // store probe below. (An observe() on the candidates plan would not
+      // surface through the cache boundary — InMemoryRelation swallows the
+      // CollectMetrics node.)
       val visitedAll = visitedSoFar.select("url")
         .union(fetchNow.select("url"))
       val seenCountNow = visitedRows + frontierCount // upper bound estimate
       // the sketch merge's whole decision tree depends only on pre-epoch
       // state (seen estimate, the sketch itself) — never on the candidate
-      // count — so it runs on its own action thread OVERLAPPED with the
-      // candidates compute+count below. The vars it mutates are read only
+      // count — so it is launched BEFORE the count and runs on its own action
+      // thread, overlapped with the candidates compute+count, whatever the
+      // count turns out to be. The vars it mutates are read only
       // after the Await. The sketch only prunes store probes, so an anti run
       // builds none.
       val sketchMergeF: Future[Unit] = if (!useSeenStore) Future.successful(()) else perEpoch.launch {
@@ -797,9 +797,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       lap("candidates_count")
       Await.result(sketchMergeF, scala.concurrent.duration.Duration.Inf)
       lap("sketch_merge_wait")
+      // released with the epoch: only the frontier write below reads it
       val sketchBcast =
-        if (candidatesIn > 0 && seenSketch != null)
-          spark.sparkContext.broadcast[UrlSketch](seenSketch)
+        if (candidatesIn > 0 && seenSketch != null) perEpoch.broadcast[UrlSketch](seenSketch)
         else null
       // next = candidates − seen(≤ e). No candidate is suppressed: robots
       // rules are parsed once per run, and a candidate is a link that passed
@@ -815,8 +815,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       val next =
         if (candidatesIn == 0) candidates
         else if (useSeenStore) {
-          // this epoch's shard files must be on disk before the probe job runs
-          Await.result(seenStoreF, scala.concurrent.duration.Duration.Inf)
+          // this epoch's shard files must be on disk before the probe job
+          // runs: the visited write writes them
+          Await.result(vStateF, Duration.Inf)
           val url = col("url")
           val seen = seenStore.seen(url, epoch)
           candidates.repartition(storeBuckets, url)
@@ -832,10 +833,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           next.observe(nextBuckets, collect_set(bp.bucketExpr(col("url"))).as("b"))),
         Some(snapshot.tables("frontier")), fullRewrite = true)
       lap("frontier_write")
-      val vState = Await.result(vStateF, scala.concurrent.duration.Duration.Inf)
-      // the seen-index delta must be durable before this epoch commits (the
+      // with it the seen-index delta is durable before this epoch commits (the
       // fixpoint epoch never probes, so the dedup chain may not have awaited)
-      Await.result(seenStoreF, scala.concurrent.duration.Duration.Inf)
+      val vState = Await.result(vStateF, Duration.Inf)
       lap("visited_wait")
       val lStateRaw = Await.result(lStateF, scala.concurrent.duration.Duration.Inf)
       lap("links_wait")
@@ -862,11 +862,6 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         if (sState.totalRows > 0) suppressedStore.compact(spark, epoch)
         lap("seen_compact")
       }
-      // the per-epoch sketch broadcast is consumed only by the frontier
-      // write above — release it so long crawls don't accumulate broadcast
-      // state on the driver/executors
-      if (sketchBcast != null) sketchBcast.destroy()
-
       // extraction accumulator is final here: both cleanLinks consumers
       // (links write + frontier chain) are awaited above, so every cached
       // partition has been materialized exactly once

@@ -49,6 +49,40 @@ object PlanOps {
   }
 }
 
+/** A run's robots table as one host map, broadcast once per run: per host
+  * key, the `*`-group rules and the crawl-delay budget. The gate and the
+  * politeness budget are expressions over it ([[RobotsGate]],
+  * [[RobotsDelayBudget]]), so no epoch plans a join or a broadcast of its
+  * own. Built only for a table of at most `broadcastMaxRows` rows.
+  */
+final class RobotsRules(val rules: Map[String, Seq[Robots.Rule]],
+    delayBudgets: Map[String, Long]) extends Serializable {
+  def hasDelays: Boolean = delayBudgets.nonEmpty
+  /** Longest-match decision; a host without robots.txt allows everything. */
+  def allowed(host: UTF8String, url: UTF8String): Boolean =
+    rules.get(host.toString).forall(Robots.allowed(url.toString, _))
+  /** The host's crawl-delay budget; no cap without a delay. */
+  def delayBudget(host: UTF8String): Long =
+    delayBudgets.getOrElse(host.toString, Long.MaxValue)
+}
+
+object RobotsRules {
+  /** A robots-table row: host, prefixes, allows, crawl delay. */
+  type Row = (String, Array[String], Array[Boolean], Option[Double])
+
+  /** A delay caps its host only when positive and not NaN (Python `nan > 0`
+    * is False; `inf > 0` is True, budget 1).
+    */
+  def apply(rows: Seq[Row], windowSec: Double): RobotsRules =
+    new RobotsRules(
+      rows.map { case (h, ps, as, _) =>
+        h -> ps.toSeq.zip(as).map { case (p, a) => Robots.Rule(p, a) }
+      }.toMap,
+      rows.collect { case (h, _, _, Some(d)) if d > 0.0 && !d.isNaN =>
+        h -> PlanOps.crawlDelayBudget(windowSec, d)
+      }.toMap)
+}
+
 /** Politeness/robots host key (lowercased host sans port). */
 case class HostKey(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
@@ -114,6 +148,40 @@ case class MightContain(bcast: Broadcast[UrlSketch], child: Expression)
     copy(child = c)
 }
 
+/** RobotsGate(host, url) over the run's broadcast [[RobotsRules]]. */
+case class RobotsGate(rules: Broadcast[RobotsRules], left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def dataType: DataType = BooleanType
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(host: Any, url: Any): Any =
+    rules.value.allowed(host.asInstanceOf[UTF8String], url.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("robotsRules", rules, classOf[Broadcast[_]].getName)
+    defineCodeGen(ctx, ev,
+      (h, u) => s"((graft.plans.RobotsRules)$ref.value()).allowed($h, $u)")
+  }
+  override protected def withNewChildrenInternal(
+      l: Expression, r: Expression): RobotsGate = copy(left = l, right = r)
+}
+
+/** RobotsDelayBudget(host): the host's crawl-delay budget from the run's
+  * broadcast [[RobotsRules]], `Long.MaxValue` for a host without one.
+  */
+case class RobotsDelayBudget(rules: Broadcast[RobotsRules], child: Expression)
+    extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def nullIntolerant: Boolean = true
+  override protected def nullSafeEval(host: Any): Any =
+    rules.value.delayBudget(host.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("robotsRules", rules, classOf[Broadcast[_]].getName)
+    defineCodeGen(ctx, ev,
+      h => s"((graft.plans.RobotsRules)$ref.value()).delayBudget($h)")
+  }
+  override protected def withNewChildInternal(c: Expression): RobotsDelayBudget =
+    copy(child = c)
+}
+
 object planfns {
   def host_key(c: Column): Column = column(HostKey(expression(c)))
   def robots_allowed(url: Column, prefixes: Column, allows: Column): Column =
@@ -122,4 +190,8 @@ object planfns {
     column(MightContain(b, expression(c)))
   def crawl_delay_budget(c: Column, windowSec: Double): Column =
     column(CrawlDelayBudget(expression(c), windowSec))
+  def robots_gate(rules: Broadcast[RobotsRules], host: Column, url: Column): Column =
+    column(RobotsGate(rules, expression(host), expression(url)))
+  def robots_delay_budget(rules: Broadcast[RobotsRules], host: Column): Column =
+    column(RobotsDelayBudget(rules, expression(host)))
 }

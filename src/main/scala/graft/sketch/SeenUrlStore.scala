@@ -3,16 +3,19 @@ package graft.sketch
 import java.io.DataOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileContext, FileSystem, Options, Path}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Nondeterministic}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Murmur3HashFunction, Nondeterministic}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.graftbridge.SqlBridge
+import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.util.SerializableHadoopConf
@@ -29,11 +32,13 @@ import graft.util.SerializableHadoopConf
   * O(total-crawled) seen set EVERY epoch — ~600 GB of never-changing state
   * per epoch at 10^10 URLs. Here the big side is never shuffled at all:
   *
-  *  - '''writeDelta(urls, epoch)''': the epoch's fetched urls (O(epoch), the
-  *    only state that is new) are repartitioned by url-hash bucket
+  *  - '''writeWith(rows, url, epoch)(sink)''': the epoch's fetched urls (O(epoch),
+  *    the only state that is new) are repartitioned by url-hash bucket
   *    ([[bucketCol]] = `pmod(hash(url), B)` — deliberately Spark's own
-  *    HashPartitioning id function); each task writes
-  *    one SORTED file per bucket: `bucket=<b>/e<epoch>.seen`, atomic rename.
+  *    HashPartitioning id function) on their way to a sink (the engine's
+  *    parquet delta write); each sink task writes one SORTED file per
+  *    bucket: `bucket=<b>/e<epoch>.seen`, atomic rename. No job of its own.
+  *    [[writeDelta]] is the same write with a count as the sink.
   *  - '''seen(url, upToEpoch)''': a Catalyst predicate over the same bucket
   *    key, placed above `repartition(numBuckets, url)` ([[filterUnseen]]).
   *    Candidates and the store share Spark's url-hash bucketing, so a
@@ -107,7 +112,7 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
     }
 
   /** Advance the covered-epoch watermark (atomic tmp+rename; driver-side).
-    * Called by [[writeDelta]]; call directly for an epoch whose delta is
+    * Called by [[writeWith]]; call directly for an epoch whose delta is
     * empty (no shard files written) so coverage shows no gap. Throws when
     * the directory's meta records a different bucket count: its shards are
     * bucketed for another store, and a fresh meta stamped over them would
@@ -178,30 +183,41 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
   def writeDelta(urls: DataFrame, epoch: Int): Unit = {
     require(urls.columns.length == 1,
       s"writeDelta expects a single url column, got ${urls.columns.mkString(",")}")
+    writeWith(urls, urls.columns.head, epoch)(_.count())
+  }
+
+  /** Run `sink` over `rows` and write their `urlCol` values as the epoch's
+    * delta inside the sink's own job. The rows reach the sink repartitioned
+    * by `(numBuckets, url)` — the planner drops that exchange when `rows` is
+    * already so partitioned — and each sink task writes its buckets' sorted
+    * shards once its input is exhausted. The sink must read every row (a
+    * parquet write or a count does); the covered-epoch watermark advances
+    * after it returns. A retried task rewrites the same shards.
+    */
+  def writeWith[T](rows: DataFrame, urlCol: String, epoch: Int)(sink: DataFrame => T): T = {
     val (d, nb) = (dir, numBuckets)
     val sconf = new SerializableHadoopConf(
-      urls.sparkSession.sparkContext.hadoopConfiguration)
+      rows.sparkSession.sparkContext.hadoopConfiguration)
     checkedWatermark(sconf.value) // refuse before writing into a foreign store
-    urls
-      .withColumn("__b", bucketCol(col(urls.columns.head)))
-      .repartition(nb, col("__b"))
-      .sortWithinPartitions("__b")
-      .foreachPartition { (it: Iterator[Row]) =>
-        val conf = sconf.value
-        var cur = -1
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-        def flush(): Unit = if (cur >= 0 && buf.nonEmpty) {
-          writeShard(s"$d/bucket=$cur/e$epoch.seen", buf, conf)
-          buf.clear()
+    val aligned = rows.repartition(nb, col(urlCol))
+    val urlIdx = aligned.schema.fieldIndex(urlCol)
+    val tapped = aligned.queryExecution.toRdd.mapPartitions { it =>
+      val buckets = new java.util.HashMap[Int, ArrayBuffer[Array[Byte]]]()
+      it.map { row =>
+        if (!row.isNullAt(urlIdx)) {
+          val u = row.getUTF8String(urlIdx)
+          buckets.computeIfAbsent(bucketOf(u, nb), _ => ArrayBuffer.empty[Array[Byte]])
+            .+= (u.getBytes)
         }
-        it.foreach { row =>
-          val b = row.getInt(1)
-          if (b != cur) { flush(); cur = b }
-          buf += row.getString(0).getBytes(UTF_8)
-        }
-        flush()
+        row
+      } ++ { // evaluated once the rows are exhausted
+        buckets.forEach((b, urls) => writeShard(s"$d/bucket=$b/e$epoch.seen", urls, sconf.value))
+        Iterator.empty
       }
+    }
+    val out = sink(SqlBridge.frame(rows.sparkSession, tapped, aligned.schema))
     markEpoch(sconf.value, epoch)
+    out
   }
 
   /** DRUM-style periodic merge: per bucket, fold every delta shard with
@@ -267,6 +283,12 @@ object SeenUrlStore {
     */
   private val Magic = 0x5345454e // "SEEN"
 
+  /** [[SeenUrlStore.bucketCol]] of one url: Spark's `hash` (Murmur3, seed
+    * 42) of its UTF-8 bytes, `pmod` the bucket count.
+    */
+  private def bucketOf(url: UTF8String, numBuckets: Int): Int =
+    Math.floorMod(Murmur3HashFunction.hash(url, StringType, 42L).toInt, numBuckets)
+
   private def compareBytes(a: Array[Byte], b: Array[Byte], bLen: Int): Int = {
     val n = math.min(a.length, bLen)
     var i = 0
@@ -285,7 +307,7 @@ object SeenUrlStore {
     new Path(fin.getParent, s".tmp-${fin.getName}-$attempt")
   }
 
-  private def writeShard(path: String, urls: scala.collection.mutable.ArrayBuffer[Array[Byte]],
+  private def writeShard(path: String, urls: ArrayBuffer[Array[Byte]],
       conf: Configuration): Unit = {
     val sorted = urls.toArray
     java.util.Arrays.sort(sorted, new java.util.Comparator[Array[Byte]] {

@@ -77,11 +77,11 @@ final class BucketedPages private (
   /** Whole-table scan (robots pass, verification) through the manifest. */
   def full: DataFrame = spark.read.schema(schema).parquet(files.map(_.path): _*)
 
-  /** Fixed schema read once from a single footer — avoids a schema-inference
-    * listing over every file on each scan.
+  /** Fixed schema read once from a single footer on the driver — no Spark
+    * job, and no schema-inference listing over every file on each scan.
     */
-  private lazy val schema =
-    spark.read.parquet(files.head.path).schema
+  private lazy val schema = SnapshotStore.parquetSchema(
+    new Path(files.head.path), spark.sparkContext.hadoopConfiguration)
 }
 
 object BucketedPages {

@@ -8,6 +8,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graftbridge.SqlBridge
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Self-built Iceberg-semantics layer (SURVEY.md §1.4): Parquet data files +
   * JSON snapshot manifests. No Iceberg runtime jar exists in this sandbox,
@@ -63,6 +66,19 @@ object SnapshotStore {
   def parquetRowCount(fp: Path, hconf: org.apache.hadoop.conf.Configuration): Long = {
     val r = ParquetFileReader.open(HadoopInputFile.fromPath(fp, hconf))
     try r.getRecordCount finally r.close()
+  }
+
+  /** A parquet file's schema as `spark.read` reports it, from the footer —
+    * driver-side, no Spark job. Spark writers keep the exact schema in the
+    * footer metadata; other files go through Spark's parquet type converter.
+    */
+  def parquetSchema(fp: Path, hconf: org.apache.hadoop.conf.Configuration): StructType = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(fp, hconf))
+    val meta = try r.getFooter.getFileMetaData finally r.close()
+    SqlBridge.asNullable(
+      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(hconf).convert(meta.getSchema)))
   }
 }
 

@@ -65,7 +65,7 @@ class EpochJobsSpec extends AnyFunSuite {
   }
 
   test("job budget: a bucketed robots epoch with budget, suppressed store " +
-    "and an active sketch launches at most 12 jobs") {
+    "and an active sketch launches at most 7 jobs") {
     val pages = SiteGen.pages(spark, domain, nPages = 400, hosts = 4,
       outDegree = 8, numPartitions = 4,
       robotsBody = Some("User-agent: *\nDisallow: /p/1\nCrawl-delay: 11\n"))
@@ -85,11 +85,13 @@ class EpochJobsSpec extends AnyFunSuite {
     val ms = (0 until epochs).map(e => store.snapshotAt(e).get.metrics)
     assert(ms.forall(m => m("fetched") > 0 && m("sketch_capacity") > 0), ms)
     assert(ms.exists(_("deferred") > 0) && ms.exists(_("new_suppressed") > 0), ms)
-    // the run prologue on a fresh warehouse: the pages schema read, the
-    // robots cache, the crawl-delay budgets, the seed-host broadcast and
-    // rules collect, four bootstrap writes and the frontier count
-    val prologue = 10
-    val perEpoch = 12
+    // the run prologue on a fresh warehouse: the robots rules collect, four
+    // bootstrap writes and the frontier count. An epoch: the visited write
+    // (the seen-store delta rides it), the fetch keys broadcast, the links
+    // write, the candidates count, the sketch merge, the suppressed write
+    // (with its store delta) and the frontier write
+    val prologue = 6
+    val perEpoch = 7
     assert(jobs <= perEpoch * epochs + prologue,
       s"$jobs jobs for $epochs epochs (budget $perEpoch/epoch + $prologue)")
   }

@@ -168,6 +168,8 @@ class FrontierSpec extends AnyFunSuite {
 
   test("delay: robots crawl-delay tightens per-host budgets with no configured budget") {
     checkScenario("delay")
+    // the same budgets through the shuffled crawl-delay join
+    checkScenario("delay", _.copy(broadcastMaxRows = 0L))
     // non-degenerate: without the crawl-delay machinery the same site drains
     // in ONE content epoch (budget=None) — the 7-epoch golden proves the
     // delay column alone drives multi-epoch deferral
@@ -178,6 +180,7 @@ class FrontierSpec extends AnyFunSuite {
   test("delayfloor: crawl-delay nan (no cap), inf (cap 1), and a delay where " +
     "Python floordiv differs from floor(window/d) by one") {
     checkScenario("delayfloor")
+    checkScenario("delayfloor", _.copy(broadcastMaxRows = 0L))
     // non-degenerate: the scenario spans multiple epochs only because the
     // delay caps bite (no configured budget)
     assert(resLines("/sites/delayfloor/frontier_epochs.txt")

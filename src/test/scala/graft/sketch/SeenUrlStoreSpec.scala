@@ -45,6 +45,51 @@ class SeenUrlStoreSpec extends AnyFunSuite {
     assert(store.filterUnseen(probe, "url", 1).columns.toSeq == Seq("url", "tag"))
   }
 
+  /** A store's shard files, by path under its directory. */
+  private def shardFiles(st: SeenUrlStore): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(st.dir)
+    Files.walk(root).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".seen"))
+      .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+  }
+
+  /** The urls of one shard file, in file order. */
+  private def shardUrls(bytes: Seq[Byte]): Seq[String] = {
+    val in = java.nio.ByteBuffer.wrap(bytes.toArray)
+    in.getInt() // magic
+    val n = in.getInt()
+    val offsets = Seq.fill(n + 1)(in.getLong())
+    val data = in.position()
+    offsets.sliding(2).toSeq.filter(_.size == 2).map { case Seq(a, b) =>
+      new String(bytes.toArray, data + a.toInt, (b - a).toInt, "UTF-8")
+    }
+  }
+
+  test("a write fused into a sink writes writeDelta's shard files, aligned " +
+    "or not, and the sink sees every row exactly once") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val list = (urls(0, 600) ++ Seq("https://x.example.com/😀/😀",
+      "https://x.example.com/a", "https://x.example.com/ab")).map(u => (u, u.length))
+    val rows = (list :+ list.head).toDF("url", "len") // one row twice
+    val reference = freshStore(buckets = 4)
+    reference.writeDelta(rows.select("url"), 5)
+    // each bucket's file holds the bucket's distinct urls in byte order
+    val expected = rows.select(col("url"), reference.bucketCol(col("url")))
+      .as[(String, Int)].collect().toSeq.distinct.groupBy(_._2).map { case (b, us) =>
+        s"bucket=$b/e5.seen" -> us.map(_._1).sorted(graft.plans.CrawlEngine.codePointOrdering)
+      }
+    assert(shardFiles(reference).map { case (f, b) => f -> shardUrls(b) } == expected)
+    val all = rows.as[(String, Int)].collect().toSeq.sorted
+    // aligned (the planner drops the write's exchange), misaligned, unshuffled
+    for (input <- Seq(rows.repartition(4, col("url")), rows.repartition(3, col("url")), rows)) {
+      val fused = freshStore(buckets = 4)
+      val seen = fused.writeWith(input, "url", 5)(_.as[(String, Int)].collect().toSeq)
+      assert(seen.sorted == all, "the sink saw other rows")
+      assert(shardFiles(fused) == shardFiles(reference))
+      assert(fused.validFor(conf, 5) && !fused.validFor(conf, 6))
+    }
+  }
+
   test("epoch-bounded visibility: later deltas are invisible (exact resume)") {
     val store = freshStore()
     store.writeDelta(urls(0, 100).toDF("url"), 0)
