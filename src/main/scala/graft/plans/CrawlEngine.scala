@@ -731,7 +731,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
             val soFar = store.readTable(snapshot, "suppressed").select("url")
             write(disallowed.join(soFar, Seq("url"), "left_anti").distinct())
           }
-        } else scala.concurrent.Future.successful(
+        } else Future.successful(
           snapshot.tables("suppressed").copy(deltaRows = 0L))
       lap("suppressed_write_launch")
 
@@ -753,30 +753,25 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         .select(col("url"), lit(newPriority).as("priority"))
       // no deferred union ⇒ base's urls are ALREADY distinct (cleanLinks is
       // distinct, the gates only filter) and priority is a constant, so the
-      // groupBy-min is an identity — skip its aggregate pair outright
-      val candidates = perEpoch.cache((if (!windowed) base
+      // groupBy-min is an identity — skip its aggregate pair outright.
+      // The BASELINE.json metric numerator (URLs scheduled + entering dedup)
+      // is observed on the frontier write, the candidates' only consumer
+      val candidatesObs = new Observation()
+      val candidates = (if (!windowed) base
         else base.union(defer.select("url", "priority"))
           .groupBy(col("url"))
           .agg(min(col("priority")).as("priority")))
-        .select(col("url"), host_key(col("url")).as("host"), col("priority")))
-      // BASELINE.json metric numerator (URLs scheduled + entering dedup).
-      // The count materializes the candidates cache, so the frontier write
-      // of a non-empty epoch scans the cache instead of recomputing, and the
-      // fixpoint epoch (0 candidates) skips the sketch broadcast and the
-      // store probe below. (An observe() on the candidates plan would not
-      // surface through the cache boundary — InMemoryRelation swallows the
-      // CollectMetrics node.)
+        .select(col("url"), host_key(col("url")).as("host"), col("priority"))
+        .observe(candidatesObs, count(lit(1)).as("n"))
       val visitedAll = visitedSoFar.select("url")
         .union(fetchNow.select("url"))
       val seenCountNow = visitedRows + frontierCount // upper bound estimate
       // the sketch merge's whole decision tree depends only on pre-epoch
-      // state (seen estimate, the sketch itself) — never on the candidate
-      // count — so it is launched BEFORE the count and runs on its own action
-      // thread, overlapped with the candidates compute+count, whatever the
-      // count turns out to be. The vars it mutates are read only
-      // after the Await. The sketch only prunes store probes, so an anti run
-      // builds none.
-      val sketchMergeF: Future[Unit] = if (!useSeenStore) Future.successful(()) else perEpoch.launch {
+      // state (seen estimate, the sketch itself); its job runs here while
+      // the visited, links and suppressed writes run on their action
+      // threads. The sketch only prunes store probes, so an anti run builds
+      // none.
+      if (useSeenStore) {
         if (seenSketch != null && seenCountNow <= sketchCapacity)
           mergeIntoSketch(fetchNow) // maintain full coverage
         else if (seenSketch != null ||
@@ -793,14 +788,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           if (seenSketch != null) mergeIntoSketch(visitedAll)
         }
       }
-      val candidatesIn = candidates.count()
-      lap("candidates_count")
-      Await.result(sketchMergeF, scala.concurrent.duration.Duration.Inf)
       lap("sketch_merge_wait")
-      // released with the epoch: only the frontier write below reads it
-      val sketchBcast =
-        if (candidatesIn > 0 && seenSketch != null) perEpoch.broadcast[UrlSketch](seenSketch)
-        else null
       // next = candidates − seen(≤ e). No candidate is suppressed: robots
       // rules are parsed once per run, and a candidate is a link that passed
       // the same per-host longest-match gate (or a deferred row, which came
@@ -810,21 +798,20 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // The broadcast sketch prunes (a definite miss skips the store probe)
       // and the seen-store probe is authoritative (this epoch's delta covers
       // fetchNow, so probing up to `epoch` equals the visited∪fetchNow
-      // anti-join). `anti` is the plain left_anti reference. The fixpoint
-      // epoch (0 candidates) writes the empty delta without either.
+      // anti-join). `anti` is the plain left_anti reference.
       val next =
-        if (candidatesIn == 0) candidates
-        else if (useSeenStore) {
+        if (useSeenStore) {
           // this epoch's shard files must be on disk before the probe job
           // runs: the visited write writes them
           Await.result(vStateF, Duration.Inf)
           val url = col("url")
           val seen = seenStore.seen(url, epoch)
+          // released with the epoch: only the frontier write below reads it
+          val sketchBcast = Option(seenSketch).map(perEpoch.broadcast[UrlSketch](_))
           candidates.repartition(storeBuckets, url)
-            .filter(!Option(sketchBcast).fold(seen)(b => might_contain(b, url) && seen))
+            .filter(!sketchBcast.fold(seen)(b => might_contain(b, url) && seen))
         } else candidates.join(visitedAll, Seq("url"), "left_anti")
-      dumpPlan(s"e${epoch}_candidates", candidates)
-      if (candidatesIn > 0) dumpPlan(s"e${epoch}_frontier", next)
+      dumpPlan(s"e${epoch}_frontier", next)
       // over bucketed pages the write also collects the next frontier's
       // bucket set (a metric of the write's own tasks, no job of its own)
       val nextBuckets = new Observation()
@@ -833,13 +820,13 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           next.observe(nextBuckets, collect_set(bp.bucketExpr(col("url"))).as("b"))),
         Some(snapshot.tables("frontier")), fullRewrite = true)
       lap("frontier_write")
-      // with it the seen-index delta is durable before this epoch commits (the
-      // fixpoint epoch never probes, so the dedup chain may not have awaited)
+      // with it the seen-index delta is durable before this epoch commits (an
+      // anti run's dedup chain does not await it)
       val vState = Await.result(vStateF, Duration.Inf)
       lap("visited_wait")
-      val lStateRaw = Await.result(lStateF, scala.concurrent.duration.Duration.Inf)
+      val lStateRaw = Await.result(lStateF, Duration.Inf)
       lap("links_wait")
-      val sState = Await.result(sStateF, scala.concurrent.duration.Duration.Inf)
+      val sState = Await.result(sStateF, Duration.Inf)
       lap("suppressed_wait")
       // threshold-triggered links compaction (amortized: only when the delta
       // pile outgrows the last compacted size by linksCompactFactor)
@@ -879,7 +866,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           "deferred" -> (frontierCount - vState.deltaRows),
           "new_links" -> lState.deltaRows,
           "new_suppressed" -> sState.deltaRows,
-          "candidates_in" -> candidatesIn,
+          "candidates_in" -> candidatesObs.get("n").asInstanceOf[Long],
           "next_frontier" -> fState.deltaRows,
           "sketch_capacity" -> (if (seenSketch != null) sketchCapacity else 0L),
           "sketch_bytes" -> (if (seenSketch != null) seenSketch.bytes else 0L),

@@ -9,8 +9,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * `<outDir>/<query>_<tag>.txt` with the formatted physical plan of every
   * SparkEntry query. Constructing a crawl-native query executes its in-fn
   * engine run, so those dumps describe the RETURNED frame (the visited
-  * read); the per-epoch internal plans are additionally dumped by
-  * CrawlEngine when `graft.explain.dir` is set (done here per query).
+  * read); each epoch's dedup chain (candidates → seen filter → frontier
+  * write) is additionally dumped by CrawlEngine as `e<k>_frontier` when
+  * `graft.explain.dir` is set (done here per query).
   *
   *   sbt -batch "runMain graft.tools.PlanDump <sfDir> <outDir> <tag> [q1,q2]"
   */
@@ -36,7 +37,7 @@ object PlanDump {
       .foreach { case (name, fn) =>
         try {
           // crawl-native queries read this property and dump their per-epoch
-          // internal plans (candidates / frontier chains) alongside
+          // `e<k>_frontier` dedup chains alongside
           System.setProperty("graft.explain.dir", s"$outDir")
           System.setProperty("graft.explain.tag", s"${name}_$tag")
           val df = fn(spark, sfDir)

@@ -64,6 +64,28 @@ class BloomModeSpec extends AnyFunSuite {
     val withSketch = crawl(CrawlConfig(domain, numPartitions = 4,
       bloomMinSeen = 4, bloomExpectedTotal = 1024)) // only maybe-seen rows probe
     assert(withSketch == plain)
+    // the same site with its last page missing: that page's epoch extracts
+    // no links, so the crawl ends at a fixpoint epoch with no candidates.
+    // Per epoch (candidates_in, next_frontier, fetched) — candidates_in is
+    // observed on the frontier write — is equal on every path and exact;
+    // the visited trace is the full site's
+    val deadEnd = cyclicPages.filter($"url" =!= s"https://$domain/p/${n - 1}")
+    val expected = (2L, 1L, 1L) +: Seq.fill(n - 2)((3L, 1L, 1L)) :+ ((0L, 0L, 1L))
+    for (cfg <- Seq(
+        CrawlConfig(domain, numPartitions = 4, bloomMinSeen = Long.MaxValue, seenDedup = "anti"),
+        CrawlConfig(domain, numPartitions = 4, bloomMinSeen = Long.MaxValue),
+        CrawlConfig(domain, numPartitions = 4, bloomMinSeen = 4, bloomExpectedTotal = 1024))) {
+      val wh = Files.createTempDirectory("graft-bloommode-fix-").toString
+      val r = new CrawlEngine(spark, cfg).run(deadEnd, s"https://$domain/p/0", wh)
+      val store = new graft.snapshot.SnapshotStore(spark, wh)
+      val counts = (0 until r.epochs).map { e =>
+        val m = store.snapshotAt(e).get.metrics
+        (m("candidates_in"), m("next_frontier"), m("fetched"))
+      }
+      assert(counts == expected, cfg.seenDedup)
+      assert(r.trace.select("epoch", "url").as[(Int, String)].collect().toSeq == plain._1,
+        cfg.seenDedup)
+    }
   }
 
   test("periodic seen-shard compaction mid-crawl and across truncate-resume " +

@@ -65,7 +65,7 @@ class EpochJobsSpec extends AnyFunSuite {
   }
 
   test("job budget: a bucketed robots epoch with budget, suppressed store " +
-    "and an active sketch launches at most 7 jobs") {
+    "and an active sketch launches at most 6 jobs") {
     val pages = SiteGen.pages(spark, domain, nPages = 400, hosts = 4,
       outDegree = 8, numPartitions = 4,
       robotsBody = Some("User-agent: *\nDisallow: /p/1\nCrawl-delay: 11\n"))
@@ -88,10 +88,10 @@ class EpochJobsSpec extends AnyFunSuite {
     // the run prologue on a fresh warehouse: the robots rules collect, four
     // bootstrap writes and the frontier count. An epoch: the visited write
     // (the seen-store delta rides it), the fetch keys broadcast, the links
-    // write, the candidates count, the sketch merge, the suppressed write
-    // (with its store delta) and the frontier write
+    // write, the sketch merge, the suppressed write (with its store delta)
+    // and the frontier write (which observes the candidates count)
     val prologue = 6
-    val perEpoch = 7
+    val perEpoch = 6
     assert(jobs <= perEpoch * epochs + prologue,
       s"$jobs jobs for $epochs epochs (budget $perEpoch/epoch + $prologue)")
   }

@@ -160,25 +160,22 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
   }
 
-  /** The engine's dedup chain over persisted distinct candidates, run with
-    * AQE on or off: `repartition(nb, url)` + ONE filter carrying the sketch
-    * and seen-store predicates. Checks the chain is exact (seen urls are
-    * out) and returns the executed plan's shuffles (cached plans included)
-    * and its store filters.
+  /** The engine's dedup chain, run with AQE on or off: distinct candidates,
+    * unpersisted and observed (the engine's `candidates_in`), below
+    * `repartition(nb, url)` + ONE filter carrying the sketch and seen-store
+    * predicates. Checks the chain is exact (seen urls are out) and that the
+    * observed count is the distinct's row count, and returns the executed
+    * plan's shuffles and its store filters.
     */
   private def dedupChain(nb: Int, aqe: Boolean) = {
     import java.nio.file.Files
-    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.execution.FilterExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import graft.plans.planfns._
     import spark.implicits._
     object helper extends AdaptiveSparkPlanHelper
-    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = helper.collect(p) {
-      case e: ShuffleExchangeExec => Seq(e)
-      case c: InMemoryTableScanExec => shuffles(c.relation.cachedPlan)
-    }.flatten.distinct
     val seen = new graft.sketch.SeenUrlStore(
       Files.createTempDirectory("graft-plan-seen-").toString + "/s", nb)
     seen.writeDelta((0 until 50).map(i => s"https://example.com/d/$i").toDF("url"), 0)
@@ -188,23 +185,23 @@ class PlanSpec extends AnyFunSuite {
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
     try {
-      // persisted and counted first, like the engine's candidates
-      val cand = spark.read.parquet(s"$sfDir/documents.parquet")
+      val distinct = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(concat(lit("https://example.com/d/"), col("doc_id")).as("url"))
-        .distinct().persist()
-      cand.count()
+        .distinct()
+      val obs = new Observation()
       val url = col("url")
-      val next = cand.repartition(nb, url)
+      val next = distinct.observe(obs, count(lit(1)).as("n"))
+        .repartition(nb, url)
         .filter(!(might_contain(bcast, url) && seen.seen(url, 0)))
       val out = next.as[String].collect().toSet
       val plan = next.queryExecution.executedPlan
       val storeFilters = helper.collect(plan) {
         case f: FilterExec if f.condition.exists(_.prettyName == "seen") => f
       }
-      cand.unpersist()
       assert(out.nonEmpty &&
         !out.exists(u => u.stripPrefix("https://example.com/d/").toLong < 50), s"aqe=$aqe")
-      (shuffles(plan), storeFilters)
+      assert(obs.get("n") == distinct.count(), s"aqe=$aqe: observed count")
+      (helper.collect(plan) { case e: ShuffleExchangeExec => e }, storeFilters)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       bcast.destroy()
