@@ -8,14 +8,15 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.html.htmlfns._
 import graft.plans.planfns._
-import graft.sketch.{BloomSketch, CuckooSketch, SeenSketch, UrlSketch}
+import graft.robots.Robots
+import graft.sketch.{BloomSketch, CuckooSketch, SeenSketch, SeenUrlStore, UrlSketch}
 import graft.snapshot.{BucketedPages, SnapshotStore}
 import graft.snapshot.SnapshotStore.Snapshot
 import graft.url.urlfns._
@@ -238,6 +239,82 @@ object CrawlEngine {
       actions.clear(); caches.clear(); broadcasts.clear()
     }
   }
+
+  /** The named steps of an epoch over what it starts in `inFlight`. `step`
+    * records `ms_<name>`: the span since the previous step (or since the
+    * helper was built), so code between two steps counts toward the later
+    * one. `launch` starts an action thread and records `ms_<name>_launch`;
+    * `await` records `ms_<name>_wait`.
+    */
+  private final class Steps(inFlight: InFlight) {
+    private val start = System.nanoTime()
+    private var last = start
+    val ms = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    def step[T](name: String)(body: => T): T = {
+      val out = body
+      val now = System.nanoTime()
+      ms(s"ms_$name") = (now - last) / 1000000L
+      last = now
+      out
+    }
+    def launch[T](name: String)(body: => T): Future[T] =
+      step(s"${name}_launch")(inFlight.launch(body))
+    def await[T](name: String, f: Future[T]): T =
+      step(s"${name}_wait")(Await.result(f, Duration.Inf))
+    def wallMs: Long = (System.nanoTime() - start) / 1000000L
+  }
+
+  /** The run's seen sketch (O-7b). Once built it covers every url of the
+    * authoritative seen set (no false negatives, so skipping the store probe
+    * on a sketch miss is exact); once a build would exceed [[SketchMaxBytes]]
+    * there is none for the rest of the run (the exact store probe takes every
+    * candidate). One in-memory sketch, bloom or the cuckoo fallback, built by
+    * per-partition treeAggregate merges (north_star path), rebroadcast per epoch.
+    */
+  private final class SeenSketchHolder(cuckoo: Boolean, minSeen: Long, expectedTotal: Long) {
+    private var built: Option[(UrlSketch, Long)] = None // (sketch, capacity)
+    private var disabled = false
+
+    /** The first epoch whose seen estimate `seen` reaches `minSeen` builds
+      * the sketch from the FULL seen set `allSeen` (also the resume path);
+      * every later epoch folds in only the `fetched` delta. An outgrown
+      * sketch (a full bloom answers maybe for nearly everything, a full
+      * cuckoo saturates to always-maybe) is rebuilt from the full seen set.
+      */
+    def advance(seen: Long, fetched: DataFrame, allSeen: DataFrame): Unit = built match {
+      case Some((s, cap)) if seen <= cap => merge(s, fetched) // maintain full coverage
+      case Some((_, cap)) => build(seen, cap, allSeen)
+      case None if !disabled && seen >= minSeen => build(seen, 0L, allSeen)
+      case None =>
+    }
+
+    private def build(seen: Long, previous: Long, allSeen: DataFrame): Unit = {
+      built = sketchCapacity(seen, previous, expectedTotal, cuckoo).map { c =>
+        val s = if (cuckoo) new SeenSketch(c) else BloomSketch.forExpected(c, BloomFpp)
+        merge(s, allSeen)
+        (s, c)
+      }
+      disabled = built.isEmpty
+    }
+
+    private def merge(sketch: UrlSketch, urls: DataFrame): Unit = {
+      // few, larger leaf tasks: every treeAggregate leaf ships one
+      // full-size sketch, so bound the leaf count rather than the row count.
+      // A saturating cuckoo merge degrades the sketch to always-maybe (every
+      // row then takes the authoritative check) — never a false negative
+      val rdd0 = urls.select("url").as(Encoders.STRING).rdd
+      sketch.addAll(if (rdd0.getNumPartitions > 8) rdd0.coalesce(8) else rdd0)
+    }
+
+    /** `seen`, skipped on a definite sketch miss of `url`; the broadcast is
+      * released with `inFlight`.
+      */
+    def prune(url: Column, seen: Column, inFlight: InFlight): Column =
+      built.fold(seen)(b => might_contain(inFlight.broadcast[UrlSketch](b._1), url) && seen)
+
+    def metrics: Map[String, Long] =
+      Map("sketch_capacity" -> built.fold(0L)(_._2), "sketch_bytes" -> built.fold(0L)(_._1.bytes))
+  }
 }
 
 /** Distributed level-synchronous BFS crawl over a pages table — the Spark
@@ -256,6 +333,14 @@ object CrawlEngine {
   * the snapshot store; every epoch's outputs are written once and re-read
   * from disk, truncating lineage and making resume exact.
   *
+  * The robots policy, the seen sketch and the stores' starting point are
+  * decided once per run. An epoch then runs as named steps, each timed into
+  * its manifest as `ms_<step>`: visited_write_launch (politeness split),
+  * bucket_prune, links_write_launch (fetch join + extract), gate_build,
+  * suppressed_write_launch, sketch_merge_wait (candidates + sketch),
+  * frontier_write (seen filter), visited_wait, links_wait, suppressed_wait,
+  * and in the epochs that compact, links_compact and seen_compact.
+  *
   * `run()` sets `spark.sql.adaptive.enabled` false on the session and
   * restores the caller's value when it returns or throws. The engine sizes
   * its exchanges itself (store buckets = shuffle partitions, broadcast
@@ -267,6 +352,7 @@ object CrawlEngine {
   */
 final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
   import spark.implicits._
+  import CrawlEngine._
 
   private val P = config.numPartitions
 
@@ -306,9 +392,9 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
   /** Per-host budget gate: salted two-phase top-K so one hot host cannot
     * serialize the window shuffle. Phase 1 ranks within (host, salt) — the
     * global per-host top-K is a subset of the per-salt top-Ks — phase 2
-    * ranks the ≤ K·S survivors exactly. Returns (fetchNow, deferred, whether
-    * a window ran: without one nothing is deferred). `cache` persists the
-    * window frames.
+    * ranks the ≤ K·S survivors exactly. Returns fetchNow and the deferred
+    * rows, None when no window runs (nothing is then deferred). `cache`
+    * persists the window frames.
     *
     * `withDelayBudget` adds a `delay_budget` column — derived from robots
     * crawl-delay — that tightens the per-host cap to min(configured,
@@ -318,32 +404,27 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     */
   private def politenessSplit(frontier: DataFrame,
       withDelayBudget: Option[DataFrame => DataFrame], frontierCount: Long,
-      cache: DataFrame => DataFrame): (DataFrame, DataFrame, Boolean) = {
-    if (config.budget.isEmpty && withDelayBudget.isEmpty)
-      return (frontier, frontier.limit(0), false)
+      cache: DataFrame => DataFrame): (DataFrame, Option[DataFrame]) = {
+    if (config.budget.isEmpty && withDelayBudget.isEmpty) return (frontier, None)
     // priority-queue order (O-9): (priority asc, url asc). Trace-match
     // mode uses constant priority, which degenerates to the SURVEY §A.1
     // lexicographic contract.
-    val withB = withDelayBudget match {
-      case None =>
-        frontier.withColumn("__b", lit(config.budget.get.toLong))
-      case Some(addBudget) =>
-        val joined = addBudget(frontier)
+    val withB = withDelayBudget.fold(frontier.withColumn("__b", lit(config.budget.get.toLong))) {
+      addBudget =>
         val delayCap = coalesce(col("delay_budget"), lit(Long.MaxValue))
-        joined.withColumn("__b", config.budget
-          .map(cb => least(delayCap, lit(cb.toLong))).getOrElse(delayCap))
-          .drop("delay_budget")
+        addBudget(frontier).withColumn("__b", config.budget
+          .map(cb => least(delayCap, lit(cb.toLong))).getOrElse(delayCap)).drop("delay_budget")
     }
-    if (frontierCount <= CrawlEngine.SaltMinRows) {
+    if (frontierCount <= SaltMinRows) {
       // single-phase: one exact per-host ranking by (priority, url)
       val r = cache(withB.withColumn("r",
         row_number().over(Window.partitionBy("host").orderBy("priority", "url"))))
       val fetchNow = r.filter(col("r") <= col("__b")).select("url", "host", "priority")
       val defer = r.filter(col("r") > col("__b")).select("url", "host", "priority")
-      return (fetchNow, defer, true)
+      return (fetchNow, Some(defer))
     }
     val salted = withB.withColumn(
-      "salt", pmod(xxhash64(col("url")), lit(CrawlEngine.SaltBuckets)))
+      "salt", pmod(xxhash64(col("url")), lit(SaltBuckets)))
     val r1 = cache(salted.withColumn("r1",
       row_number().over(Window.partitionBy("host", "salt").orderBy("priority", "url"))))
     val survivors = r1.filter(col("r1") <= col("__b"))
@@ -352,7 +433,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     val fetchNow = r2.filter(col("r2") <= col("__b")).select("url", "host", "priority")
     val defer = r1.filter(col("r1") > col("__b")).select("url", "host", "priority")
       .union(r2.filter(col("r2") > col("__b")).select("url", "host", "priority"))
-    (fetchNow, defer, true)
+    (fetchNow, Some(defer))
   }
 
   /** Single-seed form (crawler.py:13 — seed = https://domain). */
@@ -390,8 +471,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     // what the run and its current epoch have started: when the run returns
     // or throws, no action thread it launched is still running and no cache
     // it made is still registered
-    val (perRun, perEpoch) =
-      (new CrawlEngine.InFlight(spark.sparkContext), new CrawlEngine.InFlight(spark.sparkContext))
+    val (perRun, perEpoch) = (new InFlight(spark.sparkContext), new InFlight(spark.sparkContext))
     try crawl(pagesPlain, bucketed, seedUrls, warehouse, perRun, perEpoch)
     finally {
       perEpoch.release()
@@ -400,33 +480,19 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     }
   }
 
-  private def crawl(pagesPlain: () => DataFrame, bucketed: Option[BucketedPages],
-      seedUrls: Seq[String], warehouse: String, perRun: CrawlEngine.InFlight,
-      perEpoch: CrawlEngine.InFlight): CrawlResult = {
-    lazy val pages: DataFrame = pagesPlain()
-    val store = new SnapshotStore(spark, warehouse)
-    require(config.seenDedup == "bucketlocal" || config.seenDedup == "anti",
-      s"unknown seenDedup '${config.seenDedup}' (bucketlocal|anti)")
-    val useSeenStore = config.seenDedup == "bucketlocal"
-    // one bucket per shuffle partition: the store probes' repartition then
-    // matches the candidates' own url exchange and the planner drops it
-    val storeBuckets = spark.sessionState.conf.numShufflePartitions
-    val seenStore = new graft.sketch.SeenUrlStore(s"$warehouse/seenstore", storeBuckets)
-    // the suppressed set rides a second store under the same contract, so
-    // disallowed − suppressed-so-far is a probe, not an O(cumulative-state)
-    // anti-join shuffle
-    val suppressedStore =
-      new graft.sketch.SeenUrlStore(s"$warehouse/suppressedstore", storeBuckets)
-    // no snapshot ⇒ any store left in the warehouse belongs to an older
-    // crawl (maybe under another bucket count); an anti run writes no store
-    // deltas, so stores it left in place would look valid to a later
-    // bucket-local resume on another timeline: both cases start them empty
-    val latest = store.latest()
-    if (latest.isEmpty || !useSeenStore) {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      seenStore.clear(hconf)
-      suppressedStore.clear(hconf)
-    }
+  /** How the run applies robots.txt, decided once: no rules, a rule table
+    * within `broadcastMaxRows` broadcast as a host map, or a larger one
+    * cached and joined shuffled on host. `source` holds the pages that may
+    * be robots.txt files; `manifestCount` is a bucket manifest's count of
+    * them, when the source has one. Returns the gate, which adds the boolean
+    * `allowed` column to (url, host) rows (None: every url is allowed and
+    * nothing is suppressed); the crawl-delay budget, which adds the per-host
+    * `delay_budget` (None: no crawl delays); and the seed hosts' rules, which
+    * only a bootstrap asks for.
+    */
+  private def robotsPolicy(source: DataFrame, manifestCount: Option[Int], seedUrls: Seq[String],
+      perRun: InFlight): (Option[DataFrame => DataFrame],
+      Option[DataFrame => DataFrame], () => Map[String, Seq[Robots.Rule]]) = {
     // url-only robots existence probe: parsing robots needs the html column,
     // and a predicate on url cannot row-group-prune an endsWith match — so a
     // corpus with NO robots.txt files would pay a full url+html scan just to
@@ -436,12 +502,8 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     // a bucket-manifest source narrows further: its robots-bucket stat was
     // computed at adoption with the SAME superset filter, so the probe job is
     // skipped entirely — the manifest already knows the answer
-    val robotsSource = bucketed.map(_.robotsCandidates).getOrElse(pages)
-    val robotsMayExist: Boolean = bucketed.flatMap(_.robotsBucketCount) match {
-      case Some(c) => c > 0 // manifest stat — no probe job at all
-      case None => robotsSource
-        .filter(col("url").endsWith("/robots.txt")).select("url").count() > 0
-    }
+    val mayExist = manifestCount.fold(
+      source.filter(col("url").endsWith("/robots.txt")).select("url").count() > 0)(_ > 0)
     // The robots table, parsed once per run. One job brings at most
     // broadcastMaxRows + 1 of its rows to the driver. A table within the cap
     // is broadcast once as a host map: the gate, the crawl-delay budgets and
@@ -449,20 +511,14 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     // A larger one is cached, and the gate and the budgets join it shuffled
     // on host. No robots rows (the common case) ⇒ the gate is a constant-true
     // filter and the whole suppression machinery is skipped.
-    val robotsAll = Option.when(robotsMayExist)(robotsTable(robotsSource))
-    val robotsRows = robotsAll.flatMap { rt =>
-      // through `.rdd` the limit is planned as one job (a collect() of a
-      // limit takes its rows in rounds of partitions, one job per round)
-      val n = math.max(0L, math.min(config.broadcastMaxRows, Int.MaxValue - 1L) + 1)
-      val rows = rt.limit(n.toInt).as[RobotsRules.Row].rdd.collect()
-      Option.when(rows.length <= config.broadcastMaxRows)(rows.toSeq)
-    }
-    val rules = robotsRows.filter(_.nonEmpty)
-      .map(RobotsRules(_, CrawlEngine.CrawlDelayWindowSec))
-    val rulesB = rules.map(perRun.broadcast(_))
-    val robots = if (robotsRows.isDefined) None else robotsAll.map(perRun.cache)
-    val hasRobots = rules.isDefined || robots.isDefined
-
+    lazy val table = robotsTable(source)
+    // through `.rdd` the limit is planned as one job (a collect() of a
+    // limit takes its rows in rounds of partitions, one job per round). At
+    // least one row, so that under a negative cap a table with rules is
+    // still told from an empty one: it takes the cached path
+    val n = math.max(1L, math.min(config.broadcastMaxRows, Int.MaxValue - 1L) + 1)
+    val rows = if (!mayExist) Array.empty[RobotsRules.Row]
+      else table.limit(n.toInt).as[RobotsRules.Row].rdd.collect()
     // robots crawl-delay → per-host politeness budget (SURVEY §1.2 schema):
     // delay d caps a host at max(1, int(window // d)) fetches per epoch with
     // CPython floordiv semantics (Robots.pyFloorDiv — floor(window/d) of the
@@ -470,166 +526,122 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
     // delays). NaN needs the explicit isnan guard: Spark SQL orders NaN
     // greater than every value, so `NaN > 0.0` is TRUE here while Python's
     // `nan > 0` is False (no cap); +inf passes both and caps at 1.
-    val withDelayBudget: Option[DataFrame => DataFrame] = rulesB match {
-      case Some(b) => Option.when(rules.get.hasDelays)(
-        _.withColumn("delay_budget", robots_delay_budget(b, col("host"))))
-      case None => robots.flatMap { rt =>
-        val db = perRun.cache(rt
-          .filter(col("crawl_delay") > 0.0 && !isnan(col("crawl_delay")))
-          .select(col("host"),
-            crawl_delay_budget(col("crawl_delay"), CrawlEngine.CrawlDelayWindowSec)
-              .as("delay_budget")))
+    if (rows.isEmpty) (None, None, () => Map.empty)
+    else if (rows.length <= config.broadcastMaxRows) {
+      val rules = RobotsRules(rows.toSeq, CrawlDelayWindowSec)
+      val b = perRun.broadcast(rules)
+      (Some(_.withColumn("allowed", robots_gate(b, col("host"), col("url")))),
+        Option.when(rules.hasDelays)(
+          _.withColumn("delay_budget", robots_delay_budget(b, col("host")))),
+        () => rules.rules)
+    } else {
+      // a web-scale rule table (10^8 hosts) is a shuffled equi-join on host
+      val rt = perRun.cache(table)
+      val db = perRun.cache(rt
+        .filter(col("crawl_delay") > 0.0 && !isnan(col("crawl_delay")))
+        .select(col("host"),
+          crawl_delay_budget(col("crawl_delay"), CrawlDelayWindowSec).as("delay_budget")))
+      (Some(_.join(rt.repartition(P, col("host")), Seq("host"), "left")
+          .withColumn("allowed",
+            coalesce(robots_allowed(col("url"), col("prefixes"), col("allows")), lit(true)))),
         Option.when(db.count() > 0)(
-          _.join(db.repartition(P, col("host")), Seq("host"), "left"))
-      }
+          _.join(db.repartition(P, col("host")), Seq("host"), "left")),
+        // seed gating needs rules only to bootstrap, and only for the SEED
+        // hosts: the table is semi-joined before collecting, so a 10^8-host
+        // robots table never reaches the driver
+        () => RobotsRules(rt.join(broadcast(seedUrls.map(Robots.hostKey).distinct.toDF("host")),
+          Seq("host"), "left_semi").as[RobotsRules.Row].collect().toSeq,
+          CrawlDelayWindowSec).rules)
     }
-    // Seed gating needs rules only to bootstrap, and only for the SEED hosts:
-    // a larger table is semi-joined before collecting, so a 10^8-host robots
-    // table never reaches the driver.
-    lazy val seedRules = rules.orElse(robots.map { rt =>
-      val seedHosts = seedUrls.map(graft.robots.Robots.hostKey).distinct.toDF("host")
-      RobotsRules(rt.join(broadcast(seedHosts), Seq("host"), "left_semi")
-        .as[RobotsRules.Row].collect().toSeq, CrawlEngine.CrawlDelayWindowSec)
-    }).fold(Map.empty[String, Seq[graft.robots.Robots.Rule]])(_.rules)
+  }
 
-    var snapshot: Snapshot = null
-    var frontier: DataFrame = null
-    var epoch = 0
+  /** The epoch "-1" bootstrap snapshot: the epoch-0 frontier is the sorted
+    * distinct allowed seeds, the robots-blocked seeds are suppressed, and the
+    * other tables start empty. The four tiny writes are independent — run
+    * them concurrently so the bootstrap pays one job latency, not four
+    * (guide §2.6).
+    */
+  private def bootstrap(store: SnapshotStore, seedUrls: Seq[String],
+      seedRules: Map[String, Seq[Robots.Rule]], suppressedStore: Option[SeenUrlStore],
+      perRun: InFlight): Snapshot = {
+    val (allowedSeeds, blockedSeeds) = seedUrls.distinct
+      .sorted(codePointOrdering)
+      .partition(u => Robots.allowed(u, seedRules.getOrElse(Robots.hostKey(u), Nil)))
+    val writes = Seq(
+      "frontier" -> perRun.launch(store.writeDelta("frontier", 0,
+        allowedSeeds.map(u => (u, Robots.hostKey(u), 0L)).toDF("url", "host", "priority"),
+        None, fullRewrite = true)),
+      "visited" -> perRun.launch(store.writeDelta("visited", -1,
+        Seq.empty[(Int, String)].toDF("epoch", "url"), None)),
+      "links" -> perRun.launch(
+        store.writeDelta("links", -1, Seq.empty[String].toDF("url"), None)),
+      "suppressed" -> perRun.launch {
+        def write(df: DataFrame) = store.writeDelta("suppressed", -1, df, None)
+        val rows = blockedSeeds.toDF("url")
+        suppressedStore.fold(write(rows))(_.writeWith(rows, "url", -1)(write))
+      })
+    store.commit(-1, writes.map { case (t, f) => t -> Await.result(f, Duration.Inf) }.toMap,
+      Map("seed" -> 1L))
+  }
 
-    latest match {
-      case Some(s) =>
-        snapshot = s
-        epoch = s.epoch + 1
-        frontier = store.readTable(s, "frontier")
-        if (useSeenStore) {
-          val hconf = spark.sparkContext.hadoopConfiguration
-          // resume gate: the store is only trusted when its metadata proves
-          // it — bucket count matches AND its covered-epoch watermark reaches
-          // the resumed snapshot (mere shard-file existence cannot
-          // distinguish a valid index from one left by a different bucket
-          // count or by epochs that ran with seenDedup=anti). Anything else
-          // is cleared and rebuilt from the authoritative parquet, tagged
-          // with the resume epoch so every later probe (upToEpoch ≥ s.epoch)
-          // sees all of it.
-          def syncStore(st: graft.sketch.SeenUrlStore, table: String): Unit = {
-            if (!st.validFor(hconf, s.epoch)) {
-              st.clear(hconf)
-              if (s.tables(table).totalRows > 0)
-                st.writeDelta(store.readTable(s, table).select("url"), s.epoch)
-            }
-            // shard files of LATER, now-truncated epochs belong to no
-            // committed snapshot: a stale base hides the re-run's deltas, a
-            // stale delta marks urls this timeline never fetched as seen
-            st.dropAbove(hconf, s.epoch)
-          }
-          syncStore(seenStore, "visited")
-          syncStore(suppressedStore, "suppressed")
-        }
-      case None =>
-        val (allowedSeeds, blockedSeeds) = seedUrls.distinct
-          .sorted(CrawlEngine.codePointOrdering)
-          .partition(u => graft.robots.Robots.allowed(u,
-            seedRules.getOrElse(graft.robots.Robots.hostKey(u), Nil)))
-        val seedDf = allowedSeeds
-          .map(u => (u, graft.robots.Robots.hostKey(u), 0L))
-          .toDF("url", "host", "priority")
-        val suppressedSeed = blockedSeeds.toDF("url")
-        // epoch "-1" bootstrap snapshot: seed frontier, empty state. The
-        // four tiny writes are independent — run them concurrently so the
-        // bootstrap pays one job latency, not four (guide §2.6)
-        val fStateF = perRun.launch(
-          store.writeDelta("frontier", 0, seedDf, None, fullRewrite = true))
-        val vStateF = perRun.launch(store.writeDelta("visited", -1,
-          Seq.empty[(Int, String)].toDF("epoch", "url"), None))
-        val lStateF = perRun.launch(
-          store.writeDelta("links", -1, Seq.empty[String].toDF("url"), None))
-        val sStateF = perRun.launch {
-          def write(df: DataFrame) = store.writeDelta("suppressed", -1, df, None)
-          if (useSeenStore) suppressedStore.writeWith(suppressedSeed, "url", -1)(write)
-          else write(suppressedSeed)
-        }
-        snapshot = store.commit(-1, Map(
-          "frontier" -> Await.result(fStateF, Duration.Inf),
-          "visited" -> Await.result(vStateF, Duration.Inf),
-          "links" -> Await.result(lStateF, Duration.Inf),
-          "suppressed" -> Await.result(sStateF, Duration.Inf)), Map("seed" -> 1L))
-        frontier = store.readTable(snapshot, "frontier")
-        epoch = 0
-    }
+  private def crawl(pagesPlain: () => DataFrame, bucketed: Option[BucketedPages],
+      seedUrls: Seq[String], warehouse: String, perRun: InFlight,
+      perEpoch: InFlight): CrawlResult = {
+    lazy val pages: DataFrame = pagesPlain()
+    val store = new SnapshotStore(spark, warehouse)
+    require(config.seenDedup == "bucketlocal" || config.seenDedup == "anti",
+      s"unknown seenDedup '${config.seenDedup}' (bucketlocal|anti)")
+    require(config.sketchKind == "bloom" || config.sketchKind == "cuckoo",
+      s"unknown sketchKind '${config.sketchKind}' (bloom|cuckoo)")
+    val useSeenStore = config.seenDedup == "bucketlocal"
+    // one bucket per shuffle partition: the store probes' repartition then
+    // matches the candidates' own url exchange and the planner drops it
+    val storeBuckets = spark.sessionState.conf.numShufflePartitions
+    val seenStore = new SeenUrlStore(s"$warehouse/seenstore", storeBuckets)
+    // the suppressed set rides a second store under the same contract, so
+    // disallowed − suppressed-so-far is a probe, not an O(cumulative-state)
+    // anti-join shuffle
+    val suppressedStore = new SeenUrlStore(s"$warehouse/suppressedstore", storeBuckets)
+    val latest = store.latest()
+    // an anti run writes no store deltas, so it starts both stores empty
+    val resumeEpoch = latest.filter(_ => useSeenStore).map(_.epoch)
+    for ((st, table) <- Seq(seenStore -> "visited", suppressedStore -> "suppressed"))
+      st.prepare(spark.sparkContext.hadoopConfiguration, resumeEpoch)(latest
+        .filter(_.tables(table).totalRows > 0).map(store.readTable(_, table).select("url")))
+    val (robotsGate, delayBudget, seedRules) =
+      robotsPolicy(bucketed.fold(pages)(_.robotsCandidates),
+        bucketed.flatMap(_.robotsBucketCount), seedUrls, perRun)
 
+    var snapshot = latest.getOrElse(bootstrap(store, seedUrls, seedRules(),
+      Option.when(useSeenStore)(suppressedStore), perRun))
+    var frontier = store.readTable(snapshot, "frontier")
+    var epoch = snapshot.epoch + 1
+    // exact with no job: the frontier is rewritten whole each epoch, and
+    // its write sums the row counts of the parquet footers
+    var frontierCount = snapshot.tables("frontier").totalRows
     // the page buckets of this epoch's frontier, a superset of its fetch's
-    // (the politeness gate only removes rows): at run start one
-    // groupBy(bucket) job gives the count (the sum) and the buckets (the
-    // keys); later epochs observe them on the frontier write
-    var (frontierCount, fetchBuckets) = bucketed match {
-      case None => (frontier.count(), Set.empty[Int])
-      case Some(bp) =>
-        val perBucket = frontier.groupBy(bp.bucketExpr(col("url"))).count()
-          .as[(Int, Long)].collect()
-        (perBucket.map(_._2).sum, perBucket.map(_._1).toSet)
-    }
+    // (the politeness gate only removes rows): one job at run start, later
+    // epochs observe them on the frontier write
+    var fetchBuckets = bucketed.fold(Set.empty[Int])(bp =>
+      frontier.select(bp.bucketExpr(col("url"))).distinct().as[Int].collect().toSet)
 
     // links-compaction base: the row count the table last held in compacted
     // (or first-delta) form; persisted in the manifest metrics so resume
     // keeps the amortization schedule
     var linksBaseRows = snapshot.metrics.getOrElse("links_base_rows", 0L)
-
-    // Incrementally-maintained seen sketch (O-7b). Activation is LAZY: the
-    // first epoch where the seen estimate crosses bloomMinSeen, the sketch is
-    // built from the FULL visited-so-far ∪ this epoch's fetch (also the
-    // resume path); every later epoch folds in only the fetch delta.
-    // Invariant: whenever the probe is active, the sketch covers every URL in
-    // the authoritative seen set — no false negatives, so skipping the store
-    // probe on a sketch miss is exact. One in-memory sketch (bloom, or the
-    // cuckoo fallback): built by per-partition treeAggregate merges
-    // (north_star path), sized by CrawlEngine.sketchCapacity, rebroadcast and
-    // destroyed per epoch.
-    require(config.sketchKind == "bloom" || config.sketchKind == "cuckoo",
-      s"unknown sketchKind '${config.sketchKind}' (bloom|cuckoo)")
-    val useCuckoo = config.sketchKind == "cuckoo"
-    var seenSketch: UrlSketch = null // null ⇔ inactive
-    // capacity of seenSketch: 0 before the first build, -1 once a build would
-    // exceed the broadcast cap (no sketch for the rest of the run)
-    var sketchCapacity = 0L
-    def mergeIntoSketch(urls: DataFrame): Unit = {
-      // few, larger leaf tasks: every treeAggregate leaf ships one
-      // full-size sketch, so bound the leaf count rather than the row count.
-      // A saturating cuckoo merge degrades the sketch to always-maybe (every
-      // row then takes the authoritative check) — never a false negative
-      val rdd0 = urls.select("url").as[String].rdd
-      seenSketch.addAll(if (rdd0.getNumPartitions > 8) rdd0.coalesce(8) else rdd0)
-    }
-
-    // plan-evidence hook (optimization rounds): when `graft.explain.dir` is
-    // set (PlanDump), dump the formatted physical plan of the per-epoch
-    // internal frames — zero cost when unset
-    val explainDir = Option(System.getProperty("graft.explain.dir"))
-    def dumpPlan(name: String, df: DataFrame): Unit = explainDir.foreach { d =>
-      val tag = Option(System.getProperty("graft.explain.tag")).getOrElse("crawl")
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(d, s"${tag}_$name.txt"),
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      catch { case _: Exception => () }
-    }
+    val sketch = new SeenSketchHolder(config.sketchKind == "cuckoo",
+      config.bloomMinSeen, config.bloomExpectedTotal)
 
     while (frontierCount > 0 && epoch < config.maxEpochs) {
-      val t0 = System.nanoTime()
-      var tLast = t0
-      val stepMs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      def lap(name: String): Unit = {
-        val now = System.nanoTime()
-        stepMs(s"ms_$name") = (now - tLast) / 1000000L
-        tLast = now
-      }
+      val steps = new Steps(perEpoch)
       val visitedSoFar = store.readTable(snapshot, "visited")
       val visitedRows = snapshot.tables("visited").totalRows
 
       // 1. politeness gate. The frontier parquet was hash-distributed at
       // write time; no re-shuffle here — the budget window (when enabled)
       // shuffles by (host, salt) itself.
-      val (fetchNow, defer, windowed) = politenessSplit(frontier,
-        withDelayBudget, frontierCount, perEpoch.cache)
+      val (fetchNow, deferred) = politenessSplit(frontier,
+        delayBudget, frontierCount, perEpoch.cache)
 
       // 2. visited delta = fetched this epoch. fetchNow reads straight from
       // the frontier manifest files (1-hop lineage), so the write runs
@@ -638,13 +650,12 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // is new) from the parquet write's own tasks, with no job of its own;
       // its sorted shard files must exist before this epoch's dedup probe,
       // which awaits this write.
-      val vStateF = perEpoch.launch {
+      val vStateF = steps.launch("visited_write") {
         val rows = fetchNow.select(lit(epoch).as("epoch"), col("url"))
         def write(df: DataFrame) =
           store.writeDelta("visited", epoch, df, Some(snapshot.tables("visited")))
         if (useSeenStore) seenStore.writeWith(rows, "url", epoch)(write) else write(rows)
       }
-      lap("visited_write_launch")
 
       // 3. fetch join + extract + clean (crawler.py:30-42). INNER join is
       // semantics-preserving: visited-marking happened above (step 2) and a
@@ -656,8 +667,8 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // Bucket-manifest pruning (the 100-TB lever, no job of its own): a
       // BucketedPages scan reads ONLY the data files of `fetchBuckets` — an
       // epoch touching 1% of buckets reads 1% of the corpus, not all of it.
-      val pagesForEpoch = bucketed.fold(pages)(_.scanBuckets(fetchBuckets))
-      lap("bucket_prune")
+      val pagesForEpoch = steps.step("bucket_prune")(
+        bucketed.fold(pages)(_.scanBuckets(fetchBuckets)))
       val fetchKeys =
         if (frontierCount <= config.broadcastMaxRows)
           broadcast(fetchNow.select("url"))
@@ -685,27 +696,15 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // materialization safe), and lState is only needed at commit. At small
       // epochs this halves the per-epoch fixed job latency; at scale the two
       // jobs pipeline on free task slots.
-      val lStateF = perEpoch.launch {
-        store.writeDelta("links", epoch, cleanLinks, Some(snapshot.tables("links")))
-      }
-      lap("links_write_launch")
+      val lStateF = steps.launch("links_write")(
+        store.writeDelta("links", epoch, cleanLinks, Some(snapshot.tables("links"))))
 
       // 5. in-domain + robots gates
       val inDom = cleanLinks
         .filter(url_in_domain(col("url"), lit(config.domain)))
         .withColumn("host", host_key(col("url")))
-      // a rule table within the cap is an expression over the run's
-      // broadcast; a web-scale one (10^8 hosts) is a shuffled equi-join on host
-      val gated = (rulesB, robots) match {
-        case (Some(b), _) => perEpoch.cache(
-          inDom.withColumn("allowed", robots_gate(b, col("host"), col("url"))))
-        case (_, Some(rt)) => perEpoch.cache(inDom
-          .join(rt.repartition(P, col("host")), Seq("host"), "left")
-          .withColumn("allowed",
-            coalesce(robots_allowed(col("url"), col("prefixes"), col("allows")), lit(true))))
-        case _ => inDom.withColumn("allowed", lit(true))
-      }
-      lap("gate_build")
+      val gated = steps.step("gate_build")(robotsGate
+        .fold(inDom.withColumn("allowed", lit(true)))(gate => perEpoch.cache(gate(inDom))))
       // the suppressed write overlaps the candidates chain and the frontier
       // write below (the same action-thread pattern as visited/links: both
       // consumers share the persisted `gated` cache, and only the commit
@@ -719,8 +718,10 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // path: cleanLinks is distinct and the gates only filter, so urls are
       // unique by construction (the anti path keeps the reference left_anti
       // + distinct shape for the differential).
-      val sStateF =
-        if (hasRobots) perEpoch.launch {
+      val sStateF = steps.step("suppressed_write_launch")(
+        if (robotsGate.isEmpty)
+          Future.successful(snapshot.tables("suppressed").copy(deltaRows = 0L))
+        else perEpoch.launch {
           val disallowed = gated.filter(!col("allowed")).select("url")
           def write(df: DataFrame) =
             store.writeDelta("suppressed", epoch, df, Some(snapshot.tables("suppressed")))
@@ -731,9 +732,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
             val soFar = store.readTable(snapshot, "suppressed").select("url")
             write(disallowed.join(soFar, Seq("url"), "left_anti").distinct())
           }
-        } else Future.successful(
-          snapshot.tables("suppressed").copy(deltaRows = 0L))
-      lap("suppressed_write_launch")
+        })
 
       // 6. next frontier = (allowed ∪ deferred) − visited(≤e).
       // O-9 priority: discovery depth when depthPriority (deferred older URLs
@@ -757,38 +756,22 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // The BASELINE.json metric numerator (URLs scheduled + entering dedup)
       // is observed on the frontier write, the candidates' only consumer
       val candidatesObs = new Observation()
-      val candidates = (if (!windowed) base
-        else base.union(defer.select("url", "priority"))
+      val candidates = deferred.fold(base)(d => base.union(d.select("url", "priority"))
           .groupBy(col("url"))
           .agg(min(col("priority")).as("priority")))
         .select(col("url"), host_key(col("url")).as("host"), col("priority"))
         .observe(candidatesObs, count(lit(1)).as("n"))
       val visitedAll = visitedSoFar.select("url")
         .union(fetchNow.select("url"))
-      val seenCountNow = visitedRows + frontierCount // upper bound estimate
       // the sketch merge's whole decision tree depends only on pre-epoch
       // state (seen estimate, the sketch itself); its job runs here while
       // the visited, links and suppressed writes run on their action
       // threads. The sketch only prunes store probes, so an anti run builds
       // none.
-      if (useSeenStore) {
-        if (seenSketch != null && seenCountNow <= sketchCapacity)
-          mergeIntoSketch(fetchNow) // maintain full coverage
-        else if (seenSketch != null ||
-            (sketchCapacity == 0 && seenCountNow >= config.bloomMinSeen)) {
-          // first activation, or outgrown (a full bloom answers maybe for
-          // nearly everything, a full cuckoo saturates to always-maybe):
-          // build from the FULL seen set — or, past the broadcast cap, build
-          // none for good (the exact store probe takes every row)
-          val next = CrawlEngine.sketchCapacity(seenCountNow, sketchCapacity,
-            config.bloomExpectedTotal, useCuckoo)
-          sketchCapacity = next.getOrElse(-1L)
-          seenSketch = next.map(c => if (useCuckoo) new SeenSketch(c)
-            else BloomSketch.forExpected(c, CrawlEngine.BloomFpp)).orNull
-          if (seenSketch != null) mergeIntoSketch(visitedAll)
-        }
+      steps.step("sketch_merge_wait") {
+        val seenCountNow = visitedRows + frontierCount // upper bound estimate
+        if (useSeenStore) sketch.advance(seenCountNow, fetchNow, visitedAll)
       }
-      lap("sketch_merge_wait")
       // next = candidates − seen(≤ e). No candidate is suppressed: robots
       // rules are parsed once per run, and a candidate is a link that passed
       // the same per-host longest-match gate (or a deferred row, which came
@@ -799,55 +782,47 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
       // and the seen-store probe is authoritative (this epoch's delta covers
       // fetchNow, so probing up to `epoch` equals the visited∪fetchNow
       // anti-join). `anti` is the plain left_anti reference.
-      val next =
-        if (useSeenStore) {
-          // this epoch's shard files must be on disk before the probe job
-          // runs: the visited write writes them
-          Await.result(vStateF, Duration.Inf)
-          val url = col("url")
-          val seen = seenStore.seen(url, epoch)
-          // released with the epoch: only the frontier write below reads it
-          val sketchBcast = Option(seenSketch).map(perEpoch.broadcast[UrlSketch](_))
-          candidates.repartition(storeBuckets, url)
-            .filter(!sketchBcast.fold(seen)(b => might_contain(b, url) && seen))
-        } else candidates.join(visitedAll, Seq("url"), "left_anti")
-      dumpPlan(s"e${epoch}_frontier", next)
-      // over bucketed pages the write also collects the next frontier's
-      // bucket set (a metric of the write's own tasks, no job of its own)
+      // Over bucketed pages the write also collects the next frontier's
+      // bucket set (a metric of the write's own tasks, no job of its own).
       val nextBuckets = new Observation()
-      val fState = store.writeDelta("frontier", epoch + 1,
-        bucketed.fold(next)(bp =>
-          next.observe(nextBuckets, collect_set(bp.bucketExpr(col("url"))).as("b"))),
-        Some(snapshot.tables("frontier")), fullRewrite = true)
-      lap("frontier_write")
+      val fState = steps.step("frontier_write") {
+        val next =
+          if (useSeenStore) {
+            // this epoch's shard files must be on disk before the probe job
+            // runs: the visited write writes them
+            Await.result(vStateF, Duration.Inf)
+            val url = col("url")
+            candidates.repartition(storeBuckets, url)
+              .filter(!sketch.prune(url, seenStore.seen(url, epoch), perEpoch))
+          } else candidates.join(visitedAll, Seq("url"), "left_anti")
+        store.writeDelta("frontier", epoch + 1,
+          bucketed.fold(next)(bp =>
+            next.observe(nextBuckets, collect_set(bp.bucketExpr(col("url"))).as("b"))),
+          Some(snapshot.tables("frontier")), fullRewrite = true)
+      }
       // with it the seen-index delta is durable before this epoch commits (an
       // anti run's dedup chain does not await it)
-      val vState = Await.result(vStateF, Duration.Inf)
-      lap("visited_wait")
-      val lStateRaw = Await.result(lStateF, Duration.Inf)
-      lap("links_wait")
-      val sState = Await.result(sStateF, Duration.Inf)
-      lap("suppressed_wait")
+      val vState = steps.await("visited", vStateF)
+      val lStateRaw = steps.await("links", lStateF)
+      val sState = steps.await("suppressed", sStateF)
       // threshold-triggered links compaction (amortized: only when the delta
       // pile outgrows the last compacted size by linksCompactFactor)
       val doCompact = config.linksCompactFactor > 0 && linksBaseRows > 0 &&
         lStateRaw.totalRows >= config.linksCompactMinRows &&
         lStateRaw.totalRows >= (config.linksCompactFactor * linksBaseRows).toLong
       val lState =
-        if (doCompact) store.compactDistinct("links", epoch, lStateRaw)
+        if (doCompact) steps.step("links_compact")(store.compactDistinct("links", epoch, lStateRaw))
         else lStateRaw
-      if (doCompact) lap("links_compact")
       if (linksBaseRows == 0 || doCompact) linksBaseRows = lState.totalRows
       // periodic seen-shard merge (amortized; the per-epoch delta for this
       // epoch is already on disk via vStateF)
       val seenCompacted = useSeenStore && config.seenCompactEvery > 0 &&
         epoch > 0 && epoch % config.seenCompactEvery == 0
-      if (seenCompacted) {
+      if (seenCompacted) steps.step("seen_compact") {
         seenStore.compact(spark, epoch)
         // the suppressed index follows the same DRUM schedule (it is the
         // same store mechanism over the other cumulative url set)
         if (sState.totalRows > 0) suppressedStore.compact(spark, epoch)
-        lap("seen_compact")
       }
       // extraction accumulator is final here: both cleanLinks consumers
       // (links write + frontier chain) are awaited above, so every cached
@@ -856,7 +831,6 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
         SnapshotStore.PartitionMetric(pid, s.pages, s.bytesHtml, s.linksOut,
           s.parseErrors)
       }
-      val wallMs = (System.nanoTime() - t0) / 1000000L
       snapshot = store.commit(epoch, Map(
         "frontier" -> fState, "visited" -> vState,
         "links" -> lState, "suppressed" -> sState),
@@ -868,8 +842,6 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           "new_suppressed" -> sState.deltaRows,
           "candidates_in" -> candidatesObs.get("n").asInstanceOf[Long],
           "next_frontier" -> fState.deltaRows,
-          "sketch_capacity" -> (if (seenSketch != null) sketchCapacity else 0L),
-          "sketch_bytes" -> (if (seenSketch != null) seenSketch.bytes else 0L),
           "seen_bucketlocal" -> (if (useSeenStore) 1L else 0L),
           "links_base_rows" -> linksBaseRows,
           "links_compacted" -> (if (doCompact) 1L else 0L),
@@ -878,7 +850,7 @@ final class CrawlEngine(spark: SparkSession, config: CrawlConfig) {
           "bytes_html" -> pmetrics.map(_.bytesHtml).sum,
           "links_out" -> pmetrics.map(_.linksOut).sum,
           "parse_errors" -> pmetrics.map(_.parseErrors).sum,
-          "wall_ms" -> wallMs) ++ stepMs ++
+          "wall_ms" -> steps.wallMs) ++ sketch.metrics ++ steps.ms ++
           bucketed.fold(Map.empty[String, Long])(bp => Map(
             "pages_files_read" -> bp.filesFor(fetchBuckets).size.toLong,
             "pages_files_total" -> bp.totalFiles.toLong)),

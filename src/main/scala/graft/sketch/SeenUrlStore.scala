@@ -142,6 +142,25 @@ final class SeenUrlStore(val dir: String, val numBuckets: Int) extends Serializa
       throw new java.io.IOException(s"meta publish failed for $metaPath")
   }
 
+  /** Bring the store to a run's starting point, the one call a run makes
+    * per store. `resumeEpoch` None (a fresh warehouse, whose store belongs to
+    * an older crawl, or a run that writes no deltas, whose store would look
+    * valid to a later resume on another timeline): cleared. Some(e): kept
+    * when [[validFor]] e, else cleared and rebuilt from `rows` (None when
+    * empty) tagged e, so every later probe sees all of it; then truncated by
+    * [[dropAbove]] e.
+    */
+  def prepare(conf: Configuration, resumeEpoch: Option[Int])(
+      rows: => Option[DataFrame]): Unit = resumeEpoch match {
+    case None => clear(conf)
+    case Some(e) =>
+      if (!validFor(conf, e)) {
+        clear(conf)
+        rows.foreach(writeDelta(_, e))
+      }
+      dropAbove(conf, e)
+  }
+
   /** Delete the whole store (rebuild-from-parquet path: stale mis-bucketed
     * shards must not survive a rebuild under a different bucket count).
     */

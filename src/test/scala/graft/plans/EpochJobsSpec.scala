@@ -96,6 +96,61 @@ class EpochJobsSpec extends AnyFunSuite {
       s"$jobs jobs for $epochs epochs (budget $perEpoch/epoch + $prologue)")
   }
 
+  test("the run prologue over a plain robots-free source: five jobs on a " +
+    "fresh warehouse, one on resume") {
+    val pages = SiteGen.pages(spark, domain, nPages = 40, hosts = 2,
+      outDegree = 4, numPartitions = 4)
+    val cfg = CrawlConfig(domain, numPartitions = 4, maxEpochs = 0)
+    val wh = Files.createTempDirectory("graft-prologue-").toString
+    def run() = jobsDuring(new CrawlEngine(spark, cfg).run(pages, s"https://$domain", wh))
+    // fresh: the url-only robots probe and the four bootstrap writes; the
+    // frontier's size comes from the bootstrap write's manifest, not a count
+    val (fresh, freshJobs, _) = run()
+    assert(fresh.epochs == 0 && fresh.lastSnapshot.epoch == -1)
+    assert(freshJobs == 5, s"$freshJobs jobs in a fresh prologue")
+    // resume: the robots probe alone (the stores need no rebuild)
+    val (resumed, resumeJobs, _) = run()
+    assert(resumed.epochs == 0 && resumed.lastSnapshot.epoch == -1)
+    assert(resumeJobs == 1, s"$resumeJobs jobs in a resumed prologue")
+  }
+
+  test("a committed epoch's manifest carries exactly the pinned metric keys, " +
+    "on the bucket-local robots path and on the anti path") {
+    // graftbench's per-layer metrics read these keys by name: one that
+    // disappears must fail here, not read 0 there
+    val counts = Set("urls_in", "fetched", "deferred", "new_links", "new_suppressed",
+      "candidates_in", "next_frontier", "pages_hit", "bytes_html", "links_out",
+      "parse_errors", "wall_ms")
+    val state = Set("sketch_capacity", "sketch_bytes", "seen_bucketlocal",
+      "links_base_rows", "links_compacted", "seen_compacted")
+    val laps = Set("visited_write_launch", "bucket_prune", "links_write_launch",
+      "gate_build", "suppressed_write_launch", "sketch_merge_wait", "frontier_write",
+      "visited_wait", "links_wait", "suppressed_wait").map("ms_" + _)
+    val base = counts ++ state ++ laps
+    val pageFiles = Set("pages_files_read", "pages_files_total")
+    val pages = SiteGen.pages(spark, domain, nPages = 200, hosts = 4,
+      outDegree = 8, numPartitions = 4,
+      robotsBody = Some("User-agent: *\nDisallow: /p/1\n"))
+    // every epoch from 1 on compacts links and (on the store path) the
+    // seen shards, so their laps are pinned too
+    val cfg = CrawlConfig(domain, budget = Some(7), numPartitions = 4,
+      bloomMinSeen = 1, seenCompactEvery = 1, linksCompactFactor = 1.0,
+      linksCompactMinRows = 0L, maxEpochs = 2)
+    def keys(wh: String): Seq[Set[String]] = {
+      val store = new graft.snapshot.SnapshotStore(spark, wh)
+      (0 until 2).map(e => store.snapshotAt(e).get.metrics.keySet)
+    }
+    val bucketLocal = Files.createTempDirectory("graft-keys-bl-").toString
+    val bp = BucketedPages.adopt(spark, pages, s"$bucketLocal-pages", numBuckets = 8)
+    assert(new CrawlEngine(spark, cfg).run(bp, s"https://$domain", bucketLocal).epochs == 2)
+    assert(keys(bucketLocal) == Seq(base ++ pageFiles,
+      base ++ pageFiles + "ms_links_compact" + "ms_seen_compact"))
+    val anti = Files.createTempDirectory("graft-keys-anti-").toString
+    assert(new CrawlEngine(spark, cfg.copy(seenDedup = "anti"))
+      .run(pages, s"https://$domain", anti).epochs == 2)
+    assert(keys(anti) == Seq(base, base + "ms_links_compact"))
+  }
+
   // a run that throws also leaves no job running and no cache behind
   test("the caller's AQE setting is restored after a run, and after a run " +
     "that throws") {

@@ -107,4 +107,26 @@ class RobotsScaleSpec extends AnyFunSuite {
       .select("url").as[String].collect().toSeq
     assert(suppressed == Seq("https://h1.example.com/x1"))
   }
+
+  test("a negative broadcastMaxRows gates and suppresses through the cached table") {
+    val pages = Seq(
+      page("https://h1.example.com/robots.txt", "User-agent: *\nDisallow: /private/\n"),
+      page("https://example.com", """<a href="https://h1.example.com/private/x">p</a>
+        |<a href="https://h1.example.com/pub">a</a>""".stripMargin),
+      page("https://h1.example.com/pub", "<p>ok</p>"),
+      page("https://h1.example.com/private/x", "<p>never fetched</p>"))
+      .toDF("url", "warc_ts", "html", "text", "lang")
+    // a negative cap collects no rule rows to broadcast, which is not the
+    // same as a corpus without rules
+    for (cap <- Seq(-1L, 100000L)) {
+      val wh = Files.createTempDirectory("graft-robotsneg-").toString
+      val r = new CrawlEngine(spark, CrawlConfig("example.com", numPartitions = 4,
+        broadcastMaxRows = cap)).run(pages, "https://example.com", wh)
+      val visited = r.visited.select("url").as[String].collect().toSeq.sorted
+      assert(visited == Seq("https://example.com", "https://h1.example.com/pub"), s"cap $cap")
+      val suppressed = spark.read.parquet(s"$wh/suppressed/epoch=0")
+        .select("url").as[String].collect().toSeq
+      assert(suppressed == Seq("https://h1.example.com/private/x"), s"cap $cap")
+    }
+  }
 }

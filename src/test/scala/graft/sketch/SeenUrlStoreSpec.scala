@@ -264,6 +264,41 @@ class SeenUrlStoreSpec extends AnyFunSuite {
     assert(!store.validFor(conf, 0))
   }
 
+  test("prepare for a resume: a valid store is only truncated; a short " +
+    "watermark or another bucket count is cleared and rebuilt") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val universe = urls(0, 1000)
+    def stored(st: SeenUrlStore): Set[String] = universe.toSet --
+      st.filterUnseen(universe.toDF("url"), "url", 99).as[String].collect()
+    val rebuilt = urls(700, 100)
+    def rows = Some(rebuilt.toDF("url"))
+    // valid through the resume epoch: the later epoch's shards are dropped,
+    // and the rebuild rows are never read
+    val valid = freshStore(buckets = 4)
+    Seq(0, 1, 2).foreach(e => valid.writeDelta(urls(e * 200, 200).toDF("url"), e))
+    valid.prepare(conf, Some(1))(fail("a valid store was rebuilt"))
+    assert(stored(valid) == urls(0, 400).toSet)
+    assert(valid.validFor(conf, 1) && !valid.validFor(conf, 2))
+    // a watermark behind the resume epoch: rebuilt from the rows, tagged
+    // with the resume epoch
+    val behind = freshStore(buckets = 4)
+    behind.writeDelta(urls(0, 200).toDF("url"), 0)
+    behind.prepare(conf, Some(2))(rows)
+    assert(stored(behind) == rebuilt.toSet)
+    assert(behind.validFor(conf, 2) && !behind.validFor(conf, 3))
+    // written under another bucket count: rebuilt under this one
+    val other = freshStore(buckets = 4)
+    other.writeDelta(urls(0, 200).toDF("url"), 3)
+    val resized = new SeenUrlStore(other.dir, 8)
+    resized.prepare(conf, Some(3))(rows)
+    assert(stored(resized) == rebuilt.toSet)
+    assert(resized.meta(conf) == Some((8, 3)))
+    // no resume epoch (a fresh warehouse, or a run without store deltas):
+    // cleared
+    resized.prepare(conf, None)(rows)
+    assert(stored(resized).isEmpty && resized.meta(conf).isEmpty)
+  }
+
   test("empty store and bucket-less probes pass everything through") {
     val store = freshStore()
     assert(store.filterUnseen(urls(0, 50).toDF("url"), "url", 99).count() == 50)
