@@ -15,6 +15,7 @@ import graft.plans.planfns._
 import graft.synth.SiteGen
 import graft.textops.textfns._
 import graft.url.urlfns._
+import graft.util.InputParallelism.spread
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -95,18 +96,6 @@ object SparkEntry {
       Some(new java.sql.Timestamp(maxMicros / 1000L))
     else None
   } catch { case _: Exception => None }
-
-  /** Spread a narrow scan across the cluster before CPU-heavy per-row work:
-    * the sf tables are single small parquet files, so their scan is ONE
-    * split — one task computes every signature while the other cores idle
-    * (guide §2.5: input parallelism, fix right after the read). No-op when
-    * the input already carries ≥ defaultParallelism partitions (the
-    * real-scale shape); when it fires, rows move once before the heavy work.
-    */
-  private def spread(s: SparkSession, df: DataFrame): DataFrame =
-    if (df.rdd.getNumPartitions < s.sparkContext.defaultParallelism)
-      df.repartition(s.sparkContext.defaultParallelism)
-    else df
 
   /** Stage a parquet table for the streaming queries: its data file(s)
     * copied `copies` times into a fresh dir with strictly staggered mtimes —
@@ -389,11 +378,11 @@ object SparkEntry {
         fingerprint(col("text")).as("fp64"))
     },
     "q_minhash_dedup" -> { (s, d) =>
-      Dedup.minHashLsh(spread(s, s.read.parquet(t(d, "documents"))), "doc_id",
+      Dedup.minHashLsh(spread(s.read.parquet(t(d, "documents"))), "doc_id",
         "text", shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5)
     },
     "q_simhash_dedup" -> { (s, d) =>
-      Dedup.simHash(spread(s, s.read.parquet(t(d, "documents"))), "doc_id",
+      Dedup.simHash(spread(s.read.parquet(t(d, "documents"))), "doc_id",
         "text", maxHamming = 3)
     },
     "q_embed_neardup" -> { (s, d) =>

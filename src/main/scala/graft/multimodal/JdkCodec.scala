@@ -4,6 +4,7 @@ import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
 import javax.imageio.ImageIO
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 import javax.sound.sampled.{AudioFormat, AudioInputStream, AudioSystem, AudioFileFormat}
 
 /** Real JDK-only media codecs (no external libraries needed): PNG/BMP via
@@ -20,6 +21,11 @@ object JdkCodec {
 
   /** Encode via any ImageIO writer this JDK ships (verified in-sandbox:
     * png, jpeg, gif, tiff, bmp — all deterministic byte-for-byte).
+    *
+    * Both image paths hand ImageIO an in-memory image stream: given a raw
+    * stream while `ImageIO.getUseCache` is on (its default), ImageIO backs
+    * each call with a temp file under `java.io.tmpdir` — one per image and
+    * per video frame.
     */
   def encodeImage(fmt: String, w: Int, h: Int, rgb: (Int, Int) => Int): Array[Byte] = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
@@ -30,15 +36,18 @@ object JdkCodec {
       y += 1
     }
     val bos = new ByteArrayOutputStream()
-    require(ImageIO.write(img, fmt, bos), s"no ImageIO writer for format '$fmt'")
+    val out = new MemoryCacheImageOutputStream(bos)
+    try require(ImageIO.write(img, fmt, out), s"no ImageIO writer for format '$fmt'")
+    finally out.close() // flushes the cache into bos; bos stays open
     bos.toByteArray
   }
 
   def encodePng(w: Int, h: Int, rgb: (Int, Int) => Int): Array[Byte] =
     encodeImage("png", w, h, rgb)
 
+  /** ImageIO.read closes the stream it is given once a reader took it. */
   def decodeImage(bytes: Array[Byte]): BufferedImage =
-    ImageIO.read(new ByteArrayInputStream(bytes))
+    ImageIO.read(new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes)))
 
   /** Deterministic box-average resize to (tw × th), emitting Rec.601 luma in
     * [0,1] per target pixel, row-major.

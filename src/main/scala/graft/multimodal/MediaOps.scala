@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.InputParallelism.spread
+
 /** Multimodal-column plumbing (builder-prompt mandate): image/audio/video
   * travel as opaque `binary` columns with a typed metadata struct, processed
   * partition-parallel via mapPartitions over typed Datasets (the JVM analog
@@ -63,10 +65,11 @@ object MediaOps {
     */
   private val ImageCodecs = Vector("png", "jpeg", "gif", "bmp", "tiff")
 
-  /** Bump when `synthesize` output changes — stale parquet corpora cached by
-    * an older engine version must not be served for the new contract.
+  /** Bump when `synthesize` output or the cache's file layout changes —
+    * stale parquet corpora cached by an older engine version must not be
+    * served for the new contract (a v2 cache is one single-row-group file).
     */
-  private val CorpusVersion = "v2"
+  private val CorpusVersion = "v3"
 
   /** Synthesize a media table with REAL encoded bytes — deterministic PNG
     * images (pseudo-random RGB per pixel), 16-bit PCM WAV sine tones, and
@@ -124,6 +127,9 @@ object MediaOps {
     * so it is written once per `cacheKey` (atomic publish: write to a temp
     * dir, rename into place; a lost race discards the temp copy) and read
     * back from parquet thereafter — queries then time decode + featurize.
+    * The docs pass through the input-parallelism rule first, so the encode
+    * runs on every core and the cache is one file per task: its scan then
+    * gives every core a non-empty split with no shuffle.
     */
   def cachedCorpus(docs: DataFrame, idCol: String, payloadCol: String,
       cacheKey: String): Dataset[MediaRow] = {
@@ -137,7 +143,7 @@ object MediaOps {
       base.mkdirs()
       val tmp = new java.io.File(base,
         s".$safe.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-      synthesize(docs, idCol, payloadCol).write.mode("overwrite")
+      synthesize(spread(docs), idCol, payloadCol).write.mode("overwrite")
         .parquet(tmp.toString)
       if (!tmp.renameTo(dir)) deleteRecursively(tmp) // another writer won
     }
@@ -159,16 +165,10 @@ object MediaOps {
       maxFrames: Int = 8): Dataset[MediaFeatures] = {
     val spark = media.sparkSession
     import spark.implicits._
-    // decode is CPU-bound per row, but a small corpus arrives as one parquet
-    // split — a single task would decode the whole table on one core while
-    // the rest of the cluster idles (guide §2.5 "input skew: repartition
-    // immediately after the read"). Spread only when the scan is narrower
-    // than the cluster: at real scale the input already carries ≥ cores
-    // splits and this is a no-op; when it fires, each blob moves exactly once.
-    val par = spark.sparkContext.defaultParallelism
-    val src =
-      if (media.rdd.getNumPartitions < par) media.repartition(par) else media
-    src.mapPartitions { it =>
+    // decode is CPU-bound per row: a scan with fewer non-empty splits than
+    // cores (a small corpus, or any single-row-group file) would decode on
+    // fewer cores than the cluster has
+    spread(media).mapPartitions { it =>
       it.flatMap { row =>
         if (row.media == null) Iterator.empty
         else row.meta.codec match {

@@ -262,4 +262,70 @@ class OperatorSpec extends AnyFunSuite {
     val video = f1.filter(_.mediaType == "video")
     assert(video.forall(_.frames >= 1))
   }
+
+  private def rowGroups(file: String): Int = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+    try r.getRowGroups.size finally r.close()
+  }
+
+  test("input rule spreads a single-row-group file cut into many splits") {
+    import graft.multimodal.MediaOps
+    import graft.util.InputParallelism
+    val par = spark.sparkContext.defaultParallelism
+    val docs = (1L to 40L).map(i => (i, "t")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-spread-").toString
+    MediaOps.synthesize(docs, "doc_id", "text").coalesce(1).write.parquet(s"$dir/one")
+    MediaOps.synthesize(docs, "doc_id", "text").repartition(par).write.parquet(s"$dir/many")
+    val one = spark.read.parquet(s"$dir/one").as[MediaOps.MediaRow]
+    assert(one.inputFiles.length == 1 && rowGroups(one.inputFiles.head) == 1)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1024")
+    try {
+      // byte-range splits that all but one read empty: the partition count
+      // alone says the scan is already wide
+      assert(one.rdd.getNumPartitions >= par)
+      val perTask = MediaOps.extractFeatures(one, targetW = 8, targetH = 8, dim = 4)
+        .rdd.mapPartitions(it => Iterator.single(it.size)).collect()
+      assert(perTask.sum == 40 && perTask.count(_ > 0) > 1, perTask.toSeq)
+      // as many row groups as cores: the scan is left as it is
+      val many = spark.read.parquet(s"$dir/many")
+      assert(many.inputFiles.length == par)
+      assert(InputParallelism.spread(many) eq many)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("cached media corpus is written as at least one non-empty file per core") {
+    val par = spark.sparkContext.defaultParallelism
+    val rows = 60
+    val dir = java.nio.file.Files.createTempDirectory("graft-mediacache-").toString
+    (1L to rows.toLong).map(i => (i, "t")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$dir/documents")
+    val docs = spark.read.parquet(s"$dir/documents")
+    val cached = graft.multimodal.MediaOps.cachedCorpus(docs, "doc_id", "text",
+      s"operatorspec-files-${System.nanoTime()}")
+    val nonEmpty = cached.inputFiles.count(f => graft.snapshot.SnapshotStore.parquetRowCount(
+      new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration) > 0)
+    assert(nonEmpty >= math.min(par, rows), cached.inputFiles.toSeq)
+    assert(cached.count() == rows)
+  }
+
+  test("encodeImage writes the bytes of ImageIO's OutputStream path") {
+    import java.awt.image.BufferedImage
+    import graft.multimodal.JdkCodec
+    val (w, h) = (40, 24)
+    val rgb = (x: Int, y: Int) => (x * 7919 + y * 104729) & 0xffffff
+    Seq("png", "jpeg", "gif", "bmp", "tiff").foreach { fmt =>
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+      for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgb(x, y))
+      val bos = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(img, fmt, bos), fmt)
+      assert(java.util.Arrays.equals(JdkCodec.encodeImage(fmt, w, h, rgb), bos.toByteArray), fmt)
+    }
+  }
 }
