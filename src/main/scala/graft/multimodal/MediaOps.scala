@@ -129,7 +129,9 @@ object MediaOps {
     * back from parquet thereafter — queries then time decode + featurize.
     * The docs pass through the input-parallelism rule first, so the encode
     * runs on every core and the cache is one file per task: its scan then
-    * gives every core a non-empty split with no shuffle.
+    * gives every core a non-empty split with no shuffle. (One file with one
+    * row group would be cut into several splits, all but one of them empty,
+    * which the rule's partition test reads as already wide.)
     */
   def cachedCorpus(docs: DataFrame, idCol: String, payloadCol: String,
       cacheKey: String): Dataset[MediaRow] = {
@@ -165,9 +167,8 @@ object MediaOps {
       maxFrames: Int = 8): Dataset[MediaFeatures] = {
     val spark = media.sparkSession
     import spark.implicits._
-    // decode is CPU-bound per row: a scan with fewer non-empty splits than
-    // cores (a small corpus, or any single-row-group file) would decode on
-    // fewer cores than the cluster has
+    // decode is CPU-bound per row: a scan narrower than the cluster (a small
+    // corpus in one file) would decode on fewer cores than the cluster has
     spread(media).mapPartitions { it =>
       it.flatMap { row =>
         if (row.media == null) Iterator.empty

@@ -1,57 +1,24 @@
 package graft.util
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** The input-parallelism rule of the CPU-heavy per-row corpus operators
   * (guide §2.5: fix input skew right after the read).
   *
-  * A scan's tasks can only be as many as its non-empty splits. Spark cuts a
-  * parquet file into byte-range splits, but a row group is read whole by the
-  * split that holds its midpoint, so a single-row-group file yields ONE
-  * non-empty split however many splits it is cut into: one task does every
-  * row while the other cores idle. The partition count alone cannot see
-  * that, so for a parquet scan the row groups are counted too.
+  * A scan's tasks can only be as many as its splits. A small table written
+  * as one parquet file is one split, so one task would do every row while
+  * the other cores idle. The rule reads only the partition count: a file cut
+  * into several byte-range splits whose row group sits in one of them passes
+  * as wide, which is why `MediaOps.cachedCorpus` writes one file per core.
   */
 object InputParallelism {
 
-  /** `ds` repartitioned to `defaultParallelism` when its scan has fewer
-    * partitions, or (a parquet file scan) fewer row groups, than that; `ds`
-    * itself otherwise. At real scale every scan already has at least as
-    * many row groups as cores and this returns `ds`; when it fires, rows
-    * move once before the heavy work.
+  /** `ds` repartitioned to `defaultParallelism` when it has fewer partitions
+    * than that; `ds` itself otherwise. When it fires, rows move once before
+    * the heavy work.
     */
   def spread[T](ds: Dataset[T]): Dataset[T] = {
     val par = ds.sparkSession.sparkContext.defaultParallelism
-    if (ds.rdd.getNumPartitions < par || (isParquetScan(ds) && rowGroups(ds, par) < par))
-      ds.repartition(par)
-    else ds
-  }
-
-  private def isParquetScan(ds: Dataset[_]): Boolean =
-    ds.queryExecution.analyzed.collectLeaves().forall {
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation => fs.fileFormat.isInstanceOf[ParquetFileFormat]
-        case _ => false
-      }
-      case _ => false
-    }
-
-  /** Row groups of the scanned files, from their footers on the driver (no
-    * Spark job); stops counting once `atMost` is reached.
-    */
-  private def rowGroups(ds: Dataset[_], atMost: Int): Int = {
-    val hconf = ds.sparkSession.sparkContext.hadoopConfiguration
-    val files = ds.inputFiles.iterator
-    var n = 0
-    while (n < atMost && files.hasNext) {
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(files.next()), hconf))
-      try n += r.getRowGroups.size finally r.close()
-    }
-    n
+    if (ds.rdd.getNumPartitions < par) ds.repartition(par) else ds
   }
 }

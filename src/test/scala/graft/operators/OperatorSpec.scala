@@ -263,56 +263,34 @@ class OperatorSpec extends AnyFunSuite {
     assert(video.forall(_.frames >= 1))
   }
 
-  private def rowGroups(file: String): Int = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
-    try r.getRowGroups.size finally r.close()
-  }
-
-  test("input rule spreads a single-row-group file cut into many splits") {
-    import graft.multimodal.MediaOps
-    import graft.util.InputParallelism
-    val par = spark.sparkContext.defaultParallelism
-    val docs = (1L to 40L).map(i => (i, "t")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-spread-").toString
-    MediaOps.synthesize(docs, "doc_id", "text").coalesce(1).write.parquet(s"$dir/one")
-    MediaOps.synthesize(docs, "doc_id", "text").repartition(par).write.parquet(s"$dir/many")
-    val one = spark.read.parquet(s"$dir/one").as[MediaOps.MediaRow]
-    assert(one.inputFiles.length == 1 && rowGroups(one.inputFiles.head) == 1)
-    val key = "spark.sql.files.maxPartitionBytes"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "1024")
-    try {
-      // byte-range splits that all but one read empty: the partition count
-      // alone says the scan is already wide
-      assert(one.rdd.getNumPartitions >= par)
-      val perTask = MediaOps.extractFeatures(one, targetW = 8, targetH = 8, dim = 4)
-        .rdd.mapPartitions(it => Iterator.single(it.size)).collect()
-      assert(perTask.sum == 40 && perTask.count(_ > 0) > 1, perTask.toSeq)
-      // as many row groups as cores: the scan is left as it is
-      val many = spark.read.parquet(s"$dir/many")
-      assert(many.inputFiles.length == par)
-      assert(InputParallelism.spread(many) eq many)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("cached media corpus is written as at least one non-empty file per core") {
+    import org.apache.commons.io.FileUtils
+    import graft.multimodal.MediaOps
     val par = spark.sparkContext.defaultParallelism
     val rows = 60
-    val dir = java.nio.file.Files.createTempDirectory("graft-mediacache-").toString
-    (1L to rows.toLong).map(i => (i, "t")).toDF("doc_id", "text")
-      .coalesce(1).write.parquet(s"$dir/documents")
-    val docs = spark.read.parquet(s"$dir/documents")
-    val cached = graft.multimodal.MediaOps.cachedCorpus(docs, "doc_id", "text",
-      s"operatorspec-files-${System.nanoTime()}")
-    val nonEmpty = cached.inputFiles.count(f => graft.snapshot.SnapshotStore.parquetRowCount(
-      new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration) > 0)
-    assert(nonEmpty >= math.min(par, rows), cached.inputFiles.toSeq)
-    assert(cached.count() == rows)
+    val dir = java.nio.file.Files.createTempDirectory("graft-mediacache-").toFile
+    var cacheDir: Option[java.io.File] = None
+    try {
+      // the docs scan is one split, as a small sf table is
+      (1L to rows.toLong).map(i => (i, "t")).toDF("doc_id", "text")
+        .coalesce(1).write.parquet(s"$dir/documents")
+      val docs = spark.read.parquet(s"$dir/documents")
+      val cached = MediaOps.cachedCorpus(docs, "doc_id", "text",
+        s"operatorspec-files-${System.nanoTime()}")
+      cacheDir = cached.inputFiles.headOption
+        .map(f => new java.io.File(new java.net.URI(f)).getParentFile)
+      val nonEmpty = cached.inputFiles.count(f => graft.snapshot.SnapshotStore.parquetRowCount(
+        new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration) > 0)
+      assert(nonEmpty >= math.min(par, rows), cached.inputFiles.toSeq)
+      assert(cached.count() == rows)
+      // and the decode over that cache runs on more than one core
+      val perTask = MediaOps.extractFeatures(cached, targetW = 8, targetH = 8, dim = 4)
+        .rdd.mapPartitions(it => Iterator.single(it.size)).collect()
+      assert(perTask.sum == rows && perTask.count(_ > 0) > 1, perTask.toSeq)
+    } finally {
+      cacheDir.foreach(FileUtils.deleteDirectory)
+      FileUtils.deleteDirectory(dir)
+    }
   }
 
   test("encodeImage writes the bytes of ImageIO's OutputStream path") {
